@@ -65,29 +65,46 @@ def test_sql_triples_match_python_extractor(spark, warehouse):
     assert spark_keys == py_keys
 
 
-def test_resume_from_checkpoint(spark, warehouse, tmp_path):
-    """Kill-and-rerun: with stage checkpoints present, a second run must
-    not recompute them and must return identical triples."""
-    cat = Catalog(spark, warehouse)
-    before = sorted(
-        (r.url, r.subj, r.pred, r.obj, r.sent_num)
-        for r in cat.read("triples").collect())
+def _table_rows(cat, name):
+    """Every column of every row, in a fixed order; array cells sorted,
+    since ``collect_list`` order (chains.mention_ids) is not fixed."""
+    return sorted((tuple(sorted(v) if isinstance(v, list) else v for v in r)
+                   for r in cat.read(name).collect()), key=repr)
 
-    # simulate a crash after stage 2: triples output lost, stages intact
-    shutil.rmtree(os.path.join(warehouse, "triples"))
-    stage_mtime = os.path.getmtime(os.path.join(warehouse, "stage_kernel", "_SUCCESS"))
+
+def _kill_and_replay(spark, warehouse, lost):
+    cat = Catalog(spark, warehouse)
+    before = {t: _table_rows(cat, t) for t in ("triples", "chains")}
+    assert before["triples"] and before["chains"]
+    success = lambda t: os.path.join(warehouse, t, "_SUCCESS")
+    kernel_mtime = os.path.getmtime(success("stage_kernel"))
+    chains_mtime = os.path.getmtime(success("chains"))
+    for table in lost:
+        shutil.rmtree(os.path.join(warehouse, table))
 
     # pages input deliberately wrong — if resume touched stage 1/2 it would
     # produce different rows; resume must read checkpoints instead
     bogus_pages = generate_pages(spark, 5, partitions=2)
     run_pipeline(spark, bogus_pages, warehouse, partitions=4)
 
-    after = sorted(
-        (r.url, r.subj, r.pred, r.obj, r.sent_num)
-        for r in cat.read("triples").collect())
-    assert after == before
-    assert os.path.getmtime(
-        os.path.join(warehouse, "stage_kernel", "_SUCCESS")) == stage_mtime
+    assert {t: _table_rows(cat, t) for t in ("triples", "chains")} == before
+    assert os.path.getmtime(success("stage_kernel")) == kernel_mtime
+    if "chains" not in lost:  # an existing chains table is reused
+        assert os.path.getmtime(success("chains")) == chains_mtime
+
+
+def test_resume_from_checkpoint(spark, warehouse):
+    """Kill-and-rerun after a crash between the chains and triples
+    writes: with stage checkpoints present, a second run must not
+    recompute them, must reuse chains and must return identical
+    triples."""
+    _kill_and_replay(spark, warehouse, lost=("triples",))
+
+
+def test_resume_after_losing_triples_and_chains(spark, warehouse):
+    """A crash right after the kernel checkpoint: the rerun rebuilds
+    exactly the clean run's chains and triples from the checkpoints."""
+    _kill_and_replay(spark, warehouse, lost=("triples", "chains"))
 
 
 def test_arrow_and_pandas_fused_stages_identical(spark):
@@ -183,3 +200,25 @@ def test_dedup_kernel_inputs_giant_doc(spark, tmp_path):
     rec = docs.select("n_sentences", "kernel_ms").distinct().collect()
     assert len(rec) == 1          # one kernel execution, both copies
     assert rec[0].n_sentences > 500  # the windowed path actually ran
+
+
+def test_triples_plan_joins_written_chains(spark, warehouse, monkeypatch):
+    """Canonicalization runs once per pass: the triples plan run_pipeline
+    writes reads the chains table instead of aggregating again."""
+    written = {}
+    orig_write = Catalog.write
+
+    def recording_write(self, df, name, *args, **kwargs):
+        written[name] = df._jdf.queryExecution().optimizedPlan().toString()
+        return orig_write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "write", recording_write)
+    for table in ("triples", "chains"):
+        shutil.rmtree(os.path.join(warehouse, table))
+    run_pipeline(spark, generate_pages(spark, 5, partitions=2), warehouse,
+                 partitions=4)
+
+    assert list(written) == ["chains", "triples"]
+    assert "min_by" in written["chains"] and "max_by" in written["chains"]
+    assert "min_by" not in written["triples"]
+    assert "max_by" not in written["triples"]

@@ -59,6 +59,34 @@ def test_stream_matches_batch(spark, tmp_path):
     assert len(batch_ids) >= 2
 
 
+def test_stream_replayed_batch_does_not_duplicate_triples(spark, tmp_path):
+    """foreachBatch is at-least-once: a batch whose commit is lost is
+    replayed under the same batch_id on restart.  The replay must replace
+    that batch's triples, not append a second copy."""
+    from xrenner_spark.streaming import stream_pipeline
+
+    source = str(tmp_path / "replay_stream")
+    out = str(tmp_path / "replay_out")
+    _drop_pages(spark, source, 0, 10)
+    stream_pipeline(spark, source, out).awaitTermination(300)
+    key = lambda r: (r.url, r.subj, r.pred, r.obj, r.sent_num, r.verb_id)
+    before = sorted(map(key, spark.read.parquet(out + "/triples").collect()))
+    assert before
+
+    # crash between the sink write and the commit of the last batch
+    commits = os.path.join(out, "_checkpoint", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), ".%d.crc" % last):
+        path = os.path.join(commits, name)
+        if os.path.exists(path):
+            os.remove(path)
+    stream_pipeline(spark, source, out).awaitTermination(300)
+
+    assert os.path.exists(os.path.join(commits, str(last)))  # replayed
+    after = sorted(map(key, spark.read.parquet(out + "/triples").collect()))
+    assert after == before
+
+
 def test_mention_rate_stream_plan(spark):
     """The watermarked aggregation compiles against the kernel schema
     (smoke: batch execution of the same expression tree)."""

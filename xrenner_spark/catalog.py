@@ -89,10 +89,13 @@ class Catalog:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema=None) -> DataFrame:
+        """``schema`` (parquet only): the table's known schema, which
+        spares the footer-reading job that schema inference starts."""
         if self.iceberg_catalog:
             return self.spark.read.table(self._ident(name))
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
 
     def append_lineage(self, stage: str, lineage_df: DataFrame):
         """Per-partition lineage/metrics rows recorded alongside each stage

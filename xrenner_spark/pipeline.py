@@ -5,25 +5,27 @@ Stage graph (SURVEY.md §3.4):
     pages (url, warc_ts, html, text, lang)
       │  salted repartition by xxhash64(url)            [defeats url skew]
       ▼
-    stage 1  extract: mapInPandas html→(text, conllu); byte-identity check
+    stage 1  extract: Spark SQL html→(text, conllu); byte-identity check
+      │  (Catalyst expressions only — no Python worker)
       │  checkpoint: table stage_extract + _lineage_extract
       ▼
     stage 2  kernel: mapInPandas per-document mention/entity/coref kernel
-      │  one row per doc: mentions array + verbs array + kernel_ms
+      │  long format: one row per doc, mention and verb + kernel_ms
       │  checkpoint: table stage_kernel + _lineage_kernel
       ▼
-    stage 3  SQL: explode → mentions/verbs; chains groupBy(url, group_id)
-             with canonicalization agg; verb-argument join → triples
+    stage 3  SQL: chains groupBy(url, group_id) with canonicalization agg
+      │  → chains table, written FIRST
       ▼
-    triples table (+ chains table)
+             verb-argument join against the written chains → triples table
 
 Every stage is resumable: if its checkpoint table exists (same run_dir),
 it is read back instead of recomputed, so a killed job restarted with the
 same warehouse continues where it left off and produces byte-identical
-triples (verified in tests/test_pipeline_spark.py).
+triples and chains (verified in tests/test_pipeline_spark.py).
 
-All per-row Python lives inside mapInPandas batch loops (Arrow in/out);
-the rule/gazetteer bundle is broadcast once per executor.
+Per-row Python runs only where it cannot be avoided — the kernel, inside
+mapInPandas batch loops (Arrow in/out); the rule/gazetteer bundle is
+broadcast once per executor.
 """
 
 from __future__ import annotations
@@ -183,33 +185,43 @@ def salt_by_url(df: DataFrame, partitions: int) -> DataFrame:
 # stage 1: html -> text/conllu extraction
 # ---------------------------------------------------------------------
 
-def extract_stage(pages: DataFrame) -> DataFrame:
-    def extract(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import extract_conllu, extract_text
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in iterator:
-            texts, conllus, shas, ok = [], [], [], []
-            for html, text in zip(pdf["html"], pdf["text"]):
-                try:
-                    extracted = extract_text(html)
-                    conllu = extract_conllu(html)
-                except Exception:
-                    extracted, conllu = "", ""
-                texts.append(extracted)
-                conllus.append(conllu)
-                shas.append(hashlib.sha256(extracted.encode("utf8")).hexdigest())
-                # the per-row invariant: extraction is byte-identical to the
-                # table's text column
-                ok.append(extracted == text)
-            out = pd.DataFrame({
-                "url": pdf["url"], "warc_ts": pdf["warc_ts"], "lang": pdf["lang"],
-                "text": texts, "conllu": conllus, "text_sha256": shas,
-                "byte_identical": ok, "part_id": part_id,
-            })
-            yield out
+def _between(s, open_marker: str, close_marker: str):
+    """SQL twin of ``s[s.index(open) + len(open):s.index(close)]`` (the
+    corpus.extract_* slice): NULL where Python raises (NULL ``s`` or a
+    missing marker), "" where the close marker comes first."""
+    start = F.locate(open_marker, s) + len(open_marker)   # 1-based; 0 = absent
+    end = F.locate(close_marker, s)
+    return F.when((start > len(open_marker)) & (end > 0), s.substr(start, end - start))
 
-    return pages.mapInPandas(extract, schema=EXTRACT_SCHEMA)
+
+def extract_stage(pages: DataFrame) -> DataFrame:
+    """Stage 1 as Catalyst expressions — no Python worker (each Python
+    task carries a fixed cost of ~0.2 s on a 4-core host; the extraction
+    itself is microseconds per page).
+
+    Same result as corpus.extract_text/extract_conllu under the rule
+    that any failure (NULL html, invalid UTF-8, a missing marker) gives
+    ("", ""): the html is decoded once by ``try_validate_utf8``, which
+    rejects exactly what a strict ``bytes.decode("utf8")`` rejects, and
+    ``locate``/``substring`` count code points as Python indexes do
+    (differential test: tests/test_extract_sql.py)."""
+    decoded = pages.select(
+        "url", "warc_ts", "lang", F.col("text").alias("page_text"),
+        F.try_validate_utf8(F.col("html").cast("string")).alias("page"))
+    text = _between(F.col("page"), "<article>", "</article>")
+    conllu = _between(F.col("page"), "<!--@conllu\n", "\n-->")
+    both = text.isNotNull() & conllu.isNotNull()
+    cut = decoded.select(
+        "url", "warc_ts", "lang", "page_text",
+        F.when(both, text).otherwise("").alias("text"),
+        F.when(both, conllu).otherwise("").alias("conllu"))
+    return cut.select(
+        "url", "warc_ts", "lang", "text", "conllu",
+        F.sha2("text", 256).alias("text_sha256"),
+        # the per-row invariant: extraction is byte-identical to the
+        # table's text column; null-safe, so a NULL text is a violation
+        F.col("text").eqNullSafe(F.col("page_text")).alias("byte_identical"),
+        F.spark_partition_id().alias("part_id"))
 
 
 TOKENS_SCHEMA = T.StructType([
@@ -735,22 +747,28 @@ def docs_view(kernel_out: DataFrame) -> DataFrame:
 
 
 def triples_stage(kernel_out: DataFrame, subject_func: str = "^[nc]subj",
-                  object_func: str = "^(obj|dobj|iobj|obl|nmod)$") -> DataFrame:
+                  object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
+                  chains: Optional[DataFrame] = None) -> DataFrame:
     """(subj, pred, obj) emission: role-tagged verb arguments joined back
     to chain-canonical strings.  All joins are co-keyed on url, so with the
     upstream url-hash partitioning they stay within the same shuffle
-    partitioning (AQE coalesces post-shuffle)."""
+    partitioning (AQE coalesces post-shuffle).  ``chains``: the chains
+    table of the same kernel output, already computed (run_pipeline
+    passes the written one); None aggregates it inside this plan."""
     return triples_from_views(mentions_view(kernel_out), verbs_view(kernel_out),
-                              subject_func, object_func)
+                              subject_func, object_func, chains=chains)
 
 
 def triples_from_views(mentions: DataFrame, verbs: DataFrame,
                        subject_func: str = "^[nc]subj",
-                       object_func: str = "^(obj|dobj|iobj|obl|nmod)$") -> DataFrame:
+                       object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
+                       chains: Optional[DataFrame] = None) -> DataFrame:
     """triples_stage over already-exploded mentions/verbs views (the
     driver-oracle entry point — same dataflow, input read back from the
     exported parquet instead of the live kernel)."""
-    canon = chains_from_mentions(mentions).select(
+    if chains is None:
+        chains = chains_from_mentions(mentions)
+    canon = chains.select(
         "url", "group_id", "canonical_text", F.col("entity").alias("chain_entity"))
 
     args = (mentions
@@ -810,11 +828,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
         partitions = max(spark.sparkContext.defaultParallelism, 8)
 
     if resume and cat.exists("stage_extract"):
-        extracted = cat.read("stage_extract")
+        extracted = cat.read("stage_extract", EXTRACT_SCHEMA)
     else:
         extracted = extract_stage(salt_by_url(pages, partitions))
         cat.write(extracted, "stage_extract")
-        extracted = cat.read("stage_extract")
+        extracted = cat.read("stage_extract", EXTRACT_SCHEMA)
         cat.append_lineage("extract", lineage_of(extracted, "extract"))
 
     if resume and cat.exists("stage_kernel"):
@@ -825,7 +843,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
                 "no_seq/override have NO effect on resumed output — "
                 "pass resume=False (run_kg --no-resume) to recompute "
                 "under the requested model mode\n")
-        kernel_out = cat.read("stage_kernel")
+        kernel_out = cat.read("stage_kernel", KERNEL_SCHEMA)
     else:
         lex = load_lex(lex_dir, rule_based=rule_based,
                        no_seq=no_seq, override=override)
@@ -834,12 +852,18 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
                       if dedup_kernel_inputs
                       else kernel_stage(extracted, bcast))
         cat.write(kernel_out, "stage_kernel")
-        kernel_out = cat.read("stage_kernel")
+        kernel_out = cat.read("stage_kernel", KERNEL_SCHEMA)
         cat.append_lineage("kernel", lineage_of(kernel_out, "kernel"))
 
     if resume and cat.exists("triples"):
         return cat.read("triples")
-    triples = triples_stage(kernel_out)
+    # chains first: triples join the written table instead of running
+    # the canonicalization aggregation again, and a crash between the
+    # two writes leaves chains to reuse rather than a triples table
+    # without chains
+    chains = chains_stage(kernel_out)
+    if not (resume and cat.exists("chains")):
+        cat.write(chains, "chains")
+    triples = triples_stage(kernel_out, chains=cat.read("chains", chains.schema))
     cat.write(triples, "triples")
-    cat.write(chains_stage(kernel_out), "chains")
-    return cat.read("triples")
+    return cat.read("triples", triples.schema)

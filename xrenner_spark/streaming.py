@@ -38,8 +38,14 @@ def read_pages_stream(spark: SparkSession, source_dir: str,
 def stream_pipeline(spark: SparkSession, source_dir: str, out_dir: str,
                     lex_dir: Optional[str] = None, available_now: bool = True):
     """Continuous KG construction: pages stream -> kernel -> per-batch
-    triple emission with exactly-once file-sink semantics via the
-    streaming checkpoint.  Returns the started StreamingQuery."""
+    triple emission.  Returns the started StreamingQuery.
+
+    ``foreachBatch`` is only at-least-once: a batch whose commit did not
+    reach the checkpoint is replayed under the same ``batch_id`` on
+    restart.  Each batch therefore writes its own ``batch_id=<id>``
+    partition with dynamic partition overwrite, so a replay replaces its
+    own rows instead of appending a second copy — the triples table is
+    idempotent per batch."""
     pages = read_pages_stream(spark, source_dir)
     bcast = spark.sparkContext.broadcast(load_lex(lex_dir))
     kernel_out = fused_extract_kernel_stage(pages, bcast)
@@ -53,7 +59,10 @@ def stream_pipeline(spark: SparkSession, source_dir: str, out_dir: str,
             batch_df.count()  # materialize before the 3-way join fan-out
             (triples_stage(batch_df)
              .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("append").parquet(triples_path))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("batch_id")
+             .parquet(triples_path))
         finally:
             batch_df.unpersist()
 
