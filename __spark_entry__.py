@@ -85,7 +85,7 @@ def _ensure_kg_exports(spark: SparkSession, sf_dir: str) -> str:
         .parquet(base + "/conllu.parquet")
     tokens_stage(extracted).write.mode("overwrite").parquet(base + "/tokens1k.parquet")
     extracted.unpersist()
-    tokens_stage(salt_by_url(generate_pages(spark, 200, partitions=8), 8)) \
+    tokens_stage(extract_stage(salt_by_url(generate_pages(spark, 200, partitions=8), 8))) \
         .write.mode("overwrite").parquet(base + "/tokens200.parquet")
     _EXPORT_STATE["sf_dir"] = (spark.sparkContext.applicationId, sf_dir)
     return base
@@ -132,11 +132,12 @@ def kg_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python conllu parse under test; the oracle re-parses the exported
     conllu text entirely in SQL."""
-    from xrenner_spark.pipeline import generate_pages, salt_by_url, tokens_stage
+    from xrenner_spark.pipeline import (extract_stage, generate_pages,
+                                        salt_by_url, tokens_stage)
     _ensure_kg_exports(spark, sf_dir)
     n = min(_n_docs(spark, sf_dir), 1000)
     pages = generate_pages(spark, n, partitions=8)
-    return tokens_stage(salt_by_url(pages, 8))
+    return tokens_stage(extract_stage(salt_by_url(pages, 8)))
 
 
 def kg_child_info(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -90,3 +90,16 @@ def test_descendants_view_is_per_call(spark):
     descendants_closure_sql(toks_b)          # would rebind a shared view
     got = {(r.ancestor, r.descendant) for r in plan_a.collect()}
     assert got == {(1, 2), (2, 3), (1, 3)}
+
+
+def test_driver_memory_default_fits_host(spark):
+    """The driver heap defaults to min(48g, half of physical memory), so
+    a default session cannot be sized past the host it runs on;
+    SPARK_GRAFT_DRIVER_MEM overrides it."""
+    from xrenner_spark.session import default_driver_memory
+    default = default_driver_memory()
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert default.endswith("m")
+    assert 0 < int(default[:-1]) <= min(48 * 1024, phys_mb // 2)
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want

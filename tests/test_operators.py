@@ -181,7 +181,8 @@ def test_model_bootstrap_roundtrip(spark, tmp_path):
     from xrenner_spark.operators.model_stats import (model_entity_deps,
                                                      model_freqs, model_hasa,
                                                      write_model_tables)
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage,
+    from xrenner_spark.pipeline import (extract_stage,
+                                        fused_extract_kernel_stage,
                                         generate_pages, mentions_view,
                                         salt_by_url, tokens_stage)
     pages = generate_pages(spark, 60, partitions=4)
@@ -190,7 +191,7 @@ def test_model_bootstrap_roundtrip(spark, tmp_path):
     kernel_out = kernel_out.persist()
     kernel_out.count()
     mentions = mentions_view(kernel_out)
-    tokens = tokens_stage(salt_by_url(pages, 4))
+    tokens = tokens_stage(extract_stage(salt_by_url(pages, 4)))
 
     dst = str(tmp_path / "web_boot")
     shutil.copytree(DEFAULT_MODEL_DIR, dst)

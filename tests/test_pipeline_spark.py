@@ -3,6 +3,7 @@ with the plain-Python extractor, the byte-identity invariant must hold on
 every row, and a killed/rerun job must resume from checkpoints."""
 
 import os
+import re
 import shutil
 
 import pytest
@@ -11,7 +12,8 @@ from xrenner_spark import load_lex
 from xrenner_spark.catalog import Catalog
 from xrenner_spark.corpus import build_document
 from xrenner_spark.kernel import analyze_document
-from xrenner_spark.pipeline import generate_pages, run_pipeline
+from xrenner_spark.pipeline import (docs_view, fused_extract_kernel_stage,
+                                    generate_pages, run_pipeline)
 from xrenner_spark.triples import extract_triples, parse_verbs
 
 N_DOCS = 40
@@ -72,12 +74,17 @@ def _table_rows(cat, name):
                    for r in cat.read(name).collect()), key=repr)
 
 
+_REPLAYED = ("triples", "chains", "_lineage_extract", "_lineage_kernel")
+
+
 def _kill_and_replay(spark, warehouse, lost):
     cat = Catalog(spark, warehouse)
-    before = {t: _table_rows(cat, t) for t in ("triples", "chains")}
-    assert before["triples"] and before["chains"]
+    before = {t: _table_rows(cat, t) for t in _REPLAYED}
+    assert all(before.values())
     success = lambda t: os.path.join(warehouse, t, "_SUCCESS")
-    kernel_mtime = os.path.getmtime(success("stage_kernel"))
+    stage_mtimes = lambda: [os.path.getmtime(success(t))
+                            for t in ("stage_extract", "stage_kernel")]
+    stages_before = stage_mtimes()
     chains_mtime = os.path.getmtime(success("chains"))
     for table in lost:
         shutil.rmtree(os.path.join(warehouse, table))
@@ -87,8 +94,8 @@ def _kill_and_replay(spark, warehouse, lost):
     bogus_pages = generate_pages(spark, 5, partitions=2)
     run_pipeline(spark, bogus_pages, warehouse, partitions=4)
 
-    assert {t: _table_rows(cat, t) for t in ("triples", "chains")} == before
-    assert os.path.getmtime(success("stage_kernel")) == kernel_mtime
+    assert {t: _table_rows(cat, t) for t in _REPLAYED} == before
+    assert stage_mtimes() == stages_before
     if "chains" not in lost:  # an existing chains table is reused
         assert os.path.getmtime(success("chains")) == chains_mtime
 
@@ -107,22 +114,72 @@ def test_resume_after_losing_triples_and_chains(spark, warehouse):
     _kill_and_replay(spark, warehouse, lost=("triples", "chains"))
 
 
-def test_arrow_and_pandas_fused_stages_identical(spark):
-    """The mapInArrow default and the mapInPandas twin are row-exact
-    equal (modulo the nondeterministic part_id/kernel_ms columns)."""
-    from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage_arrow,
-                                        fused_extract_kernel_stage_pandas,
-                                        generate_pages, salt_by_url)
-    bcast = spark.sparkContext.broadcast(load_lex())
-    pages = salt_by_url(generate_pages(spark, 200, partitions=4), 4).persist()
-    pages.count()
-    a = fused_extract_kernel_stage_arrow(pages, bcast).drop("part_id", "kernel_ms")
-    b = fused_extract_kernel_stage_pandas(pages, bcast).drop("part_id", "kernel_ms")
+def test_resume_after_losing_lineage(spark, warehouse):
+    """A crash between a stage checkpoint and its lineage write: the
+    rerun rebuilds both lineage tables exactly from the checkpoints
+    (lineage is a pure function of them) without recomputing a stage."""
+    _kill_and_replay(spark, warehouse,
+                     lost=("_lineage_extract", "_lineage_kernel"))
+
+
+def test_run_pipeline_kernel_matches_fused_stage(spark, corrupt_pages, tmp_path):
+    """run_pipeline's checkpointed kernel output and the fused stage are
+    one code path: row-exact equal (modulo the nondeterministic
+    part_id/kernel_ms columns) on generated pages plus corrupt ones."""
+    pages, bad_urls = corrupt_pages(n=120, partitions=4)
+    pages = pages.persist()
+    run_pipeline(spark, pages, str(tmp_path / "wh"), partitions=4)
+    staged = Catalog(spark, str(tmp_path / "wh")).read("stage_kernel")
+    fused = fused_extract_kernel_stage(pages, spark.sparkContext.broadcast(load_lex()))
+    a = staged.drop("part_id", "kernel_ms")
+    b = fused.drop("part_id", "kernel_ms")
     assert a.schema == b.schema
+    assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+    errors = {r.url for r in docs_view(staged).collect() if r.error != ""}
+    assert errors == bad_urls
     pages.unpersist()
+
+
+def _python_nodes(df):
+    """Names of the Python-evaluating nodes in ``df``'s optimized plan."""
+    found = []
+
+    def walk(node):
+        if re.search("Pandas|Arrow|Python", node.nodeName()):
+            found.append(node.nodeName())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+def test_sinks_have_one_python_position(spark, corrupt_pages, tmp_path, monkeypatch):
+    """Never chain two Python positions: every sink plans SQL extraction
+    plus exactly one mapInArrow, and run_pipeline's kernel has no
+    mapInPandas."""
+    from xrenner_spark.pipeline import serialize_stage, training_dump_stage
+    pages, _ = corrupt_pages()
+    bcast = spark.sparkContext.broadcast(load_lex())
+    for sink in (fused_extract_kernel_stage(pages, bcast),
+                 serialize_stage(pages, bcast, formats=("sgml",)),
+                 training_dump_stage(pages, bcast)):
+        assert _python_nodes(sink) == ["MapInArrow"]
+
+    written = {}
+    orig_write = Catalog.write
+
+    def recording_write(self, df, name, *args, **kwargs):
+        written[name] = _python_nodes(df)
+        return orig_write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "write", recording_write)
+    run_pipeline(spark, pages, str(tmp_path / "wh"), partitions=4)
+    assert written["stage_extract"] == []
+    assert written["stage_kernel"] == ["MapInArrow"]
 
 
 def test_dedup_kernel_inputs(spark, tmp_path):
@@ -165,6 +222,29 @@ def test_dedup_kernel_inputs(spark, tmp_path):
     # representative's exact timing value
     assert docs.select("text_sha256", "kernel_ms").distinct().count() == 10
     assert docs_view(kp).select("text_sha256", "kernel_ms").distinct().count() == 30
+
+
+def test_dedup_kernel_inputs_byte_identity_per_copy(spark, tmp_path):
+    """A copy whose text column disagrees with its html shares the
+    intact page's extracted payload but fails byte-identity: with
+    dedup_kernel_inputs it must not become the intact copies'
+    representative (its url sorts first), nor inherit their result."""
+    import pandas as pd
+    from xrenner_spark.corpus import build_page
+    from xrenner_spark.pipeline import PAGES_SCHEMA
+
+    rows = [build_page(i) for i in range(3)]
+    rows.append(dict(rows[1], url="https://a.example/violating-copy",
+                     text=rows[1]["text"] + " edited"))
+    pages = spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA)
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, pages, wh, partitions=2, dedup_kernel_inputs=True)
+    kernel = Catalog(spark, wh).read("stage_kernel")
+    errors = {r.url: r.error for r in docs_view(kernel).collect()}
+    assert "byte-identity violation" in errors.pop(rows[3]["url"])
+    assert set(errors.values()) == {""}
+    mention_urls = {r.url for r in kernel.filter(kernel.row_type == "m").collect()}
+    assert mention_urls == {r["url"] for r in rows[:3]}
 
 
 def test_dedup_kernel_inputs_giant_doc(spark, tmp_path):

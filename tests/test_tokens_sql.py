@@ -2,12 +2,12 @@
 over the same tokens (child-info self-join; descendants closure)."""
 
 from xrenner_spark.pipeline import (child_info_sql, descendants_closure_sql,
-                                    generate_pages, tokens_stage)
+                                    extract_stage, generate_pages, tokens_stage)
 
 
 def test_tokens_and_closure_match_python(spark):
     pages = generate_pages(spark, 30, partitions=2)
-    tokens = tokens_stage(pages).persist()
+    tokens = tokens_stage(extract_stage(pages)).persist()
     rows = tokens.collect()
     assert len(rows) > 300
 

@@ -6,7 +6,7 @@ Byte-compatible with the reference's output module (reference
 xrenner/modules/xrenner_out.py:30-133, xrenner_test.py:19-76), verified by
 golden comparison in tests/test_output_formats.py.  Operates on the
 kernel's DocResult rows; in the Spark pipeline these run per document
-inside the same mapInPandas batches when an export column is requested.
+inside the kernel's mapInArrow batches (pipeline.serialize_stage).
 """
 
 from __future__ import annotations

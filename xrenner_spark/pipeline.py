@@ -9,8 +9,9 @@ Stage graph (SURVEY.md §3.4):
       │  (Catalyst expressions only — no Python worker)
       │  checkpoint: table stage_extract + _lineage_extract
       ▼
-    stage 2  kernel: mapInPandas per-document mention/entity/coref kernel
-      │  long format: one row per doc, mention and verb + kernel_ms
+    stage 2  kernel: mapInArrow (_map_docs) per-document mention/entity/coref
+      │  kernel (analyze_page); long format: one row per doc, mention and
+      │  verb + kernel_ms
       │  checkpoint: table stage_kernel + _lineage_kernel
       ▼
     stage 3  SQL: chains groupBy(url, group_id) with canonicalization agg
@@ -23,15 +24,16 @@ it is read back instead of recomputed, so a killed job restarted with the
 same warehouse continues where it left off and produces byte-identical
 triples and chains (verified in tests/test_pipeline_spark.py).
 
-Per-row Python runs only where it cannot be avoided — the kernel, inside
-mapInPandas batch loops (Arrow in/out); the rule/gazetteer bundle is
-broadcast once per executor.
+Per-row Python runs only where it cannot be avoided — the kernel — and
+in one place: every sink (kernel_stage, fused_extract_kernel_stage,
+serialize_stage, training_dump_stage) is SQL extract_stage followed by
+the single _map_docs loop, which runs analyze_page once per document
+and hands the result to the sink's emit callback; the rule/gazetteer
+bundle is broadcast once per executor.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
 import time
 from typing import Iterator, Optional
 
@@ -42,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import Catalog
-from .kernel import analyze_document, analyze_document_windowed
+from .kernel import analyze_document_windowed
 from .lex import load_lex
 from .triples import parse_verbs
 
@@ -93,11 +95,6 @@ MENTION_STRUCT = T.StructType([
     T.StructField("coordinate", T.BooleanType()),
 ])
 
-VERB_STRUCT = T.StructType([
-    T.StructField("tid", T.IntegerType()),
-    T.StructField("lemma", T.StringType()),
-])
-
 # The kernel stage emits LONG format: one flat row per document ('d',
 # carrying the metrics/lineage fields), per mention ('m') and per verb
 # ('v').  A nested array<struct> checkpoint was measured 4.3x slower to
@@ -126,27 +123,6 @@ KERNEL_SCHEMA = T.StructType(
 
 _MENTION_FIELDS = [f.name for f in MENTION_STRUCT.fields]
 _KERNEL_COLS = [f.name for f in KERNEL_SCHEMA.fields]
-_EMPTY_MENTION = {k: None for k in _MENTION_FIELDS}
-
-
-def _kernel_rows(url, warc_ts, lang, part_id, sha, n_sent, n_tok,
-                 kernel_ms, error, mentions, verbs):
-    """Long-format rows for one document (dicts in _KERNEL_COLS order)."""
-    base = {"url": url, "warc_ts": warc_ts, "lang": lang,
-            "part_id": part_id, "verb_id": None, "verb_lemma": None,
-            "text_sha256": None, "n_sentences": None, "n_tokens": None,
-            "kernel_ms": None, "error": None}
-    doc = dict(base, row_type="d", text_sha256=sha, n_sentences=n_sent,
-               n_tokens=n_tok, kernel_ms=kernel_ms, error=error,
-               **_EMPTY_MENTION)
-    rows = [doc]
-    for m in mentions:
-        rows.append(dict(base, row_type="m",
-                         **{k: m[k] for k in _MENTION_FIELDS}))
-    for tid, lemma in verbs:
-        rows.append(dict(base, row_type="v", verb_id=tid, verb_lemma=lemma,
-                         **_EMPTY_MENTION))
-    return rows
 
 
 # ---------------------------------------------------------------------
@@ -187,8 +163,9 @@ def salt_by_url(df: DataFrame, partitions: int) -> DataFrame:
 
 def _between(s, open_marker: str, close_marker: str):
     """SQL twin of ``s[s.index(open) + len(open):s.index(close)]`` (the
-    corpus.extract_* slice): NULL where Python raises (NULL ``s`` or a
-    missing marker), "" where the close marker comes first."""
+    slice corpus.py's Python extractors take): NULL where Python raises
+    (NULL ``s`` or a missing marker), "" where the close marker comes
+    first."""
     start = F.locate(open_marker, s) + len(open_marker)   # 1-based; 0 = absent
     end = F.locate(close_marker, s)
     return F.when((start > len(open_marker)) & (end > 0), s.substr(start, end - start))
@@ -199,7 +176,7 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     task carries a fixed cost of ~0.2 s on a 4-core host; the extraction
     itself is microseconds per page).
 
-    Same result as corpus.extract_text/extract_conllu under the rule
+    Same result as corpus.py's Python extractors under the rule
     that any failure (NULL html, invalid UTF-8, a missing marker) gives
     ("", ""): the html is decoded once by ``try_validate_utf8``, which
     rejects exactly what a strict ``bytes.decode("utf8")`` rejects, and
@@ -236,22 +213,18 @@ TOKENS_SCHEMA = T.StructType([
 ])
 
 
-def tokens_stage(extracted_or_pages: DataFrame) -> DataFrame:
+def tokens_stage(extracted: DataFrame) -> DataFrame:
     """Long-format token table (url, tid, text, lemma, pos, head, func,
-    sent_num) for SQL-side corpus analytics; accepts either the extract
-    stage output (has conllu) or raw pages (has html)."""
-    has_conllu = "conllu" in extracted_or_pages.columns
-
+    sent_num) for SQL-side corpus analytics, over the extract stage
+    output (its url and conllu columns)."""
     def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import extract_conllu
         for pdf in iterator:
             rows = []
             for rec in pdf.itertuples(index=False):
-                conllu = rec.conllu if has_conllu else extract_conllu(rec.html)
                 offset = 0
                 in_sentence = 0
                 sent_num = 1
-                for line in conllu.split("\n"):
+                for line in rec.conllu.split("\n"):
                     if "\t" not in line:
                         if in_sentence:
                             offset += in_sentence
@@ -268,7 +241,7 @@ def tokens_stage(extracted_or_pages: DataFrame) -> DataFrame:
                                  "head": head, "func": cols[7], "sent_num": sent_num})
             yield pd.DataFrame(rows, columns=[f.name for f in TOKENS_SCHEMA.fields])
 
-    return extracted_or_pages.mapInPandas(run, schema=TOKENS_SCHEMA)
+    return extracted.select("url", "conllu").mapInPandas(run, schema=TOKENS_SCHEMA)
 
 
 def child_info_sql(tokens: DataFrame) -> DataFrame:
@@ -342,39 +315,107 @@ def descendants_closure_sql(tokens: DataFrame, max_depth: int = 12) -> DataFrame
 
 
 # ---------------------------------------------------------------------
-# stage 2: the per-document kernel
+# stage 2: the per-document kernel, and the one loop every sink runs
 # ---------------------------------------------------------------------
 
-def kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+#: the extract columns a per-document sink reads
+_DOC_COLS = ("url", "warc_ts", "lang", "conllu", "text_sha256", "byte_identical")
+
+
+def analyze_page(url: str, conllu: str, byte_identical: bool, lex):
+    """The per-document work of every sink: the byte-identity gate, one
+    depedit rewrite and the (windowed) kernel.  Returns ``(result,
+    rewritten conllu)``; raises on a page that fails any of them."""
+    if not byte_identical:
+        raise ValueError("byte-identity violation for " + url)
+    if lex.depedit is not None:  # rewrite once for every consumer
+        conllu = lex.depedit.run(conllu)
+    return analyze_document_windowed(url, conllu, lex, pre_rewritten=True), conllu
+
+
+def _map_docs(extracted: DataFrame, lex_broadcast, schema: T.StructType,
+              emit) -> DataFrame:
+    """The one Python position behind every sink: a ``mapInArrow`` over
+    the extract columns that runs analyze_page once per document, timed
+    and isolated (one bad page must not kill the job: its exception
+    becomes ``error = repr(exc)[:500]`` with ``result = None``), and
+    calls ``emit(out, doc, result, error)``.
+
+    ``out`` maps each ``schema`` column to a list for emit to extend;
+    ``doc`` is the extract row as a dict plus ``part_id`` (this task's
+    partition) and ``kernel_ms``, its ``conllu`` rewritten when the page
+    was analyzed.  Each input batch becomes one output RecordBatch built
+    from those column lists: output rows are never built as dicts or as
+    a pandas frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         lex = lex_broadcast.value
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in iterator:
-            rows = []
-            for rec in pdf.itertuples(index=False):
+        for batch in batches:
+            out = {name: [] for name in out_schema.names}
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
+                doc = dict(zip(batch.schema.names, values), part_id=part_id)
                 t0 = time.perf_counter()
                 try:
-                    conllu = rec.conllu
-                    if lex.depedit is not None:  # rewrite once for both consumers
-                        conllu = lex.depedit.run(conllu)
-                    result = analyze_document_windowed(rec.url, conllu, lex,
-                                                       pre_rewritten=True)
-                    mentions = result.mentions
-                    verbs = sorted(parse_verbs(conllu).items())
-                    n_sent, n_tok = result.n_sentences, result.n_tokens
+                    result, doc["conllu"] = analyze_page(
+                        doc["url"], doc["conllu"], doc["byte_identical"], lex)
                     error = ""
-                except Exception as exc:  # per-doc isolation: one bad page
-                    mentions, verbs = [], []          # must not kill the job
-                    n_sent = n_tok = 0
-                    error = repr(exc)[:500]
-                rows.extend(_kernel_rows(
-                    rec.url, rec.warc_ts, rec.lang, part_id, rec.text_sha256,
-                    n_sent, n_tok, (time.perf_counter() - t0) * 1000.0,
-                    error, mentions, verbs))
-            yield pd.DataFrame(rows, columns=_KERNEL_COLS)
+                except Exception as exc:  # per-doc isolation
+                    result, error = None, repr(exc)[:500]
+                doc["kernel_ms"] = (time.perf_counter() - t0) * 1000.0
+                emit(out, doc, result, error)
+            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
 
-    return extracted.mapInPandas(run, schema=KERNEL_SCHEMA)
+    return extracted.select(*_DOC_COLS).mapInArrow(run, schema=schema)
+
+
+def _append_rows(out: dict, rows) -> None:
+    """Append row tuples (in ``out``'s column order) to ``out``."""
+    for values, name in zip(zip(*rows), out):
+        out[name].extend(values)
+
+
+def _emit_kernel(out: dict, doc: dict, result, error: str) -> None:
+    """Long-format kernel rows for one document, one bulk extend per
+    column: constant-per-doc columns as repeated slices, mention columns
+    as comprehensions."""
+    if result is None:
+        mentions, verbs, n_sent, n_tok = [], [], 0, 0
+    else:
+        mentions = result.mentions
+        verbs = sorted(parse_verbs(doc["conllu"]).items())
+        n_sent, n_tok = result.n_sentences, result.n_tokens
+    n_m, n_v = len(mentions), len(verbs)
+    n = 1 + n_m + n_v
+    for k in ("url", "warc_ts", "lang", "part_id"):
+        out[k].extend([doc[k]] * n)
+    out["row_type"].extend(["d"] + ["m"] * n_m + ["v"] * n_v)
+    # doc-row-only metrics columns
+    pad = [None] * (n_m + n_v)
+    for k, v in (("text_sha256", doc["text_sha256"]), ("n_sentences", n_sent),
+                 ("n_tokens", n_tok), ("kernel_ms", doc["kernel_ms"]),
+                 ("error", error)):
+        out[k].extend([v] + pad)
+    # mention columns: null for 'd', values, null for 'v'
+    v_pad = [None] * n_v
+    for k in _MENTION_FIELDS:
+        out[k].extend([None] + [m[k] for m in mentions] + v_pad)
+    # verb columns: null for 'd' and 'm', values
+    dm_pad = [None] * (1 + n_m)
+    out["verb_id"].extend(dm_pad + [tid for tid, _ in verbs])
+    out["verb_lemma"].extend(dm_pad + [lemma for _, lemma in verbs])
+
+
+def kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
+    """Stage 2 over extract output: KERNEL_SCHEMA long rows per document.
+    A page that fails (byte-identity, depedit or the kernel) yields only
+    its doc row, with the error and the extract's ``text_sha256``."""
+    return _map_docs(extracted, lex_broadcast, KERNEL_SCHEMA, _emit_kernel)
 
 
 def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
@@ -399,11 +440,13 @@ def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # key on the exact kernel input: extracted text AND conllu payload
+    # key on the exact kernel input: extracted text, conllu payload AND
+    # the byte-identity flag (analyze_page rejects a violating copy, so
+    # it must not share a representative with an intact one)
     keyed = extracted.withColumn(
         "payload_key",
-        F.sha2(F.concat(F.col("text_sha256"), F.sha2(F.col("conllu"), 256)),
-               256))
+        F.sha2(F.concat(F.col("text_sha256"), F.sha2(F.col("conllu"), 256),
+                        F.col("byte_identical").cast("string")), 256))
     w = Window.partitionBy("payload_key").orderBy("url")
     reps = (keyed.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
@@ -421,158 +464,13 @@ def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
             .select(*_KERNEL_COLS))
 
 
-def fused_extract_kernel_stage_pandas(pages: DataFrame, lex_broadcast) -> DataFrame:
-    """Extraction + kernel in ONE python position (mapInPandas variant).
-
-    Chaining two mapInPandas evaluations inside a single Spark stage runs
-    two python workers per task back-to-back, which measured ~10x slower
-    than a single fused worker on this pipeline; the staged variant is
-    only used when a checkpoint write separates the stages anyway
-    (run_pipeline).  Semantics are identical — covered by tests.
-
-    Kept as the measured A/B twin of the mapInArrow default (row-exact
-    equal output, test_pipeline_spark); see BENCH/BASELINE.md
-    "Arrow-serde experiment" for why the default switched."""
-
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import extract_conllu, extract_text
-        lex = lex_broadcast.value
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in iterator:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                t0 = time.perf_counter()
-                try:
-                    extracted = extract_text(rec.html)
-                    if extracted != rec.text:
-                        raise ValueError("byte-identity violation for " + rec.url)
-                    conllu = extract_conllu(rec.html)
-                    if lex.depedit is not None:  # rewrite once for both consumers
-                        conllu = lex.depedit.run(conllu)
-                    result = analyze_document_windowed(rec.url, conllu, lex,
-                                                       pre_rewritten=True)
-                    mentions = result.mentions
-                    verbs = sorted(parse_verbs(conllu).items())
-                    sha = hashlib.sha256(extracted.encode("utf8")).hexdigest()
-                    n_sent, n_tok = result.n_sentences, result.n_tokens
-                    error = ""
-                except Exception as exc:
-                    mentions, verbs, sha = [], [], ""
-                    n_sent = n_tok = 0
-                    error = repr(exc)[:500]
-                rows.extend(_kernel_rows(
-                    rec.url, rec.warc_ts, rec.lang, part_id, sha,
-                    n_sent, n_tok, (time.perf_counter() - t0) * 1000.0,
-                    error, mentions, verbs))
-            yield pd.DataFrame(rows, columns=_KERNEL_COLS)
-
-    return pages.mapInPandas(run, schema=KERNEL_SCHEMA)
-
-
-def fused_extract_kernel_stage_arrow(pages: DataFrame, lex_broadcast) -> DataFrame:
-    """The fused stage over ``mapInArrow``: identical semantics to
-    fused_extract_kernel_stage, but the output side skips pandas
-    entirely — per-column Python lists are assembled with bulk
-    list.extend (constant-per-doc columns as repeated slices, mention
-    columns as comprehensions) and handed to Arrow as one RecordBatch
-    per input batch.  The pandas path builds a dict per output row and
-    lets DataFrame(list-of-dicts) re-infer 33 object columns, which is
-    the serde overhead the round-2 profile attributed the remaining
-    kernel-stage gap to (CLAUDE.md: ~0.8 of the raw-multiprocessing
-    ceiling)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    out_schema = to_arrow_schema(KERNEL_SCHEMA)
-    mention_fields = _MENTION_FIELDS
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from .corpus import extract_conllu, extract_text
-        lex = lex_broadcast.value
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        for batch in batches:
-            names = batch.schema.names
-            col = {n: batch.column(i) for i, n in enumerate(names)}
-            urls = col["url"].to_pylist()
-            htmls = col["html"].to_pylist()
-            texts = col["text"].to_pylist()
-            langs = col["lang"].to_pylist()
-            ts_type = batch.schema.field("warc_ts").type
-            tss = col["warc_ts"].to_pylist()
-
-            out = {name: [] for name in _KERNEL_COLS}
-            for url, ts, html, text, lang in zip(urls, tss, htmls, texts, langs):
-                t0 = time.perf_counter()
-                try:
-                    extracted = extract_text(html)
-                    if extracted != text:
-                        raise ValueError("byte-identity violation for " + url)
-                    conllu = extract_conllu(html)
-                    if lex.depedit is not None:
-                        conllu = lex.depedit.run(conllu)
-                    result = analyze_document_windowed(url, conllu, lex,
-                                                       pre_rewritten=True)
-                    mentions = result.mentions
-                    verbs = sorted(parse_verbs(conllu).items())
-                    sha = hashlib.sha256(extracted.encode("utf8")).hexdigest()
-                    n_sent, n_tok = result.n_sentences, result.n_tokens
-                    error = ""
-                except Exception as exc:
-                    mentions, verbs, sha = [], [], ""
-                    n_sent = n_tok = 0
-                    error = repr(exc)[:500]
-                kernel_ms = (time.perf_counter() - t0) * 1000.0
-                n_m, n_v = len(mentions), len(verbs)
-                n = 1 + n_m + n_v
-                # constant-per-doc columns: one bulk extend each
-                out["url"].extend([url] * n)
-                out["warc_ts"].extend([ts] * n)
-                out["lang"].extend([lang] * n)
-                out["part_id"].extend([part_id] * n)
-                out["row_type"].append("d")
-                out["row_type"].extend(["m"] * n_m)
-                out["row_type"].extend(["v"] * n_v)
-                # doc-row-only metrics columns
-                pad = [None] * (n_m + n_v)
-                out["text_sha256"].append(sha); out["text_sha256"].extend(pad)
-                out["n_sentences"].append(n_sent); out["n_sentences"].extend(pad)
-                out["n_tokens"].append(n_tok); out["n_tokens"].extend(pad)
-                out["kernel_ms"].append(kernel_ms); out["kernel_ms"].extend(pad)
-                out["error"].append(error); out["error"].extend(pad)
-                # mention columns: null for 'd', values, null for 'v'
-                v_pad = [None] * n_v
-                for k in mention_fields:
-                    o = out[k]
-                    o.append(None)
-                    o.extend([m[k] for m in mentions])
-                    o.extend(v_pad)
-                # verb columns
-                out["verb_id"].extend([None] * (1 + n_m))
-                out["verb_id"].extend([tid for tid, _ in verbs])
-                out["verb_lemma"].extend([None] * (1 + n_m))
-                out["verb_lemma"].extend([lemma for _, lemma in verbs])
-
-            arrays = []
-            for field in out_schema:
-                typ = ts_type if field.name == "warc_ts" else field.type
-                arrays.append(pa.array(out[field.name], type=typ))
-            yield pa.RecordBatch.from_arrays(arrays, names=[f.name for f in out_schema])
-
-    return pages.mapInArrow(run, schema=KERNEL_SCHEMA)
-
-
-#: default fused stage: the mapInArrow variant — measured equal-to-better
-#: vs mapInPandas on every quiet-window rep (kernel-stage-only A/B, 20k
-#: docs local[32]) and it drops pandas from the hot path entirely; the
-#: remaining gap to the raw-multiprocessing ceiling is input-side Arrow
-#: IPC + task scheduling, not output assembly (BENCH/BASELINE.md r3).
-#: XRENNER_FUSED_IMPL=pandas flips back for A/B measurement.
-fused_extract_kernel_stage = (
-    fused_extract_kernel_stage_pandas
-    if os.environ.get("XRENNER_FUSED_IMPL") == "pandas"
-    else fused_extract_kernel_stage_arrow)
+def fused_extract_kernel_stage(pages: DataFrame, lex_broadcast) -> DataFrame:
+    """Extraction + kernel with ONE Python position and no checkpoint in
+    between (bench, streaming, the driver queries).  Chaining two Python
+    evaluations in one Spark stage runs two python workers per task
+    back-to-back (~10x slower measured); extract_stage is Catalyst
+    only, so this plan crosses the UDF boundary once."""
+    return kernel_stage(extract_stage(pages), lex_broadcast)
 
 
 SERIALIZE_SCHEMA = T.StructType([
@@ -590,46 +488,31 @@ _SERIALIZERS = ("sgml", "conll", "conll_sent", "onto", "html",
 def serialize_stage(pages: DataFrame, lex_broadcast,
                     formats=("sgml",)) -> DataFrame:
     """Distributed serialization sink: extract -> kernel -> the
-    byte-exact reference serializers (output.py), all in ONE python
+    byte-exact reference serializers (output.py), in ONE python
     position, emitting one (url, fmt, filename, payload) row per
-    document per format (per file for PAULA's multi-file standoff).
-    Documents are independent, so this scales exactly like the kernel
-    stage; payloads stream straight to any writer (parquet/text sink).
-    The driver oracle for the sgml path is a committed reference-engine
-    export (scripts/make_ref_serialized.py), same pattern as
-    kg_mentions."""
+    document per format (per file for PAULA's multi-file standoff) and
+    one (url, "error", "", repr) row per failed page.  Documents are
+    independent, so this scales exactly like the kernel stage; payloads
+    stream straight to any writer (parquet/text sink).  The driver
+    oracle for the sgml path is a committed reference-engine export
+    (scripts/make_ref_serialized.py), same pattern as kg_mentions."""
     from . import output as out_mod
 
     unknown = set(formats) - set(_SERIALIZERS)
     if unknown:
         raise ValueError("unknown serialization formats: %s" % sorted(unknown))
 
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import extract_conllu
-        lex = lex_broadcast.value
-        for pdf in iterator:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    conllu = extract_conllu(rec.html)
-                    if lex.depedit is not None:
-                        conllu = lex.depedit.run(conllu)
-                    result = analyze_document_windowed(rec.url, conllu, lex,
-                                                       pre_rewritten=True)
-                except Exception as exc:  # per-doc isolation: one bad page
-                    rows.append((rec.url, "error", "", repr(exc)[:500]))
-                    continue
-                docname = rec.url.rsplit("/", 1)[-1]
-                for fmt in formats:
-                    payload = out_mod.serialize_result(result, docname, fmt)
-                    if fmt == "paula":
-                        for fn, data in payload.items():
-                            rows.append((rec.url, fmt, fn, data))
-                    else:
-                        rows.append((rec.url, fmt, "", payload))
-            yield pd.DataFrame(rows, columns=["url", "fmt", "filename", "payload"])
+    def emit(out, doc, result, error):
+        url = doc["url"]
+        if result is None:
+            return _append_rows(out, [(url, "error", "", error)])
+        docname = url.rsplit("/", 1)[-1]
+        for fmt in formats:
+            payload = out_mod.serialize_result(result, docname, fmt)
+            files = payload.items() if fmt == "paula" else [("", payload)]
+            _append_rows(out, [(url, fmt, fn, data) for fn, data in files])
 
-    return pages.mapInPandas(run, schema=SERIALIZE_SCHEMA)
+    return _map_docs(extract_stage(pages), lex_broadcast, SERIALIZE_SCHEMA, emit)
 
 
 DUMP_SCHEMA = T.StructType([
@@ -641,29 +524,16 @@ DUMP_SCHEMA = T.StructType([
 def training_dump_stage(pages: DataFrame, lex_broadcast) -> DataFrame:
     """Training-data dump sink, distributed: one row per candidate-pair
     feature line (reference lex.dump file sink, xrenner_compatible.py:
-    591-620), keyed by url.  The broadcast lex must carry ``dump=True``;
-    headers are fixed by the feature schema (DocResult.dump_headers).
-    Line content is deterministic; within-doc order is not meaningful
-    (see make_dump_goldens.py) so a parquet/TSV writer downstream is
-    free to partition however it likes."""
-    def run(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import extract_conllu
-        lex = lex_broadcast.value
-        for pdf in iterator:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    conllu = extract_conllu(rec.html)
-                    if lex.depedit is not None:
-                        conllu = lex.depedit.run(conllu)
-                    result = analyze_document_windowed(rec.url, conllu, lex,
-                                                       pre_rewritten=True)
-                except Exception:  # per-doc isolation: skip bad pages
-                    continue
-                rows.extend((rec.url, line) for line in result.dump_rows)
-            yield pd.DataFrame(rows, columns=["url", "line"])
+    591-620), keyed by url; failed pages are skipped.  The broadcast lex
+    must carry ``dump=True``; headers are fixed by the feature schema
+    (DocResult.dump_headers).  Line content is deterministic; within-doc
+    order is not meaningful (see make_dump_goldens.py) so a parquet/TSV
+    writer downstream is free to partition however it likes."""
+    def emit(out, doc, result, error):
+        if result is not None:
+            _append_rows(out, [(doc["url"], line) for line in result.dump_rows])
 
-    return pages.mapInPandas(run, schema=DUMP_SCHEMA)
+    return _map_docs(extract_stage(pages), lex_broadcast, DUMP_SCHEMA, emit)
 
 
 def lineage_of(stage_df: DataFrame, stage: str) -> DataFrame:
@@ -806,6 +676,22 @@ def triples_from_views(mentions: DataFrame, verbs: DataFrame,
 # orchestration with checkpoint/resume
 # ---------------------------------------------------------------------
 
+def _checkpoint(cat: Catalog, stage: str, schema: T.StructType, resume: bool,
+                build) -> DataFrame:
+    """Table ``stage_<stage>`` read back, written from ``build()`` first
+    unless resuming from an existing one, plus its ``_lineage_<stage>``.
+    Lineage is a pure function of the checkpoint, so a lineage table lost
+    to a crash between the two writes is rebuilt exactly on resume."""
+    name = "stage_" + stage
+    fresh = not (resume and cat.exists(name))
+    if fresh:
+        cat.write(build(), name)
+    out = cat.read(name, schema)
+    if fresh or not cat.exists("_lineage_" + stage):
+        cat.append_lineage(stage, lineage_of(out, stage))
+    return out
+
+
 def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
                  partitions: int = None, lex_dir: Optional[str] = None,
                  resume: bool = True, rule_based: bool = False,
@@ -827,33 +713,24 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 8)
 
-    if resume and cat.exists("stage_extract"):
-        extracted = cat.read("stage_extract", EXTRACT_SCHEMA)
-    else:
-        extracted = extract_stage(salt_by_url(pages, partitions))
-        cat.write(extracted, "stage_extract")
-        extracted = cat.read("stage_extract", EXTRACT_SCHEMA)
-        cat.append_lineage("extract", lineage_of(extracted, "extract"))
+    extracted = _checkpoint(cat, "extract", EXTRACT_SCHEMA, resume,
+                            lambda: extract_stage(salt_by_url(pages, partitions)))
 
-    if resume and cat.exists("stage_kernel"):
-        if rule_based or no_seq or override:
-            import sys
-            sys.stderr.write(
-                "WARNING: stage_kernel checkpoint exists; rule_based/"
-                "no_seq/override have NO effect on resumed output — "
-                "pass resume=False (run_kg --no-resume) to recompute "
-                "under the requested model mode\n")
-        kernel_out = cat.read("stage_kernel", KERNEL_SCHEMA)
-    else:
+    def kernel():
         lex = load_lex(lex_dir, rule_based=rule_based,
                        no_seq=no_seq, override=override)
         bcast = spark.sparkContext.broadcast(lex)
-        kernel_out = (dedup_kernel_stage(extracted, bcast)
-                      if dedup_kernel_inputs
-                      else kernel_stage(extracted, bcast))
-        cat.write(kernel_out, "stage_kernel")
-        kernel_out = cat.read("stage_kernel", KERNEL_SCHEMA)
-        cat.append_lineage("kernel", lineage_of(kernel_out, "kernel"))
+        return (dedup_kernel_stage(extracted, bcast) if dedup_kernel_inputs
+                else kernel_stage(extracted, bcast))
+
+    if resume and cat.exists("stage_kernel") and (rule_based or no_seq or override):
+        import sys
+        sys.stderr.write(
+            "WARNING: stage_kernel checkpoint exists; rule_based/"
+            "no_seq/override have NO effect on resumed output — "
+            "pass resume=False (run_kg --no-resume) to recompute "
+            "under the requested model mode\n")
+    kernel_out = _checkpoint(cat, "kernel", KERNEL_SCHEMA, resume, kernel)
 
     if resume and cat.exists("triples"):
         return cat.read("triples")

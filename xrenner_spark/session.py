@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """min(48g, half of physical memory): the local driver JVM must leave
+    the host room for its Python workers and the OS."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return "%dm" % min(48 * 1024, half_mb)
+
+
 def get_spark(app_name: str = "xrenner-spark", cores: int = None,
               shuffle_partitions: int = None, extra_conf: dict = None) -> SparkSession:
     if cores is None:
@@ -41,8 +48,9 @@ def get_spark(app_name: str = "xrenner-spark", cores: int = None,
         # writes thrash a 16g heap (measured: the same 20k-doc pipeline
         # runs 19.0s at 16g vs 8.4s at 48g, all GC) — on a real cluster
         # this is per-executor memory sizing, here the one local JVM
-        # carries all 32 task slots
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # carries all task slots
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for key, val in (extra_conf or {}).items():

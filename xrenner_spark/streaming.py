@@ -4,13 +4,14 @@ The reference is strictly batch (SURVEY.md §2.7: no streaming operators
 exist in it), so streaming is an additive capability here: a continuous
 ingestion mode for the identical per-document kernel.
 
-Design: the fused extract+kernel stage is a stateless mapInPandas and is
-therefore directly streamable; the chain/triple SQL stage self-joins the
-kernel output three ways, which stream-stream join semantics cannot
-express per-document-exactly — and chains never cross documents — so the
-triple stage runs per micro-batch via ``foreachBatch`` (the canonical
-reuse-batch-logic pattern).  Watermarked event-time aggregation over
-``warc_ts`` is provided for monitoring/late-data demonstration.
+Design: the fused extract+kernel stage (SQL extraction plus one
+mapInArrow) is stateless and therefore directly streamable; the
+chain/triple SQL stage self-joins the kernel output three ways, which
+stream-stream join semantics cannot express per-document-exactly — and
+chains never cross documents — so the triple stage runs per micro-batch
+via ``foreachBatch`` (the canonical reuse-batch-logic pattern).
+Watermarked event-time aggregation over ``warc_ts`` is provided for
+monitoring/late-data demonstration.
 """
 
 from __future__ import annotations
