@@ -13,7 +13,7 @@ Ship with:
         --conf spark.sql.adaptive.coalescePartitions.initialPartitionNum=<8x total cores> \
         jobs/run_kg.py \
         --input <pages table/path> --warehouse <output path> \
-        [--iceberg-catalog <catalog>] [--synthesize N]
+        [--synthesize N]
 
 The model directory travels inside the zip (xrenner_spark/models/web) and
 is loaded once per executor via broadcast.  Re-running with the same
@@ -33,7 +33,6 @@ def main():
     ap.add_argument("--synthesize", type=int, default=0,
                     help="generate N synthetic pages instead of reading --input")
     ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--iceberg-catalog", default=None)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--model", default=None, help="override model directory")
     ap.add_argument("--no-resume", action="store_true")

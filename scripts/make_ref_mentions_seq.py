@@ -26,6 +26,12 @@ The script also asserts the sequencer actually changes reference output
 on the exported corpus slice (otherwise the fixture would silently
 degenerate into a second kg_mentions oracle).
 
+``models/web_seq`` is an overlay on ``models/web`` (its config.ini names
+the base as ``[model] base=``), which only this repo's loader resolves;
+point XRENNER_MODEL at a full copy — models/web with web_seq's
+entity_heads.tab and sequencer.json copied over it and its five
+sequencer keys appended to [main] — when running the reference.
+
 Usage: python scripts/make_ref_mentions_seq.py [n_docs] [out.parquet]
 """
 

@@ -103,3 +103,13 @@ def test_driver_memory_default_fits_host(spark):
     assert 0 < int(default[:-1]) <= min(48 * 1024, phys_mb // 2)
     want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
+def test_core_default_fits_host(monkeypatch):
+    """A session without an explicit core count gets one task slot per
+    CPU this process may use; SPARK_GRAFT_CPUS overrides it."""
+    from xrenner_spark.session import default_cores
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3

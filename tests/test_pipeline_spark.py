@@ -302,3 +302,15 @@ def test_triples_plan_joins_written_chains(spark, warehouse, monkeypatch):
     assert "min_by" in written["chains"] and "max_by" in written["chains"]
     assert "min_by" not in written["triples"]
     assert "max_by" not in written["triples"]
+
+
+def test_resume_warns_when_model_changes(spark, warehouse, capsys):
+    """A resumed stage_kernel checkpoint was computed under the model the
+    warehouse was built with; asking for another model must say so."""
+    from xrenner_spark.lex import DEFAULT_MODEL_DIR
+    seq_dir = os.path.join(os.path.dirname(DEFAULT_MODEL_DIR), "web_seq")
+    run_pipeline(spark, generate_pages(spark, 5, partitions=2), warehouse,
+                 partitions=4, lex_dir=seq_dir)
+    err = capsys.readouterr().err
+    assert "stage_kernel checkpoint exists" in err
+    assert "lex_dir" in err

@@ -15,7 +15,6 @@ neural model files.
 
 import json
 import os
-import shutil
 
 import pytest
 
@@ -86,19 +85,23 @@ SENT = {
 
 @pytest.fixture(scope="module")
 def seq_model(tmp_path_factory):
-    """models/web variant: lexicon sequencer + nonref/override config;
+    """models/web overlay: lexicon sequencer + nonref/override config;
     'bank' made ambiguous (organization|place) for the disambiguation
     preference test."""
     dst = str(tmp_path_factory.mktemp("model") / "web_seq")
-    shutil.copytree(DEFAULT_MODEL_DIR, dst)
-    with open(os.path.join(dst, "config.ini"), "a") as fh:
-        fh.write("\nsequencer=demo_seq.json\n"
+    os.makedirs(dst)
+    with open(os.path.join(dst, "config.ini"), "w") as fh:
+        fh.write("[model]\nbase=%s\n\n[main]\n"
+                 % os.path.relpath(DEFAULT_MODEL_DIR, dst))
+        fh.write("sequencer=demo_seq.json\n"
                  "sequencer_nonref_thresh=0.85\n"
                  "sequencer_nonref_pos=/^(NOUN)$/\n"
                  "sequencer_nonref_forbidden_childfunc=/^(appos)$/\n"
                  "sequencer_override_thresh=0.9\n")
-    with open(os.path.join(dst, "entity_heads.tab"), "a") as fh:
-        fh.write("bank\tplace\triver-bank/inanim\t4\n")
+    with open(os.path.join(DEFAULT_MODEL_DIR, "entity_heads.tab")) as fh:
+        heads = fh.read()
+    with open(os.path.join(dst, "entity_heads.tab"), "w") as fh:
+        fh.write(heads + "bank\tplace\triver-bank/inanim\t4\n")
     spec = {"format": "xrenner-portable-sequencer-v1",
             "default": ["O", 0.5],
             "tags": {"gadget": ["O", 0.95],     # confident nonreferential

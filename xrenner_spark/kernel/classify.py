@@ -262,12 +262,13 @@ class PortableClassifier:
         return self.predict_proba(self.encode_rows(feats))
 
 
-def load_model_classifiers(model_dir: str, rules, filters) -> Dict[str, "PortableClassifier"]:
+def load_model_classifiers(model_file, rules, filters) -> Dict[str, "PortableClassifier"]:
     """Resolve every rule's clf_name to a portable JSON file
     (reference xrenner_lex.py:526-563 resolves to pickles; we look for
-    ``<clf_name>.json`` and fail loudly when a classifier-mode rule has
-    no portable model — same failure posture as depedit_lite's
-    unsupported-construct gate)."""
+    ``<clf_name>.json`` through ``model_file``, the model's name -> path
+    lookup over its overlay layers, and fail loudly when a
+    classifier-mode rule has no portable model — same failure posture as
+    depedit_lite's unsupported-construct gate)."""
     classifiers: Dict[str, PortableClassifier] = {}
     if not filters["use_classifiers"]:
         return classifiers
@@ -280,7 +281,7 @@ def load_model_classifiers(model_dir: str, rules, filters) -> Dict[str, "Portabl
             rule.clf_name = rule.clf_name.replace(".pkl", suffix + ".pkl")
         if rule.clf_name in classifiers:
             continue
-        path = os.path.join(model_dir, rule.clf_name + ".json")
+        path = model_file(rule.clf_name + ".json")
         if not os.path.isfile(path):
             raise IOError(
                 "coref rule %d names classifier %r with use_classifiers=True "

@@ -279,10 +279,14 @@ class LexModel:
                         (int(start), int(end) - 1)] = entity
 
 
-def _load_filters(model_dir: str, override: Optional[str] = None) -> Filters:
+def _load_filters(layers: List[str], path,
+                  override: Optional[str] = None) -> Filters:
+    # every layer's config.ini, base first, into one parser: an overlay
+    # key replaces its base's value in place, a new key is appended
     config = configparser.RawConfigParser()
-    with io.open(os.path.join(model_dir, "config.ini"), encoding="utf8") as fh:
-        config.read_file(fh)
+    for layer in reversed(layers):
+        with io.open(os.path.join(layer, "config.ini"), encoding="utf8") as fh:
+            config.read_file(fh)
     filters = Filters()
     # back-compat defaults (reference xrenner_lex.py:348-352)
     filters["neg_func"] = NEVER_MATCH
@@ -296,12 +300,11 @@ def _load_filters(model_dir: str, override: Optional[str] = None) -> Filters:
     ovrd = None
     if override:
         ovrd = configparser.RawConfigParser()
-        with io.open(os.path.join(model_dir, "override.ini"),
-                     encoding="utf8") as fh:
+        with io.open(path("override.ini"), encoding="utf8") as fh:
             ovrd.read_file(fh)
         if not ovrd.has_section(override):
             raise IOError("No section %s in override.ini in model %s"
-                          % (override, model_dir))
+                          % (override, layers[0]))
     for option in config.options("main"):
         if ovrd is not None and ovrd.has_option(override, option):
             filters[option] = _type_config_value(ovrd.get(override, option))
@@ -382,14 +385,13 @@ def _zip_member_dir(path: str) -> Optional[str]:
     return out
 
 
-def load_lex(model_dir: Optional[str] = None,
-             rule_based: bool = False, no_seq: bool = False,
-             override: Optional[str] = None) -> LexModel:
-    """Load a model directory — or a zipped ``.xrm`` model, the format
-    distributed models ship in (reference xrenner_lex.py:87-99 reads the
-    same files through ZipFile handles; we unpack to a tempdir and load
-    identically) — into a broadcastable LexModel."""
-    model_dir = os.path.abspath(model_dir or DEFAULT_MODEL_DIR)
+def _model_dir(model_dir: str) -> str:
+    """Resolve a model path to a directory: a directory as is, a zipped
+    ``.xrm`` model — the format distributed models ship in (reference
+    xrenner_lex.py:87-99 reads the same files through ZipFile handles;
+    we unpack to a tempdir and load identically) — or a path inside a
+    zipped package."""
+    model_dir = os.path.abspath(model_dir)
     if not os.path.isdir(model_dir) and not os.path.isfile(model_dir):
         # --py-files: the bundled default model lives inside the shipped
         # zip; extract its subtree once per process
@@ -417,9 +419,49 @@ def load_lex(model_dir: Optional[str] = None,
                     break
     if not os.path.isdir(model_dir):
         raise IOError("model directory not found: %s" % model_dir)
+    return model_dir
 
-    lex = LexModel(model_dir=model_dir,
-                   filters=_load_filters(model_dir, override=override))
+
+def _model_layers(model_dir: str) -> List[str]:
+    """The directories of a model and of the models it overlays, overlay
+    first.  An overlay's config.ini names its base in a ``[model]``
+    section (``base=``, relative to the overlay's own path, so an overlay
+    shipped inside a zip finds its base there too); the overlay directory
+    holds only the files that differ from its base."""
+    layers: List[str] = []
+    while True:
+        layer = _model_dir(model_dir)
+        if layer in layers:
+            raise IOError("model base chain loops at %s" % layer)
+        layers.append(layer)
+        config = configparser.RawConfigParser()
+        with io.open(os.path.join(layer, "config.ini"), encoding="utf8") as fh:
+            config.read_file(fh)
+        if not config.has_option("model", "base"):
+            return layers
+        model_dir = os.path.join(model_dir, config.get("model", "base"))
+
+
+def load_lex(model_dir: Optional[str] = None,
+             rule_based: bool = False, no_seq: bool = False,
+             override: Optional[str] = None) -> LexModel:
+    """Load a model — a directory, a zipped ``.xrm`` model or an overlay
+    on either (see _model_layers) — into a broadcastable LexModel."""
+    layers = _model_layers(model_dir or DEFAULT_MODEL_DIR)
+
+    def locate(name):
+        """The layer holding model file ``name``, overlay first."""
+        return next((d for d in layers if os.path.isfile(os.path.join(d, name))),
+                    layers[0])
+
+    def path(name):
+        return os.path.join(locate(name), name)
+
+    def have(name):
+        return os.path.isfile(path(name))
+
+    lex = LexModel(model_dir=layers[0],
+                   filters=_load_filters(layers, path, override=override))
     f = lex.filters
     if rule_based:
         # the reference's -r switch forces the heuristic path regardless
@@ -429,15 +471,9 @@ def load_lex(model_dir: Optional[str] = None,
     # --- sequence tagger (xrenner_lex.py:165-177) ----------------------
     if not no_seq and f["sequencer"]:
         from .kernel.sequence import load_sequencer
-        lex.sequencer = load_sequencer(model_dir, f)
+        lex.sequencer = load_sequencer(locate(f["sequencer"]), f)
         if "sequencer_override_thresh" not in f:
             f["sequencer_override_thresh"] = 1.0  # prefer KB entries
-
-    def path(name):
-        return os.path.join(model_dir, name)
-
-    def have(name):
-        return os.path.isfile(path(name))
 
     # --- entity gazetteers (quadruple readers, xrenner_lex.py:225-240) ---
     def read_entities(name, track_sums=False):
@@ -604,7 +640,7 @@ def load_lex(model_dir: Optional[str] = None,
     if f["use_classifiers"]:
         from .kernel.classify import load_model_classifiers
         all_rules = lex.speaker_rules + lex.non_speaker_rules
-        lex.classifiers = load_model_classifiers(model_dir, all_rules, f)
+        lex.classifiers = load_model_classifiers(path, all_rules, f)
         for rule in all_rules:
             rule.use_clf = rule.clf_name != "_default_"
 

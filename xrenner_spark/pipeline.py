@@ -723,10 +723,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
         return (dedup_kernel_stage(extracted, bcast) if dedup_kernel_inputs
                 else kernel_stage(extracted, bcast))
 
-    if resume and cat.exists("stage_kernel") and (rule_based or no_seq or override):
+    if resume and cat.exists("stage_kernel") and (
+            lex_dir or rule_based or no_seq or override):
         import sys
         sys.stderr.write(
-            "WARNING: stage_kernel checkpoint exists; rule_based/"
+            "WARNING: stage_kernel checkpoint exists; lex_dir/rule_based/"
             "no_seq/override have NO effect on resumed output — "
             "pass resume=False (run_kg --no-resume) to recompute "
             "under the requested model mode\n")

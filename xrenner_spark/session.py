@@ -1,7 +1,8 @@
 """SparkSession construction with scale-appropriate defaults.
 
-Local sandbox runs use ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
-same settings ship through spark-submit --conf.  Documents are fat rows
+Local runs use ``local[N]``, N = $SPARK_GRAFT_CPUS or else the CPUs this
+process may run on (default_cores); on a real cluster the same settings
+ship through spark-submit --conf.  Documents are fat rows
 (html + embedded parse), so Arrow batches are kept small
 (maxRecordsPerBatch) to bound executor memory per batch.
 """
@@ -20,10 +21,17 @@ def default_driver_memory() -> str:
     return "%dm" % min(48 * 1024, half_mb)
 
 
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on: a local
+    session with more task slots than cores only oversubscribes them."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "xrenner-spark", cores: int = None,
               shuffle_partitions: int = None, extra_conf: dict = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(32, cores)
     builder = (
