@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: headline KG-pipeline throughput plus representative
-operator queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+operator queries at $SPARK_GRAFT_SF_DIR on local[N], N = $SPARK_GRAFT_CPUS
+or else the CPUs this process may run on.
 
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -17,8 +18,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from xrenner_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CORES = default_cores()
 # documents per KG run: 10x the documents table so the kernel stage has
 # real work at every sf (pages are synthesized deterministically; fixed
 # session costs amortize with run size — 20k-doc runs measured 1.7-4.1k

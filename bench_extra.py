@@ -15,8 +15,10 @@ import json, os, shutil, sys, tempfile, time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from xrenner_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CORES = default_cores()
 DOC_MULTIPLIER = int(os.environ.get("SPARK_GRAFT_DOC_MULT", "10"))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "2"))
 

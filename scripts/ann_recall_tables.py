@@ -19,7 +19,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from xrenner_spark.session import default_cores  # noqa: E402
+
+CORES = default_cores()
 
 
 def main():

@@ -31,7 +31,9 @@ sys.path.insert(0, REPO)
 
 from scripts.bench_1m import canary  # noqa: E402
 
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from xrenner_spark.session import default_cores  # noqa: E402
+
+CORES = default_cores()
 
 
 def n_exchanges(df):

@@ -25,6 +25,18 @@ MODEL = os.environ.get(
     "XRENNER_MODEL", os.path.join(REPO, "xrenner_spark", "models", "web"))
 
 warnings.filterwarnings("ignore")
+sys.path.insert(0, REPO)
+from xrenner_spark.lex import _model_layers, flatten_model  # noqa: E402
+
+if len(_model_layers(MODEL)) > 1:
+    # the reference engine reads one full model directory and knows no
+    # overlays (models/web_pp is one): hand it a flattened copy.  A full
+    # model is used in place, so the path its "unittest" dumps record
+    # stays the same.
+    import tempfile
+    MODEL = flatten_model(MODEL, os.path.join(
+        tempfile.mkdtemp(prefix="xrm_flat_"), "xrenner_spark", "models",
+        os.path.basename(os.path.normpath(MODEL))))
 sys.path.insert(0, REFERENCE)
 
 
@@ -102,7 +114,6 @@ def main():
 def corpus_goldens(n_docs=80):
     """Reference mentions for the first n synthetic corpus documents —
     the triple-P/R oracle fixture."""
-    sys.path.insert(0, REPO)
     from xrenner_spark.corpus import build_document
     out = {}
     for doc_id in range(n_docs):

@@ -27,16 +27,17 @@ on the exported corpus slice (otherwise the fixture would silently
 degenerate into a second kg_mentions oracle).
 
 ``models/web_seq`` is an overlay on ``models/web`` (its config.ini names
-the base as ``[model] base=``), which only this repo's loader resolves;
-point XRENNER_MODEL at a full copy — models/web with web_seq's
-entity_heads.tab and sequencer.json copied over it and its five
-sequencer keys appended to [main] — when running the reference.
+the base as ``[model] base=``), which only this repo's loader resolves,
+so the reference engine gets a full copy written by
+``lex.flatten_model``: the merged config.ini and every base file, with
+web_seq's entity_heads.tab and sequencer.json in place of the base's.
 
 Usage: python scripts/make_ref_mentions_seq.py [n_docs] [out.parquet]
 """
 
 import os
 import sys
+import tempfile
 import warnings
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -47,6 +48,10 @@ MODEL = os.environ.get(
 warnings.filterwarnings("ignore")
 sys.path.insert(0, REFERENCE)
 sys.path.insert(0, REPO)
+from xrenner_spark.lex import flatten_model  # noqa: E402
+
+# the reference engine reads one full model directory: flatten the overlay
+MODEL = flatten_model(MODEL, tempfile.mkdtemp(prefix="xrm_flat_"))
 
 
 def ref_mentions(conllu, with_seq):

@@ -14,7 +14,9 @@ import pytest
 
 from xrenner_spark.corpus import build_document
 from xrenner_spark.kernel import analyze_document
-from xrenner_spark.lex import DEFAULT_MODEL_DIR, _model_layers, load_lex
+from xrenner_spark.lex import (DEFAULT_MODEL_DIR, _model_layers, flatten_model,
+                                load_lex)
+from xrenner_spark.rules import CorefRule
 
 MODELS = os.path.dirname(DEFAULT_MODEL_DIR)
 
@@ -119,6 +121,41 @@ def test_web_seq_loads_from_zipped_package(tmp_path):
         conllu = build_document(doc_id)["conllu"]
         assert (analyze_document("d", conllu, zip_lex).mentions
                 == analyze_document("d", conllu, dir_lex).mentions)
+
+
+# ---------------------------------------------------------------------
+# flattened copy: one full model for readers that know no overlays
+# ---------------------------------------------------------------------
+
+def _comparable(value):
+    """One LexModel field in a form that compares by content: coref
+    rules by their attributes (their matchers are closures), objects
+    without an equality by their pickle."""
+    if isinstance(value, list) and value and isinstance(value[0], CorefRule):
+        return [{k: repr(v) for k, v in vars(rule).items() if not callable(v)}
+                for rule in value]
+    if hasattr(value, "__dict__"):
+        return pickle.dumps(value)
+    return value
+
+
+@pytest.mark.parametrize("name", ["web_pp", "web_seq"])
+def test_flattened_overlay_loads_like_the_overlay(tmp_path, name):
+    overlay = os.path.join(MODELS, name)
+    flat = flatten_model(overlay, str(tmp_path / name))
+    assert _model_layers(flat) == [flat]
+    assert not _config(flat).has_section("model")
+    assert set(os.listdir(flat)) == {
+        f for layer in _model_layers(overlay) for f in os.listdir(layer)}
+    got, want = load_lex(flat), load_lex(overlay)
+    assert pickle.dumps(got.filters) == pickle.dumps(want.filters)
+    for key, value in vars(want).items():
+        if key not in ("model_dir", "filters"):
+            assert _comparable(vars(got)[key]) == _comparable(value), key
+    for doc_id in range(8):
+        conllu = build_document(doc_id)["conllu"]
+        assert (analyze_document("d", conllu, got).mentions
+                == analyze_document("d", conllu, want).mentions)
 
 
 # ---------------------------------------------------------------------

@@ -142,19 +142,20 @@ def test_run_pipeline_kernel_matches_fused_stage(spark, corrupt_pages, tmp_path)
     pages.unpersist()
 
 
+def _plan_nodes(plan):
+    """Node names of a (logical or physical) plan, depth first; an
+    adaptive plan contributes its initial plan, exchanges included."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.initialPlan())
+    children = plan.children()
+    return [plan.nodeName()] + [name for i in range(children.size())
+                                for name in _plan_nodes(children.apply(i))]
+
+
 def _python_nodes(df):
     """Names of the Python-evaluating nodes in ``df``'s optimized plan."""
-    found = []
-
-    def walk(node):
-        if re.search("Pandas|Arrow|Python", node.nodeName()):
-            found.append(node.nodeName())
-        children = node.children()
-        for i in range(children.size()):
-            walk(children.apply(i))
-
-    walk(df._jdf.queryExecution().optimizedPlan())
-    return found
+    return [name for name in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+            if re.search("Pandas|Arrow|Python", name)]
 
 
 def test_sinks_have_one_python_position(spark, corrupt_pages, tmp_path, monkeypatch):
@@ -302,6 +303,26 @@ def test_triples_plan_joins_written_chains(spark, warehouse, monkeypatch):
     assert "min_by" in written["chains"] and "max_by" in written["chains"]
     assert "min_by" not in written["triples"]
     assert "max_by" not in written["triples"]
+
+
+def test_triples_plan_has_one_exchange(spark, warehouse, monkeypatch):
+    """The role-tagged arguments are computed once and grouped per verb:
+    one shuffle, no sort-merge self-join of two argument copies."""
+    written = {}
+    orig_write = Catalog.write
+
+    def recording_write(self, df, name, *args, **kwargs):
+        written[name] = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        return orig_write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "write", recording_write)
+    shutil.rmtree(os.path.join(warehouse, "triples"))
+    run_pipeline(spark, generate_pages(spark, 5, partitions=2), warehouse,
+                 partitions=4)
+
+    nodes = written["triples"]
+    assert nodes.count("Exchange") == 1
+    assert "SortMergeJoin" not in nodes
 
 
 def test_resume_warns_when_model_changes(spark, warehouse, capsys):

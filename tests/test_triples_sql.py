@@ -1,0 +1,229 @@
+"""The triples and chains statements against their earlier Column-API
+formulation, frozen here as the reference: the same multiset of rows on
+kernel output (clean and corrupt pages) and on a hand-built table of
+edge cases, with and without a precomputed chains table, and with
+role regexes that would break a statement built by string formatting."""
+
+from collections import Counter
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from xrenner_spark import load_lex
+from xrenner_spark.catalog import Catalog
+from xrenner_spark.pipeline import (KERNEL_SCHEMA, chains_from_mentions,
+                                    extract_stage, generate_pages, kernel_stage,
+                                    mentions_view, triples_from_views, verbs_view)
+
+SUBJECT_FUNC = "^[nc]subj"
+OBJECT_FUNC = "^(obj|dobj|iobj|obl|nmod)$"
+
+
+def _reference_chains(mentions):
+    return (
+        mentions.groupBy("url", "group_id").agg(
+            F.expr("min_by(core_text, struct(start, end)) "
+                   "FILTER (WHERE form = 'proper')").alias("proper_first"),
+            F.expr("max_by(core_text, struct(length(core_text), -start, -end)) "
+                   "FILTER (WHERE form != 'pronoun')").alias("longest_nominal"),
+            F.expr("min_by(core_text, struct(start, end))").alias("first_any"),
+            F.count("*").alias("n_mentions"),
+            F.expr("min_by(entity, struct(start, end))").alias("entity"),
+            F.collect_list("mark_id").alias("mention_ids"),
+        )
+        .withColumn("canonical_text",
+                    F.coalesce("proper_first", "longest_nominal", "first_any"))
+        .drop("proper_first", "longest_nominal", "first_any")
+    )
+
+
+def _reference_triples(mentions, verbs, subject_func=SUBJECT_FUNC,
+                       object_func=OBJECT_FUNC, chains=None):
+    if chains is None:
+        chains = _reference_chains(mentions)
+    canon = chains.select(
+        "url", "group_id", "canonical_text", F.col("entity").alias("chain_entity"))
+    args = (mentions
+            .withColumn("role",
+                        F.when(F.regexp_like("head_func", F.lit(subject_func)), "subj")
+                        .when(F.regexp_like("head_func", F.lit(object_func)), "obj"))
+            .filter(F.col("role").isNotNull())
+            .join(verbs, (mentions.url == verbs.url)
+                  & (mentions.head_parent == verbs.verb_id), "inner")
+            .drop(verbs.url)
+            .join(canon, ["url", "group_id"], "left"))
+    subj = args.filter(F.col("role") == "subj").select(
+        "url", "warc_ts", "verb_id", "verb_lemma",
+        F.col("canonical_text").alias("subj"),
+        F.col("group_id").alias("subj_group"),
+        F.col("chain_entity").alias("subj_entity"),
+        F.col("sent_num").alias("sent_num"),
+        F.col("mark_id").alias("subj_mark"))
+    obj = args.filter(F.col("role") == "obj").select(
+        "url", "verb_id",
+        F.col("canonical_text").alias("obj"),
+        F.col("group_id").alias("obj_group"),
+        F.col("chain_entity").alias("obj_entity"),
+        F.col("mark_id").alias("obj_mark"))
+    return (subj.join(obj, ["url", "verb_id"], "inner")
+            .filter(F.col("subj_mark") != F.col("obj_mark"))
+            .select("url", "warc_ts", "subj", F.col("verb_lemma").alias("pred"),
+                    "obj", "subj_group", "obj_group", "subj_entity", "obj_entity",
+                    "sent_num", "verb_id"))
+
+
+def _rows(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _assert_same(new, ref):
+    assert new.columns == ref.columns
+    assert [f.dataType for f in new.schema] == [f.dataType for f in ref.schema]
+    got, want = _rows(new), _rows(ref)
+    assert got == want
+
+
+def _chains_rows(df):
+    # collect_list order follows the input, not a key: compare as a multiset
+    return Counter((r.url, r.group_id, r.n_mentions, r.entity, r.canonical_text,
+                    tuple(sorted(r.mention_ids))) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def kernel_out(spark, corrupt_pages, tmp_path_factory):
+    """Kernel output of generated corpus pages plus the corrupt pages,
+    written once so both formulations read the same table."""
+    pages, _ = corrupt_pages(n=12)
+    pages = pages.unionByName(generate_pages(spark, 30, partitions=2))
+    bcast = spark.sparkContext.broadcast(load_lex())
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("kernel_wh")))
+    cat.write(kernel_stage(extract_stage(pages), bcast), "stage_kernel")
+    return cat.read("stage_kernel", KERNEL_SCHEMA)
+
+
+def _mention(url, mark_id, group_id, head_func, head_parent, core_text,
+             form="common", start=1, sent_num=1, entity="person"):
+    return dict(url=url, warc_ts=None, mark_id=mark_id, start=start,
+                end=start + 1, text=core_text, core_text=core_text,
+                entity=entity, form=form, group_id=group_id,
+                head_func=head_func, head_parent=head_parent, sent_num=sent_num)
+
+
+_EDGE_MENTIONS = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("mark_id", T.StringType()),
+    T.StructField("start", T.IntegerType()),
+    T.StructField("end", T.IntegerType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("core_text", T.StringType()),
+    T.StructField("entity", T.StringType()),
+    T.StructField("form", T.StringType()),
+    T.StructField("group_id", T.LongType()),
+    T.StructField("head_func", T.StringType()),
+    T.StructField("head_parent", T.IntegerType()),
+    T.StructField("sent_num", T.IntegerType()),
+])
+_EDGE_VERBS = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("verb_id", T.IntegerType()),
+    T.StructField("verb_lemma", T.StringType()),
+])
+
+
+@pytest.fixture(scope="module")
+def edge_views(spark):
+    """Two subjects and two objects on one verb; a verb with subjects
+    only; a mention whose group the given chains table lacks; a NULL
+    mark_id; role functions with a quote and a pipe in them."""
+    m = [
+        # doc a, verb 5: 2 subjects x 2 objects (one object shares the
+        # first subject's group, so it is a different mention, same chain)
+        _mention("a", "1-2", 1, "nsubj", 5, "Kim", form="proper"),
+        _mention("a", "3", 2, "csubj", 5, "the dog", start=3),
+        _mention("a", "6-7", 1, "obj", 5, "her", form="pronoun", start=6),
+        _mention("a", "8", 3, "obl", 5, "the park", start=8),
+        # doc a, verb 10: subjects only
+        _mention("a", "9", 4, "nsubj", 10, "a cat", start=9, sent_num=2),
+        _mention("a", "11", 2, "nsubj:pass", 10, "the dog", start=11, sent_num=2),
+        # doc b: the object's group 99 is missing from the chains table
+        _mention("b", "1", 7, "nsubj", 2, "Lee", form="proper"),
+        _mention("b", "3", 99, "dobj", 2, "a letter", start=3),
+        # doc c: a NULL mark_id on each side, and a well-formed object
+        _mention("c", None, 1, "nsubj", 2, "someone"),
+        _mention("c", "4", 2, "obj", 2, "it", form="pronoun", start=4),
+        _mention("c", "5", 3, "iobj", 2, "nobody", start=5),
+        _mention("c", None, 3, "obj", 2, "nothing", start=6),
+        _mention("c", "7", 4, "nsubj", 2, "Max", form="proper", start=7),
+        # functions only the quoted/piped overrides select
+        _mention("d", "1", 1, "it's|subj", 3, "Ann", form="proper"),
+        _mention("d", "2", 2, "o'bj", 3, "the key", start=2),
+        _mention("d", "3", 3, "obj", 3, "a door", start=3),
+        # a mention whose verb is not in the verbs table
+        _mention("d", "4", 4, "nsubj", 42, "Bo", form="proper", start=4),
+    ]
+    v = [("a", 5, "see"), ("a", 10, "sleep"), ("b", 2, "write"),
+         ("c", 2, "give"), ("d", 3, "open")]
+    mentions = spark.createDataFrame(
+        [tuple(row[f.name] for f in _EDGE_MENTIONS) for row in m], _EDGE_MENTIONS)
+    verbs = spark.createDataFrame(v, _EDGE_VERBS)
+    return mentions, verbs
+
+
+def test_chains_statement_matches_reference(kernel_out, edge_views):
+    for mentions in (mentions_view(kernel_out), edge_views[0]):
+        new, ref = chains_from_mentions(mentions), _reference_chains(mentions)
+        assert new.columns == ref.columns
+        assert _chains_rows(new) == _chains_rows(ref)
+
+
+@pytest.mark.parametrize("funcs", [
+    (SUBJECT_FUNC, OBJECT_FUNC),
+    ("^(it's\\|subj|[nc]subj)", "^(o'bj|obj|dobj)$"),
+])
+def test_triples_statement_matches_reference_on_kernel_output(spark, kernel_out,
+                                                             tmp_path, funcs):
+    kernel = kernel_out
+    mentions, verbs = mentions_view(kernel), verbs_view(kernel)
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(chains_from_mentions(mentions), "chains")
+    for chains in (None, cat.read("chains")):
+        new = triples_from_views(mentions, verbs, *funcs, chains=chains)
+        ref = _reference_triples(mentions, verbs, *funcs, chains=chains)
+        _assert_same(new, ref)
+    assert _rows(new)  # the corpus yields triples under both role sets
+
+
+@pytest.mark.parametrize("funcs", [
+    (SUBJECT_FUNC, OBJECT_FUNC),
+    ("^(it's\\|subj|[nc]subj)", "^(o'bj|obj|dobj)$"),
+    ("'", "|"),
+])
+def test_triples_statement_matches_reference_on_edge_cases(spark, edge_views,
+                                                           tmp_path, funcs):
+    mentions, verbs = edge_views
+    cat = Catalog(spark, str(tmp_path))
+    # the written chains table lacks doc b's object group
+    cat.write(chains_from_mentions(mentions).filter("group_id != 99"), "chains")
+    for chains in (None, cat.read("chains")):
+        new = triples_from_views(mentions, verbs, *funcs, chains=chains)
+        ref = _reference_triples(mentions, verbs, *funcs, chains=chains)
+        _assert_same(new, ref)
+
+
+def test_edge_case_triples(spark, edge_views, tmp_path):
+    """What the edge cases yield, spelled out: 2 x 2 pairs on one verb,
+    nothing from a subject-only verb or with a NULL mark, a NULL
+    canonical string for a group missing from chains."""
+    mentions, verbs = edge_views
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(chains_from_mentions(mentions).filter("group_id != 99"), "chains")
+    rows = triples_from_views(mentions, verbs, chains=cat.read("chains")).collect()
+    got = Counter((r.url, r.subj, r.pred, r.obj) for r in rows)
+    assert got == Counter([
+        ("a", "Kim", "see", "Kim"), ("a", "Kim", "see", "the park"),
+        ("a", "the dog", "see", "Kim"), ("a", "the dog", "see", "the park"),
+        ("b", "Lee", "write", None),
+        ("c", "Max", "give", "it"), ("c", "Max", "give", "nothing"),
+    ])

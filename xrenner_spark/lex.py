@@ -279,14 +279,19 @@ class LexModel:
                         (int(start), int(end) - 1)] = entity
 
 
-def _load_filters(layers: List[str], path,
-                  override: Optional[str] = None) -> Filters:
-    # every layer's config.ini, base first, into one parser: an overlay
-    # key replaces its base's value in place, a new key is appended
+def _merged_config(layers: List[str]) -> configparser.RawConfigParser:
+    """Every layer's config.ini, base first, in one parser: an overlay key
+    replaces its base's value in place, a new key is appended."""
     config = configparser.RawConfigParser()
     for layer in reversed(layers):
         with io.open(os.path.join(layer, "config.ini"), encoding="utf8") as fh:
             config.read_file(fh)
+    return config
+
+
+def _load_filters(layers: List[str], path,
+                  override: Optional[str] = None) -> Filters:
+    config = _merged_config(layers)
     filters = Filters()
     # back-compat defaults (reference xrenner_lex.py:348-352)
     filters["neg_func"] = NEVER_MATCH
@@ -440,6 +445,26 @@ def _model_layers(model_dir: str) -> List[str]:
         if not config.has_option("model", "base"):
             return layers
         model_dir = os.path.join(model_dir, config.get("model", "base"))
+
+
+def flatten_model(model_dir: str, out_dir: str) -> str:
+    """Write ``model_dir`` — an overlay or a full model — to ``out_dir`` as
+    one full model for readers that know no overlays (the reference
+    engine): the merged config.ini without its ``[model]`` section, plus
+    every file of every layer, the overlay's copy winning.  Returns
+    ``out_dir``."""
+    import shutil
+    layers = _model_layers(model_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    for layer in reversed(layers):  # base first, so overlay files win
+        for name in os.listdir(layer):
+            if name != "config.ini" and os.path.isfile(os.path.join(layer, name)):
+                shutil.copyfile(os.path.join(layer, name), os.path.join(out_dir, name))
+    config = _merged_config(layers)
+    config.remove_section("model")
+    with io.open(os.path.join(out_dir, "config.ini"), "w", encoding="utf8") as fh:
+        config.write(fh, space_around_delimiters=False)
+    return out_dir
 
 
 def load_lex(model_dir: Optional[str] = None,

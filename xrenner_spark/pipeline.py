@@ -14,10 +14,13 @@ Stage graph (SURVEY.md §3.4):
       │  verb + kernel_ms
       │  checkpoint: table stage_kernel + _lineage_kernel
       ▼
-    stage 3  SQL: chains groupBy(url, group_id) with canonicalization agg
+    stage 3  SQL, one spark.sql statement each:
+      │  chains: GROUP BY (url, group_id) with canonicalization aggregates
       │  → chains table, written FIRST
       ▼
-             verb-argument join against the written chains → triples table
+             triples: role-tagged arguments (mentions ⋈ verbs ⋈ written
+             chains) once, ONE exchange GROUP BY (url, verb_id) collecting
+             subjects and objects, pairs via inline/transform → triples table
 
 Every stage is resumable: if its checkpoint table exists (same run_dir),
 it is read back instead of recomputed, so a killed job restarted with the
@@ -173,7 +176,7 @@ def _between(s, open_marker: str, close_marker: str):
 
 def extract_stage(pages: DataFrame) -> DataFrame:
     """Stage 1 as Catalyst expressions — no Python worker (each Python
-    task carries a fixed cost of ~0.2 s on a 4-core host; the extraction
+    task carries a fixed cost, see _reuse_zip_directories; the extraction
     itself is microseconds per page).
 
     Same result as corpus.py's Python extractors under the rule
@@ -333,6 +336,49 @@ def analyze_page(url: str, conllu: str, byte_identical: bool, lex):
     return analyze_document_windowed(url, conllu, lex, pre_rewritten=True), conllu
 
 
+def _reuse_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_mtime_ns, st_size)`` changed since it was last read.
+
+    A reused PySpark worker calls ``importlib.invalidate_caches()`` before
+    every task, and the stdlib zipimporter answers by re-reading its whole
+    archive's central directory: ``pyspark.zip`` once per imported
+    subpackage path plus the spark-core jar, 155-390 ms per task
+    measured on a 4-core host.  A changed or replaced archive is still
+    re-read, a new archive still gets a new importer, and an archive that
+    cannot be stat'ed takes the stdlib path.  Idempotent; installed once
+    per worker process by the kernel loop."""
+    import os
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if getattr(cls.invalidate_caches, "reads_changed_only", False) \
+            or not hasattr(zipimport, "_zip_directory_cache"):
+        return  # installed, or a zipimport this hook does not know
+    stdlib = cls.invalidate_caches
+    last_read = {}  # archive -> ((st_mtime_ns, st_size), directory)
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            last_read.pop(self.archive, None)
+            return stdlib(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        seen = last_read.get(self.archive)
+        if seen is not None and seen[0] == stamp:
+            self._files = zipimport._zip_directory_cache[self.archive] = seen[1]
+            return
+        stdlib(self)
+        if self.archive in zipimport._zip_directory_cache:  # read succeeded
+            last_read[self.archive] = (stamp, self._files)
+        else:
+            last_read.pop(self.archive, None)
+
+    invalidate_caches.reads_changed_only = True
+    cls.invalidate_caches = invalidate_caches
+
+
 def _map_docs(extracted: DataFrame, lex_broadcast, schema: T.StructType,
               emit) -> DataFrame:
     """The one Python position behind every sink: a ``mapInArrow`` over
@@ -353,6 +399,7 @@ def _map_docs(extracted: DataFrame, lex_broadcast, schema: T.StructType,
     out_schema = to_arrow_schema(schema)
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        _reuse_zip_directories()  # for this worker's next tasks
         lex = lex_broadcast.value
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else -1
@@ -568,33 +615,87 @@ def lineage_of(stage_df: DataFrame, stage: str) -> DataFrame:
 # stage 3: chains + triples as Spark SQL dataflow
 # ---------------------------------------------------------------------
 
+# Each stage-3 function is one spark.sql statement over the relations
+# ``mentions``, ``verbs`` and ``chains``, bound as CTEs: either the 'm'/'v'
+# rows of the one long-format kernel table or exploded tables given by the
+# caller.  Input DataFrames are passed as spark.sql keyword arguments
+# (PySpark registers and drops a temp view per DataFrame) and values as
+# parameter markers, never formatted into the text.
+
+_KERNEL_MENTIONS = "SELECT * FROM {kernel} WHERE row_type = 'm'"
+_KERNEL_VERBS = "SELECT * FROM {kernel} WHERE row_type = 'v'"
+
+#: chain aggregation with canonicalization over ``mentions`` (same rules
+#: as triples.canonical_mentions).  Orderings are total — the -end
+#: tiebreak makes max_by deterministic when two spans share length and
+#: start — so Spark and DuckDB pick identical canonical strings
+_CHAINS_SQL = """
+    SELECT url, group_id, n_mentions, entity, mention_ids,
+           coalesce(proper_first, longest_nominal, first_any) AS canonical_text
+    FROM (
+        SELECT url, group_id,
+               min_by(core_text, struct(start, `end`))
+                   FILTER (WHERE form = 'proper') AS proper_first,
+               max_by(core_text, struct(length(core_text), -start, -`end`))
+                   FILTER (WHERE form != 'pronoun') AS longest_nominal,
+               min_by(core_text, struct(start, `end`)) AS first_any,
+               count(*) AS n_mentions,
+               min_by(entity, struct(start, `end`)) AS entity,
+               collect_list(mark_id) AS mention_ids
+        FROM mentions
+        GROUP BY url, group_id)"""
+
+#: (subj, pred, obj) rows from ``mentions``, ``verbs`` and ``chains``:
+#: the role-tagged arguments (mentions ⋈ verbs ⋈ chains) once, grouped
+#: per (url, verb_id) into subject and object lists — the one exchange —
+#: and one triple per (subject, object) pair of two different mentions
+_TRIPLES_SQL = """
+    args AS (
+        SELECT m.url, m.warc_ts, m.sent_num, m.mark_id, m.group_id,
+               v.verb_id, v.verb_lemma, c.canonical_text, c.entity AS chain_entity,
+               CASE WHEN regexp_like(m.head_func, :subject_func) THEN 'subj'
+                    WHEN regexp_like(m.head_func, :object_func) THEN 'obj'
+               END AS role
+        FROM mentions m
+        JOIN verbs v ON m.url = v.url AND m.head_parent = v.verb_id
+        LEFT JOIN chains c ON m.url = c.url AND m.group_id = c.group_id
+    ), by_verb AS (
+        SELECT url, verb_id,
+               collect_list(struct(warc_ts, verb_lemma, canonical_text,
+                                   group_id, chain_entity, sent_num, mark_id))
+                   FILTER (WHERE role = 'subj') AS s,
+               collect_list(struct(canonical_text, group_id, chain_entity, mark_id))
+                   FILTER (WHERE role = 'obj') AS o
+        FROM args
+        WHERE role IS NOT NULL
+        GROUP BY url, verb_id
+    )
+    SELECT inline(flatten(transform(s, x -> transform(
+        filter(o, y -> y.mark_id != x.mark_id),
+        y -> named_struct(
+            'url', url, 'warc_ts', x.warc_ts, 'subj', x.canonical_text,
+            'pred', x.verb_lemma, 'obj', y.canonical_text,
+            'subj_group', x.group_id, 'obj_group', y.group_id,
+            'subj_entity', x.chain_entity, 'obj_entity', y.chain_entity,
+            'sent_num', x.sent_num, 'verb_id', verb_id)))))
+    FROM by_verb"""
+
+
 def chains_stage(kernel_out: DataFrame) -> DataFrame:
-    """Chain aggregation with canonicalization (groupBy + min_by/max_by;
-    same rules as triples.canonical_mentions)."""
-    return chains_from_mentions(mentions_view(kernel_out))
+    """Chain aggregation with canonicalization over the kernel table's
+    mention rows."""
+    return kernel_out.sparkSession.sql(
+        "WITH mentions AS (%s) %s" % (_KERNEL_MENTIONS, _CHAINS_SQL),
+        kernel=kernel_out)
 
 
 def chains_from_mentions(mentions: DataFrame) -> DataFrame:
     """chains_stage over an already-exploded mentions table (also the
     driver-oracle entry point: the DuckDB twin recomputes this aggregation
-    over the exported mentions parquet).  Orderings are total — the -end
-    tiebreak makes max_by deterministic when two spans share length and
-    start — so Spark and DuckDB pick identical canonical strings."""
-    return (
-        mentions.groupBy("url", "group_id").agg(
-            F.expr("min_by(core_text, struct(start, end)) "
-                   "FILTER (WHERE form = 'proper')").alias("proper_first"),
-            F.expr("max_by(core_text, struct(length(core_text), -start, -end)) "
-                   "FILTER (WHERE form != 'pronoun')").alias("longest_nominal"),
-            F.expr("min_by(core_text, struct(start, end))").alias("first_any"),
-            F.count("*").alias("n_mentions"),
-            F.expr("min_by(entity, struct(start, end))").alias("entity"),
-            F.collect_list("mark_id").alias("mention_ids"),
-        )
-        .withColumn("canonical_text",
-                    F.coalesce("proper_first", "longest_nominal", "first_any"))
-        .drop("proper_first", "longest_nominal", "first_any")
-    )
+    over the exported mentions parquet)."""
+    return mentions.sparkSession.sql(
+        "WITH mentions AS (SELECT * FROM {mentions}) %s" % _CHAINS_SQL,
+        mentions=mentions)
 
 
 def mentions_view(kernel_out: DataFrame) -> DataFrame:
@@ -616,60 +717,44 @@ def docs_view(kernel_out: DataFrame) -> DataFrame:
                     "n_sentences", "n_tokens", "kernel_ms", "error"))
 
 
+def _triples(spark: SparkSession, mentions_sql: str, verbs_sql: str,
+             subject_func: str, object_func: str, chains: Optional[DataFrame],
+             **frames) -> DataFrame:
+    """_TRIPLES_SQL over the given mentions/verbs relations; ``chains``
+    None aggregates the chains inside the same statement."""
+    if chains is None:
+        chains_sql = _CHAINS_SQL
+    else:
+        chains_sql, frames["chains"] = "SELECT * FROM {chains}", chains
+    return spark.sql(
+        "WITH mentions AS (%s), verbs AS (%s), chains AS (%s), %s"
+        % (mentions_sql, verbs_sql, chains_sql, _TRIPLES_SQL),
+        args={"subject_func": subject_func, "object_func": object_func},
+        **frames)
+
+
 def triples_stage(kernel_out: DataFrame, subject_func: str = "^[nc]subj",
                   object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
                   chains: Optional[DataFrame] = None) -> DataFrame:
     """(subj, pred, obj) emission: role-tagged verb arguments joined back
-    to chain-canonical strings.  All joins are co-keyed on url, so with the
-    upstream url-hash partitioning they stay within the same shuffle
-    partitioning (AQE coalesces post-shuffle).  ``chains``: the chains
-    table of the same kernel output, already computed (run_pipeline
-    passes the written one); None aggregates it inside this plan."""
-    return triples_from_views(mentions_view(kernel_out), verbs_view(kernel_out),
-                              subject_func, object_func, chains=chains)
+    to chain-canonical strings, over the kernel table's mention and verb
+    rows.  ``chains``: the chains table of the same kernel output, already
+    computed (run_pipeline passes the written one); None aggregates it
+    inside this plan (streaming, the driver's flagship query)."""
+    return _triples(kernel_out.sparkSession, _KERNEL_MENTIONS, _KERNEL_VERBS,
+                    subject_func, object_func, chains, kernel=kernel_out)
 
 
 def triples_from_views(mentions: DataFrame, verbs: DataFrame,
                        subject_func: str = "^[nc]subj",
                        object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
                        chains: Optional[DataFrame] = None) -> DataFrame:
-    """triples_stage over already-exploded mentions/verbs views (the
-    driver-oracle entry point — same dataflow, input read back from the
+    """triples_stage over already-exploded mentions/verbs tables (the
+    driver-oracle entry point — same statement, input read back from the
     exported parquet instead of the live kernel)."""
-    if chains is None:
-        chains = chains_from_mentions(mentions)
-    canon = chains.select(
-        "url", "group_id", "canonical_text", F.col("entity").alias("chain_entity"))
-
-    args = (mentions
-            .withColumn("role",
-                        F.when(F.regexp_like("head_func", F.lit(subject_func)), "subj")
-                        .when(F.regexp_like("head_func", F.lit(object_func)), "obj"))
-            .filter(F.col("role").isNotNull())
-            .join(verbs, (mentions.url == verbs.url)
-                  & (mentions.head_parent == verbs.verb_id), "inner")
-            .drop(verbs.url)
-            .join(canon, ["url", "group_id"], "left"))
-
-    subj = args.filter(F.col("role") == "subj").select(
-        "url", "warc_ts", "verb_id", "verb_lemma",
-        F.col("canonical_text").alias("subj"),
-        F.col("group_id").alias("subj_group"),
-        F.col("chain_entity").alias("subj_entity"),
-        F.col("sent_num").alias("sent_num"),
-        F.col("mark_id").alias("subj_mark"))
-    obj = args.filter(F.col("role") == "obj").select(
-        "url", "verb_id",
-        F.col("canonical_text").alias("obj"),
-        F.col("group_id").alias("obj_group"),
-        F.col("chain_entity").alias("obj_entity"),
-        F.col("mark_id").alias("obj_mark"))
-
-    return (subj.join(obj, ["url", "verb_id"], "inner")
-            .filter(F.col("subj_mark") != F.col("obj_mark"))
-            .select("url", "warc_ts", "subj", F.col("verb_lemma").alias("pred"),
-                    "obj", "subj_group", "obj_group", "subj_entity", "obj_entity",
-                    "sent_num", "verb_id"))
+    return _triples(mentions.sparkSession, "SELECT * FROM {mentions}",
+                    "SELECT * FROM {verbs}", subject_func, object_func, chains,
+                    mentions=mentions, verbs=verbs)
 
 
 # ---------------------------------------------------------------------
