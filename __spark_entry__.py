@@ -93,8 +93,9 @@ def _ensure_kg_exports(spark: SparkSession, sf_dir: str) -> str:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: triples from the synthetic web corpus at sf0.001."""
-    from xrenner_spark.pipeline import triples_stage
-    return triples_stage(_kg_kernel_out(spark, _SF0001))
+    from xrenner_spark.pipeline import chains_stage, triples_stage
+    kernel_out = _kg_kernel_out(spark, _SF0001)
+    return triples_stage(kernel_out, chains=chains_stage(kernel_out))
 
 
 # ---------------------------------------------------------------------
@@ -106,10 +107,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xrenner_spark.pipeline import triples_from_views
+    from xrenner_spark.pipeline import chains_from_mentions, triples_from_views
     base = _ensure_kg_exports(spark, sf_dir)
-    return (triples_from_views(spark.read.parquet(base + "/mentions.parquet"),
-                               spark.read.parquet(base + "/verbs.parquet"))
+    mentions = spark.read.parquet(base + "/mentions.parquet")
+    return (triples_from_views(mentions, spark.read.parquet(base + "/verbs.parquet"),
+                               chains=chains_from_mentions(mentions))
             .select("url", "subj", "pred", "obj", "sent_num",
                     "subj_entity", "obj_entity"))
 
@@ -153,11 +155,11 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact fixed-point iterations, hash-compared against an unrolled
     DuckDB CTE chain over the same triples SQL."""
     from xrenner_spark.operators.graph import entity_pagerank
-    from xrenner_spark.pipeline import triples_from_views
+    from xrenner_spark.pipeline import chains_from_mentions, triples_from_views
     base = _ensure_kg_exports(spark, sf_dir)
-    triples = triples_from_views(
-        spark.read.parquet(base + "/mentions.parquet"),
-        spark.read.parquet(base + "/verbs.parquet"))
+    mentions = spark.read.parquet(base + "/mentions.parquet")
+    triples = triples_from_views(mentions, spark.read.parquet(base + "/verbs.parquet"),
+                                 chains=chains_from_mentions(mentions))
     return entity_pagerank(triples)
 
 

@@ -37,7 +37,7 @@ def _noop_write(df):
 def main():
     from xrenner_spark.session import get_spark
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage,
+    from xrenner_spark.pipeline import (chains_stage, fused_extract_kernel_stage,
                                         generate_pages, salt_by_url, triples_stage)
     from xrenner_spark.operators import (relational, dedup, similarity,
                                          textstats, ml_score, web)
@@ -67,7 +67,7 @@ def main():
         fused_extract_kernel_stage(
             salt_by_url(pages, max(CORES, 8)), bcast).write.parquet(wh + "/stage_kernel")
         kernel_out = spark.read.parquet(wh + "/stage_kernel")
-        triples = triples_stage(kernel_out)
+        triples = triples_stage(kernel_out, chains=chains_stage(kernel_out))
         n_triples = triples.count()
         kg_reps.append(round(time.perf_counter() - t0, 3))
         if _rep == 0:

@@ -58,7 +58,7 @@ def main():
 
     if mode == "phases":
         from xrenner_spark.lex import load_lex
-        from xrenner_spark.pipeline import (fused_extract_kernel_stage,
+        from xrenner_spark.pipeline import (chains_stage, fused_extract_kernel_stage,
                                             generate_pages, salt_by_url,
                                             triples_stage)
         n_docs = spark.read.parquet(SF_DIR + "/documents.parquet").count() * DOC_MULTIPLIER
@@ -74,7 +74,8 @@ def main():
             t1 = time.perf_counter()
             sc.setJobDescription("kg phase 2: read+triples+count")
             kernel_out = spark.read.parquet(wh + "/stage_kernel")
-            n_triples = triples_stage(kernel_out).count()
+            chains = chains_stage(kernel_out)
+            n_triples = triples_stage(kernel_out, chains=chains).count()
             t2 = time.perf_counter()
             out.setdefault("phase1_kernel_write", []).append(round(t1 - t0, 3))
             out.setdefault("phase2_triples", []).append(round(t2 - t1, 3))

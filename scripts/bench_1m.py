@@ -50,7 +50,7 @@ def canary(procs: int = 32, n: int = 2_000_000) -> float:
 
 def main():
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage,
+    from xrenner_spark.pipeline import (chains_stage, fused_extract_kernel_stage,
                                         generate_pages, salt_by_url,
                                         triples_stage)
     from xrenner_spark.session import get_spark
@@ -75,7 +75,8 @@ def main():
         t_kernel = round(time.perf_counter() - t0, 3)
         kernel_out = spark.read.parquet(wh + "/stage_kernel")
         t1 = time.perf_counter()
-        n_triples = triples_stage(kernel_out).count()
+        chains = chains_stage(kernel_out)
+        n_triples = triples_stage(kernel_out, chains=chains).count()
         t_triples = round(time.perf_counter() - t1, 3)
         wall = round(time.perf_counter() - t0, 3)
         from pyspark.sql import functions as F

@@ -92,6 +92,21 @@ def test_descendants_view_is_per_call(spark):
     assert got == {(1, 2), (2, 3), (1, 3)}
 
 
+def test_descendants_leaves_no_view(spark):
+    """A closure plan binds its tokens for the one statement: no temp
+    view is left in the session after the call."""
+    from pyspark.sql import Row
+    from xrenner_spark.pipeline import descendants_closure_sql
+    views = lambda: {r.viewName for r in spark.sql("SHOW VIEWS").collect()}
+    before = views()
+    toks = spark.createDataFrame([Row(url="a", tid=1, head=0),
+                                  Row(url="a", tid=2, head=1)])
+    plan = descendants_closure_sql(toks)
+    descendants_closure_sql(toks)
+    assert views() == before
+    assert {(r.ancestor, r.descendant) for r in plan.collect()} == {(1, 2)}
+
+
 def test_driver_memory_default_fits_host(spark):
     """The driver heap defaults to min(48g, half of physical memory), so
     a default session cannot be sized past the host it runs on;

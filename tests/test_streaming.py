@@ -21,7 +21,8 @@ def _drop_pages(spark, path, lo, hi):
 
 def test_stream_matches_batch(spark, tmp_path):
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import fused_extract_kernel_stage, triples_stage
+    from xrenner_spark.pipeline import (chains_stage, fused_extract_kernel_stage,
+                                        triples_stage)
     from xrenner_spark.streaming import stream_pipeline
 
     source = str(tmp_path / "pages_stream")
@@ -37,9 +38,9 @@ def test_stream_matches_batch(spark, tmp_path):
            for r in stream_triples.collect()}
 
     bcast = spark.sparkContext.broadcast(load_lex())
-    batch = triples_stage(
-        fused_extract_kernel_stage(
-            generate_pages(spark, 30, partitions=2), bcast).persist())
+    kernel = fused_extract_kernel_stage(
+        generate_pages(spark, 30, partitions=2), bcast).persist()
+    batch = triples_stage(kernel, chains=chains_stage(kernel))
     want = {(r.url, r.subj, r.pred, r.obj, r.sent_num) for r in batch.collect()}
     assert got == want
     assert len(got) > 0

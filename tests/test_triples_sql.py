@@ -2,7 +2,9 @@
 formulation, frozen here as the reference: the same multiset of rows on
 kernel output (clean and corrupt pages) and on a hand-built table of
 edge cases, with and without a precomputed chains table, and with
-role regexes that would break a statement built by string formatting."""
+role regexes that would break a statement built by string formatting.
+Without a written table the statement is given the unwritten
+chains_from_mentions plan, and the reference aggregates its own."""
 
 from collections import Counter
 
@@ -71,6 +73,13 @@ def _reference_triples(mentions, verbs, subject_func=SUBJECT_FUNC,
             .select("url", "warc_ts", "subj", F.col("verb_lemma").alias("pred"),
                     "obj", "subj_group", "obj_group", "subj_entity", "obj_entity",
                     "sent_num", "verb_id"))
+
+
+def _unwritten_chains(mentions, chains):
+    """The statement's chains for a case: the written table, or for
+    ``None`` chains_from_mentions over the same mentions, planned into the
+    triples query (the reference computes its own chains for ``None``)."""
+    return chains_from_mentions(mentions) if chains is None else chains
 
 
 def _rows(df):
@@ -189,7 +198,8 @@ def test_triples_statement_matches_reference_on_kernel_output(spark, kernel_out,
     cat = Catalog(spark, str(tmp_path))
     cat.write(chains_from_mentions(mentions), "chains")
     for chains in (None, cat.read("chains")):
-        new = triples_from_views(mentions, verbs, *funcs, chains=chains)
+        new = triples_from_views(mentions, verbs, *funcs,
+                                 chains=_unwritten_chains(mentions, chains))
         ref = _reference_triples(mentions, verbs, *funcs, chains=chains)
         _assert_same(new, ref)
     assert _rows(new)  # the corpus yields triples under both role sets
@@ -207,7 +217,8 @@ def test_triples_statement_matches_reference_on_edge_cases(spark, edge_views,
     # the written chains table lacks doc b's object group
     cat.write(chains_from_mentions(mentions).filter("group_id != 99"), "chains")
     for chains in (None, cat.read("chains")):
-        new = triples_from_views(mentions, verbs, *funcs, chains=chains)
+        new = triples_from_views(mentions, verbs, *funcs,
+                                 chains=_unwritten_chains(mentions, chains))
         ref = _reference_triples(mentions, verbs, *funcs, chains=chains)
         _assert_same(new, ref)
 

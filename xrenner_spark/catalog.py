@@ -97,10 +97,5 @@ class Catalog:
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self._path(name))
 
-    def append_lineage(self, stage: str, lineage_df: DataFrame):
-        """Per-partition lineage/metrics rows recorded alongside each stage
-        output (north rule: exact resume + per-partition lineage)."""
-        self.write(lineage_df, "_lineage_" + stage, mode="overwrite")
-
     def lineage(self, stage: str) -> DataFrame:
         return self.read("_lineage_" + stage)

@@ -1,26 +1,33 @@
 """The Spark KG-construction pipeline.
 
-Stage graph (SURVEY.md §3.4):
+Stage graph (SURVEY.md §3.4); every relational step is one spark.sql
+statement (input DataFrames as keyword arguments, values as parameter
+markers), so building a pass's plans costs a few py4j round trips each:
 
     pages (url, warc_ts, html, text, lang)
       │  salted repartition by xxhash64(url)            [defeats url skew]
       ▼
-    stage 1  extract: Spark SQL html→(text, conllu); byte-identity check
-      │  (Catalyst expressions only — no Python worker)
-      │  checkpoint: table stage_extract + _lineage_extract
+    stage 1  extract: html→(text, conllu), sha, byte-identity check, part_id
+      │  (_EXTRACT_SQL — Catalyst only, no Python worker)
+      │  checkpoint: table stage_extract + _lineage_extract (lineage_of)
       ▼
     stage 2  kernel: mapInArrow (_map_docs) per-document mention/entity/coref
       │  kernel (analyze_page); long format: one row per doc, mention and
-      │  verb + kernel_ms
-      │  checkpoint: table stage_kernel + _lineage_kernel
+      │  verb + kernel_ms.  dedup_kernel_inputs: one statement picks a
+      │  representative per payload, the kernel runs on it, one statement
+      │  joins its rows back to every copy
+      │  checkpoint: table stage_kernel + _lineage_kernel (lineage_of)
       ▼
-    stage 3  SQL, one spark.sql statement each:
-      │  chains: GROUP BY (url, group_id) with canonicalization aggregates
-      │  → chains table, written FIRST
+    stage 3  statements over mentions_view / verbs_view, the only
+      │  definition of the kernel table's 'm' / 'v' rows:
+      │  chains = chains_from_mentions(mentions_view): GROUP BY (url,
+      │  group_id) with canonicalization aggregates → chains table, written
+      │  FIRST
       ▼
-             triples: role-tagged arguments (mentions ⋈ verbs ⋈ written
-             chains) once, ONE exchange GROUP BY (url, verb_id) collecting
-             subjects and objects, pairs via inline/transform → triples table
+             triples = triples_from_views(mentions_view, verbs_view,
+             chains=<written chains>): role-tagged arguments once, ONE
+             exchange GROUP BY (url, verb_id) collecting subjects and
+             objects, pairs via inline/transform → triples table
 
 Every stage is resumable: if its checkpoint table exists (same run_dir),
 it is read back instead of recomputed, so a killed job restarted with the
@@ -164,44 +171,57 @@ def salt_by_url(df: DataFrame, partitions: int) -> DataFrame:
 # stage 1: html -> text/conllu extraction
 # ---------------------------------------------------------------------
 
-def _between(s, open_marker: str, close_marker: str):
-    """SQL twin of ``s[s.index(open) + len(open):s.index(close)]`` (the
-    slice corpus.py's Python extractors take): NULL where Python raises
-    (NULL ``s`` or a missing marker), "" where the close marker comes
-    first."""
-    start = F.locate(open_marker, s) + len(open_marker)   # 1-based; 0 = absent
-    end = F.locate(close_marker, s)
-    return F.when((start > len(open_marker)) & (end > 0), s.substr(start, end - start))
+#: stage 1: the html decoded once, each of corpus.py's four page markers
+#: located once, and the text and conllu slices cut only when all four are
+#: present ("" otherwise).  The markers are constants of the page format,
+#: written here as literals: as parameter markers they would cost 13 more
+#: py4j round trips per plan build
+_EXTRACT_SQL = """
+    WITH decoded AS (
+        SELECT url, warc_ts, lang, text AS page_text,
+               try_validate_utf8(CAST(html AS STRING)) AS page
+        FROM {pages}
+    ), located AS (
+        SELECT *, text_at > 0 AND text_end > 0 AND conllu_at > 0 AND conllu_end > 0
+                  AS found
+        FROM (SELECT *,
+                     locate('<article>', page) AS text_at,
+                     locate('</article>', page) AS text_end,
+                     locate('<!--@conllu\\n', page) AS conllu_at,
+                     locate('\\n-->', page) AS conllu_end
+              FROM decoded)
+    ), cut AS (
+        SELECT url, warc_ts, lang, page_text,
+               CASE WHEN found THEN substr(
+                   page, text_at + char_length('<article>'),
+                   text_end - text_at - char_length('<article>')) ELSE '' END AS text,
+               CASE WHEN found THEN substr(
+                   page, conllu_at + char_length('<!--@conllu\\n'),
+                   conllu_end - conllu_at - char_length('<!--@conllu\\n')) ELSE '' END
+                   AS conllu
+        FROM located
+    )
+    SELECT url, warc_ts, lang, text, conllu, sha2(text, 256) AS text_sha256,
+           -- the per-row invariant: extraction is byte-identical to the
+           -- table's text column; null-safe, so a NULL text is a violation
+           text <=> page_text AS byte_identical,
+           spark_partition_id() AS part_id
+    FROM cut"""
 
 
 def extract_stage(pages: DataFrame) -> DataFrame:
-    """Stage 1 as Catalyst expressions — no Python worker (each Python
-    task carries a fixed cost, see _reuse_zip_directories; the extraction
+    """Stage 1 as one SQL statement — no Python worker (each Python task
+    carries a fixed cost, see _reuse_zip_directories; the extraction
     itself is microseconds per page).
 
     Same result as corpus.py's Python extractors under the rule
     that any failure (NULL html, invalid UTF-8, a missing marker) gives
     ("", ""): the html is decoded once by ``try_validate_utf8``, which
     rejects exactly what a strict ``bytes.decode("utf8")`` rejects, and
-    ``locate``/``substring`` count code points as Python indexes do
+    ``locate``/``substr`` count code points as Python indexes do, a close
+    marker before its open marker giving "" as Python's slice does
     (differential test: tests/test_extract_sql.py)."""
-    decoded = pages.select(
-        "url", "warc_ts", "lang", F.col("text").alias("page_text"),
-        F.try_validate_utf8(F.col("html").cast("string")).alias("page"))
-    text = _between(F.col("page"), "<article>", "</article>")
-    conllu = _between(F.col("page"), "<!--@conllu\n", "\n-->")
-    both = text.isNotNull() & conllu.isNotNull()
-    cut = decoded.select(
-        "url", "warc_ts", "lang", "page_text",
-        F.when(both, text).otherwise("").alias("text"),
-        F.when(both, conllu).otherwise("").alias("conllu"))
-    return cut.select(
-        "url", "warc_ts", "lang", "text", "conllu",
-        F.sha2("text", 256).alias("text_sha256"),
-        # the per-row invariant: extraction is byte-identical to the
-        # table's text column; null-safe, so a NULL text is a violation
-        F.col("text").eqNullSafe(F.col("page_text")).alias("byte_identical"),
-        F.spark_partition_id().alias("part_id"))
+    return pages.sparkSession.sql(_EXTRACT_SQL, pages=pages)
 
 
 TOKENS_SCHEMA = T.StructType([
@@ -265,9 +285,6 @@ def child_info_sql(tokens: DataFrame) -> DataFrame:
                  F.count("*").alias("n_children")))
 
 
-_DESC_VIEW_SEQ = 0
-
-
 def descendants_closure_sql(tokens: DataFrame, max_depth: int = 12) -> DataFrame:
     """Transitive closure of the dependency child relation as ONE
     declarative ``WITH RECURSIVE`` query (the SQL analogue of reference
@@ -295,26 +312,18 @@ def descendants_closure_sql(tokens: DataFrame, max_depth: int = 12) -> DataFrame
     production path remains the kernel's per-document in-memory
     closure; this operator exists for SQL-side tree analytics and is
     oracle-checked against a DuckDB WITH RECURSIVE twin."""
-    spark = tokens.sparkSession
-    # per-call unique view name: a fixed name is session-global state
-    # that concurrent callers (or a caller's own later query) would
-    # silently rebind mid-plan
-    global _DESC_VIEW_SEQ
-    _DESC_VIEW_SEQ += 1
-    view = "_descendants_tokens_%d" % _DESC_VIEW_SEQ
-    tokens.createOrReplaceTempView(view)
-    return spark.sql("""
+    return tokens.sparkSession.sql("""
         WITH RECURSIVE closure(url, ancestor, descendant)
         MAX RECURSION LEVEL {max_level} AS (
             SELECT url, head AS ancestor, tid AS descendant
-            FROM {view} WHERE head > 0
+            FROM {tokens} WHERE head > 0
             UNION ALL
             SELECT c.url, c.ancestor, e.tid AS descendant
-            FROM closure c JOIN {view} e
+            FROM closure c JOIN {tokens} e
               ON c.url = e.url AND c.descendant = e.head
         )
         SELECT url, ancestor, descendant FROM closure
-    """.format(max_level=max_depth + 1, view=view))
+    """, max_level=int(max_depth) + 1, tokens=tokens)
 
 
 # ---------------------------------------------------------------------
@@ -465,6 +474,30 @@ def kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
     return _map_docs(extracted, lex_broadcast, KERNEL_SCHEMA, _emit_kernel)
 
 
+# dedup_kernel_stage's two statements share the extract rows keyed on the
+# exact kernel input: extracted text, conllu payload AND the byte-identity
+# flag (analyze_page rejects a violating copy, so it must not share a
+# representative with an intact one)
+_PAYLOAD_KEYED = """WITH keyed AS (
+    SELECT *, sha2(concat(text_sha256, sha2(conllu, 256),
+                          CAST(byte_identical AS STRING)), 256) AS payload_key
+    FROM {extracted})"""
+
+#: one representative per payload (the least url), named by payload_key
+_DEDUP_REPS_SQL = _PAYLOAD_KEYED + """
+    SELECT payload_key AS url, warc_ts, lang, conllu, text_sha256, byte_identical
+    FROM (SELECT *, row_number() OVER (PARTITION BY payload_key ORDER BY url) AS rn
+          FROM keyed)
+    WHERE rn = 1"""
+
+#: the representatives' kernel rows under every copy's url/warc_ts/lang
+_DEDUP_JOIN_BACK_SQL = _PAYLOAD_KEYED + """
+    SELECT %s
+    FROM {rep_rows} r JOIN keyed c ON r.url = c.payload_key""" % ", ".join(
+    ("c.`%s`" if name in ("url", "warc_ts", "lang") else "r.`%s`") % name
+    for name in _KERNEL_COLS)
+
+
 def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
     """Run the kernel ONCE per distinct page payload and join the rows
     back to every copy — the classic web-corpus lever (real crawls are
@@ -485,30 +518,15 @@ def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
     re-crawled-page case that a url-keyed join-back would cross-match;
     r5 advice).  Covered by test_pipeline_spark.
     """
-    from pyspark.sql import Window
-
-    # key on the exact kernel input: extracted text, conllu payload AND
-    # the byte-identity flag (analyze_page rejects a violating copy, so
-    # it must not share a representative with an intact one)
-    keyed = extracted.withColumn(
-        "payload_key",
-        F.sha2(F.concat(F.col("text_sha256"), F.sha2(F.col("conllu"), 256),
-                        F.col("byte_identical").cast("string")), 256))
-    w = Window.partitionBy("payload_key").orderBy("url")
-    reps = (keyed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
+    spark = extracted.sparkSession
+    reps = spark.sql(_DEDUP_REPS_SQL, extracted=extracted)
     # the kernel runs with payload_key AS the docname: the join-back is
     # then keyed on payload_key directly (unique per representative by
     # construction) instead of the representative's url, which is NOT
     # unique across payload groups when a url re-appears with changed
     # content
-    rep_in = reps.withColumn("url", F.col("payload_key")).drop("payload_key")
-    rep_rows = kernel_stage(rep_in, lex_broadcast)
-    rep_rows_keyed = (rep_rows.withColumnRenamed("url", "payload_key")
-                      .drop("warc_ts", "lang"))
-    copies = keyed.select("payload_key", "url", "warc_ts", "lang")
-    return (rep_rows_keyed.join(copies, "payload_key")
-            .select(*_KERNEL_COLS))
+    return spark.sql(_DEDUP_JOIN_BACK_SQL, extracted=extracted,
+                     rep_rows=kernel_stage(reps, lex_broadcast))
 
 
 def fused_extract_kernel_stage(pages: DataFrame, lex_broadcast) -> DataFrame:
@@ -583,47 +601,65 @@ def training_dump_stage(pages: DataFrame, lex_broadcast) -> DataFrame:
     return _map_docs(extract_stage(pages), lex_broadcast, DUMP_SCHEMA, emit)
 
 
+#: per-partition lineage of each checkpointed stage, by stage name
+_LINEAGE_SQL = {
+    "extract": """
+        SELECT part_id, count(*) AS rows_out, min(url) AS url_min, max(url) AS url_max,
+               sum(CASE WHEN NOT byte_identical THEN 1 ELSE 0 END)
+                   AS invariant_violations,
+               'extract' AS stage
+        FROM {stage_df}
+        GROUP BY part_id""",
+    "kernel": """
+        SELECT part_id, sum(CASE WHEN row_type = 'd' THEN 1 ELSE 0 END) AS rows_out,
+               min(url) AS url_min, max(url) AS url_max, sum(kernel_ms) AS wall_ms,
+               sum(CASE WHEN row_type = 'm' THEN 1 ELSE 0 END) AS mentions_out,
+               sum(CASE WHEN error != '' THEN 1 ELSE 0 END) AS errors,
+               'kernel' AS stage
+        FROM {stage_df}
+        GROUP BY part_id""",
+}
+
+
 def lineage_of(stage_df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition lineage/metrics rows (north rule)."""
-    if "row_type" in stage_df.columns:  # long-format kernel output
-        aggs = [
-            F.sum(F.when(F.col("row_type") == "d", 1).otherwise(0))
-            .alias("rows_out"),
-            F.min("url").alias("url_min"),
-            F.max("url").alias("url_max"),
-            F.sum("kernel_ms").alias("wall_ms"),
-            F.sum(F.when(F.col("row_type") == "m", 1).otherwise(0))
-            .alias("mentions_out"),
-            F.sum(F.when(F.col("error") != "", 1).otherwise(0)).alias("errors"),
-        ]
-        return (stage_df.groupBy("part_id").agg(*aggs)
-                .withColumn("stage", F.lit(stage)))
-    aggs = [
-        F.count("*").alias("rows_out"),
-        F.min("url").alias("url_min"),
-        F.max("url").alias("url_max"),
-    ]
-    if "byte_identical" in stage_df.columns:
-        aggs += [F.sum(F.when(~F.col("byte_identical"), 1).otherwise(0))
-                 .alias("invariant_violations")]
-    return (stage_df.groupBy("part_id")
-            .agg(*aggs)
-            .withColumn("stage", F.lit(stage)))
+    """Per-partition lineage/metrics rows (north rule) of the ``extract``
+    or ``kernel`` stage output."""
+    return stage_df.sparkSession.sql(_LINEAGE_SQL[stage], stage_df=stage_df)
 
 
 # ---------------------------------------------------------------------
 # stage 3: chains + triples as Spark SQL dataflow
 # ---------------------------------------------------------------------
 
-# Each stage-3 function is one spark.sql statement over the relations
-# ``mentions``, ``verbs`` and ``chains``, bound as CTEs: either the 'm'/'v'
-# rows of the one long-format kernel table or exploded tables given by the
-# caller.  Input DataFrames are passed as spark.sql keyword arguments
-# (PySpark registers and drops a temp view per DataFrame) and values as
-# parameter markers, never formatted into the text.
+# The views are the only definition of the kernel table's mention, verb
+# and doc rows; chains and triples are statements over mentions/verbs
+# tables, live views or exported ones.  spark.sql registers and drops a
+# temp view per DataFrame keyword argument.
 
-_KERNEL_MENTIONS = "SELECT * FROM {kernel} WHERE row_type = 'm'"
-_KERNEL_VERBS = "SELECT * FROM {kernel} WHERE row_type = 'v'"
+_MENTIONS_SQL = "SELECT url, warc_ts, %s FROM {kernel_out} WHERE row_type = 'm'" \
+    % ", ".join("`%s`" % name for name in _MENTION_FIELDS)
+_VERBS_SQL = "SELECT url, verb_id, verb_lemma FROM {kernel_out} WHERE row_type = 'v'"
+_DOCS_SQL = """
+    SELECT url, warc_ts, lang, part_id, text_sha256, n_sentences, n_tokens,
+           kernel_ms, error
+    FROM {kernel_out} WHERE row_type = 'd'"""
+
+
+def mentions_view(kernel_out: DataFrame) -> DataFrame:
+    """One row per mention (filter + prune of the long-format table —
+    only the referenced columns reach the checkpoint scan)."""
+    return kernel_out.sparkSession.sql(_MENTIONS_SQL, kernel_out=kernel_out)
+
+
+def verbs_view(kernel_out: DataFrame) -> DataFrame:
+    """One row per verb: (url, verb_id, verb_lemma)."""
+    return kernel_out.sparkSession.sql(_VERBS_SQL, kernel_out=kernel_out)
+
+
+def docs_view(kernel_out: DataFrame) -> DataFrame:
+    """One row per document: the metrics/lineage/error fields."""
+    return kernel_out.sparkSession.sql(_DOCS_SQL, kernel_out=kernel_out)
+
 
 #: chain aggregation with canonicalization over ``mentions`` (same rules
 #: as triples.canonical_mentions).  Orderings are total — the -end
@@ -642,7 +678,7 @@ _CHAINS_SQL = """
                count(*) AS n_mentions,
                min_by(entity, struct(start, `end`)) AS entity,
                collect_list(mark_id) AS mention_ids
-        FROM mentions
+        FROM {mentions}
         GROUP BY url, group_id)"""
 
 #: (subj, pred, obj) rows from ``mentions``, ``verbs`` and ``chains``:
@@ -650,15 +686,15 @@ _CHAINS_SQL = """
 #: per (url, verb_id) into subject and object lists — the one exchange —
 #: and one triple per (subject, object) pair of two different mentions
 _TRIPLES_SQL = """
-    args AS (
+    WITH args AS (
         SELECT m.url, m.warc_ts, m.sent_num, m.mark_id, m.group_id,
                v.verb_id, v.verb_lemma, c.canonical_text, c.entity AS chain_entity,
                CASE WHEN regexp_like(m.head_func, :subject_func) THEN 'subj'
                     WHEN regexp_like(m.head_func, :object_func) THEN 'obj'
                END AS role
-        FROM mentions m
-        JOIN verbs v ON m.url = v.url AND m.head_parent = v.verb_id
-        LEFT JOIN chains c ON m.url = c.url AND m.group_id = c.group_id
+        FROM {mentions} m
+        JOIN {verbs} v ON m.url = v.url AND m.head_parent = v.verb_id
+        LEFT JOIN {chains} c ON m.url = c.url AND m.group_id = c.group_id
     ), by_verb AS (
         SELECT url, verb_id,
                collect_list(struct(warc_ts, verb_lemma, canonical_text,
@@ -681,80 +717,40 @@ _TRIPLES_SQL = """
     FROM by_verb"""
 
 
-def chains_stage(kernel_out: DataFrame) -> DataFrame:
-    """Chain aggregation with canonicalization over the kernel table's
-    mention rows."""
-    return kernel_out.sparkSession.sql(
-        "WITH mentions AS (%s) %s" % (_KERNEL_MENTIONS, _CHAINS_SQL),
-        kernel=kernel_out)
-
-
 def chains_from_mentions(mentions: DataFrame) -> DataFrame:
-    """chains_stage over an already-exploded mentions table (also the
-    driver-oracle entry point: the DuckDB twin recomputes this aggregation
-    over the exported mentions parquet)."""
-    return mentions.sparkSession.sql(
-        "WITH mentions AS (SELECT * FROM {mentions}) %s" % _CHAINS_SQL,
-        mentions=mentions)
+    """Chain aggregation with canonicalization over a mentions table
+    (also the driver-oracle entry point: the DuckDB twin recomputes this
+    aggregation over the exported mentions parquet)."""
+    return mentions.sparkSession.sql(_CHAINS_SQL, mentions=mentions)
 
 
-def mentions_view(kernel_out: DataFrame) -> DataFrame:
-    """One row per mention (filter + prune of the long-format table —
-    only the referenced columns reach the checkpoint scan)."""
-    return (kernel_out.filter(F.col("row_type") == "m")
-            .select("url", "warc_ts", *_MENTION_FIELDS))
-
-
-def verbs_view(kernel_out: DataFrame) -> DataFrame:
-    return (kernel_out.filter(F.col("row_type") == "v")
-            .select("url", "verb_id", "verb_lemma"))
-
-
-def docs_view(kernel_out: DataFrame) -> DataFrame:
-    """One row per document: the metrics/lineage/error fields."""
-    return (kernel_out.filter(F.col("row_type") == "d")
-            .select("url", "warc_ts", "lang", "part_id", "text_sha256",
-                    "n_sentences", "n_tokens", "kernel_ms", "error"))
-
-
-def _triples(spark: SparkSession, mentions_sql: str, verbs_sql: str,
-             subject_func: str, object_func: str, chains: Optional[DataFrame],
-             **frames) -> DataFrame:
-    """_TRIPLES_SQL over the given mentions/verbs relations; ``chains``
-    None aggregates the chains inside the same statement."""
-    if chains is None:
-        chains_sql = _CHAINS_SQL
-    else:
-        chains_sql, frames["chains"] = "SELECT * FROM {chains}", chains
-    return spark.sql(
-        "WITH mentions AS (%s), verbs AS (%s), chains AS (%s), %s"
-        % (mentions_sql, verbs_sql, chains_sql, _TRIPLES_SQL),
-        args={"subject_func": subject_func, "object_func": object_func},
-        **frames)
-
-
-def triples_stage(kernel_out: DataFrame, subject_func: str = "^[nc]subj",
-                  object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
-                  chains: Optional[DataFrame] = None) -> DataFrame:
-    """(subj, pred, obj) emission: role-tagged verb arguments joined back
-    to chain-canonical strings, over the kernel table's mention and verb
-    rows.  ``chains``: the chains table of the same kernel output, already
-    computed (run_pipeline passes the written one); None aggregates it
-    inside this plan (streaming, the driver's flagship query)."""
-    return _triples(kernel_out.sparkSession, _KERNEL_MENTIONS, _KERNEL_VERBS,
-                    subject_func, object_func, chains, kernel=kernel_out)
+def chains_stage(kernel_out: DataFrame) -> DataFrame:
+    """chains_from_mentions over the kernel table's mention rows."""
+    return chains_from_mentions(mentions_view(kernel_out))
 
 
 def triples_from_views(mentions: DataFrame, verbs: DataFrame,
                        subject_func: str = "^[nc]subj",
                        object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
-                       chains: Optional[DataFrame] = None) -> DataFrame:
-    """triples_stage over already-exploded mentions/verbs tables (the
-    driver-oracle entry point — same statement, input read back from the
-    exported parquet instead of the live kernel)."""
-    return _triples(mentions.sparkSession, "SELECT * FROM {mentions}",
-                    "SELECT * FROM {verbs}", subject_func, object_func, chains,
-                    mentions=mentions, verbs=verbs)
+                       *, chains: DataFrame) -> DataFrame:
+    """(subj, pred, obj) emission: role-tagged verb arguments joined back
+    to chain-canonical strings.  ``chains``: the chains of the same
+    mentions — a written table (run_pipeline), or chains_from_mentions
+    over them, which plans the aggregation into this query (streaming,
+    the driver queries)."""
+    return mentions.sparkSession.sql(
+        _TRIPLES_SQL, args={"subject_func": subject_func, "object_func": object_func},
+        mentions=mentions, verbs=verbs, chains=chains)
+
+
+def triples_stage(kernel_out: DataFrame, subject_func: str = "^[nc]subj",
+                  object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
+                  *, chains: DataFrame) -> DataFrame:
+    """triples_from_views over the kernel table's mention and verb rows;
+    ``chains``: the written chains table, or chains_stage of the same
+    kernel table."""
+    return triples_from_views(mentions_view(kernel_out), verbs_view(kernel_out),
+                              subject_func, object_func, chains=chains)
 
 
 # ---------------------------------------------------------------------
@@ -773,7 +769,7 @@ def _checkpoint(cat: Catalog, stage: str, schema: T.StructType, resume: bool,
         cat.write(build(), name)
     out = cat.read(name, schema)
     if fresh or not cat.exists("_lineage_" + stage):
-        cat.append_lineage(stage, lineage_of(out, stage))
+        cat.write(lineage_of(out, stage), "_lineage_" + stage)
     return out
 
 

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .lex import load_lex
-from .pipeline import PAGES_SCHEMA, fused_extract_kernel_stage, triples_stage
+from .pipeline import (PAGES_SCHEMA, chains_stage, fused_extract_kernel_stage,
+                       triples_stage)
 
 
 def read_pages_stream(spark: SparkSession, source_dir: str,
@@ -58,7 +59,7 @@ def stream_pipeline(spark: SparkSession, source_dir: str, out_dir: str,
         batch_df = batch_df.persist()
         try:
             batch_df.count()  # materialize before the 3-way join fan-out
-            (triples_stage(batch_df)
+            (triples_stage(batch_df, chains=chains_stage(batch_df))
              .withColumn("batch_id", F.lit(batch_id))
              .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
