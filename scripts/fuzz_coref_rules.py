@@ -24,10 +24,11 @@ maxsplit=1 and accept.  Values containing ``;`` or ``&`` are impossible
 by construction (rule/constraint splitting happens first) and invalid
 regexes fail both loaders identically.
 
-Mismatches are retried against heap-perturbed reference re-runs (the
-reference's antecedent score-tie nondeterminism — see fuzz_kernel.py);
-a case counts as divergent only if the reference never produces our
-reading.
+Documents are self_diff.py's random dependency forests.  Mismatches are
+retried against heap-perturbed reference re-runs (the reference's
+antecedent score-tie nondeterminism — see
+``git show 5ce8ac4:scripts/fuzz_kernel.py``); a case counts as divergent
+only if the reference never produces our reading.
 
 Usage: python scripts/fuzz_coref_rules.py [n_configs] [seed] [--fixture]
   --fixture writes the first 25 link-producing cases (with the
@@ -234,7 +235,7 @@ def main():
 
     from xrenner_spark import load_lex
     from xrenner_spark.kernel import analyze_document
-    from fuzz_kernel import load_vocab, rand_doc
+    from self_diff import forest_doc as rand_doc, vocabulary as load_vocab
 
     args = [a for a in sys.argv[1:] if a != "--fixture"]
     write_fixture = "--fixture" in sys.argv

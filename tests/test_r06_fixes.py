@@ -83,7 +83,8 @@ def test_whitespace_only_edge_lines_block_alignment():
     """clean.strip() emulation: leading/trailing whitespace-only lines
     must not open blocks or shift sentence surface strings (r6 review
     fix; differential fuzz vs the round-start parser: 0/20,000 docs
-    mismatch, scripts/fuzz_read_document.py)."""
+    mismatch, ``git show 5ce8ac4:scripts/fuzz_read_document.py``; the
+    same documents are scripts/self_diff.py's ``whitespace`` family)."""
     body = ("1\tHe\the\tPRON\tPRON\t_\t2\tnsubj\t_\t_\n"
             "2\tliked\tlike\tVERB\tVERB\t_\t0\troot\t_\t_\n"
             "3\tit\tit\tPRON\tPRON\t_\t2\tobj\t_\t_\n")

@@ -1,8 +1,7 @@
 """The triples and chains statements against their earlier Column-API
 formulation, frozen here as the reference: the same multiset of rows on
 kernel output (clean and corrupt pages) and on a hand-built table of
-edge cases, with and without a precomputed chains table, and with
-role regexes that would break a statement built by string formatting.
+edge cases, with and without a precomputed chains table.
 Without a written table the statement is given the unwritten
 chains_from_mentions plan, and the reference aggregates its own."""
 
@@ -40,16 +39,15 @@ def _reference_chains(mentions):
     )
 
 
-def _reference_triples(mentions, verbs, subject_func=SUBJECT_FUNC,
-                       object_func=OBJECT_FUNC, chains=None):
+def _reference_triples(mentions, verbs, chains=None):
     if chains is None:
         chains = _reference_chains(mentions)
     canon = chains.select(
         "url", "group_id", "canonical_text", F.col("entity").alias("chain_entity"))
     args = (mentions
             .withColumn("role",
-                        F.when(F.regexp_like("head_func", F.lit(subject_func)), "subj")
-                        .when(F.regexp_like("head_func", F.lit(object_func)), "obj"))
+                        F.when(F.regexp_like("head_func", F.lit(SUBJECT_FUNC)), "subj")
+                        .when(F.regexp_like("head_func", F.lit(OBJECT_FUNC)), "obj"))
             .filter(F.col("role").isNotNull())
             .join(verbs, (mentions.url == verbs.url)
                   & (mentions.head_parent == verbs.verb_id), "inner")
@@ -145,7 +143,8 @@ _EDGE_VERBS = T.StructType([
 def edge_views(spark):
     """Two subjects and two objects on one verb; a verb with subjects
     only; a mention whose group the given chains table lacks; a NULL
-    mark_id; role functions with a quote and a pipe in them."""
+    mark_id; functions with a quote and a pipe in them that neither role
+    pattern selects."""
     m = [
         # doc a, verb 5: 2 subjects x 2 objects (one object shares the
         # first subject's group, so it is a different mention, same chain)
@@ -165,7 +164,7 @@ def edge_views(spark):
         _mention("c", "5", 3, "iobj", 2, "nobody", start=5),
         _mention("c", None, 3, "obj", 2, "nothing", start=6),
         _mention("c", "7", 4, "nsubj", 2, "Max", form="proper", start=7),
-        # functions only the quoted/piped overrides select
+        # functions neither role pattern selects
         _mention("d", "1", 1, "it's|subj", 3, "Ann", form="proper"),
         _mention("d", "2", 2, "o'bj", 3, "the key", start=2),
         _mention("d", "3", 3, "obj", 3, "a door", start=3),
@@ -187,39 +186,30 @@ def test_chains_statement_matches_reference(kernel_out, edge_views):
         assert _chains_rows(new) == _chains_rows(ref)
 
 
-@pytest.mark.parametrize("funcs", [
-    (SUBJECT_FUNC, OBJECT_FUNC),
-    ("^(it's\\|subj|[nc]subj)", "^(o'bj|obj|dobj)$"),
-])
 def test_triples_statement_matches_reference_on_kernel_output(spark, kernel_out,
-                                                             tmp_path, funcs):
+                                                             tmp_path):
     kernel = kernel_out
     mentions, verbs = mentions_view(kernel), verbs_view(kernel)
     cat = Catalog(spark, str(tmp_path))
     cat.write(chains_from_mentions(mentions), "chains")
     for chains in (None, cat.read("chains")):
-        new = triples_from_views(mentions, verbs, *funcs,
+        new = triples_from_views(mentions, verbs,
                                  chains=_unwritten_chains(mentions, chains))
-        ref = _reference_triples(mentions, verbs, *funcs, chains=chains)
+        ref = _reference_triples(mentions, verbs, chains=chains)
         _assert_same(new, ref)
-    assert _rows(new)  # the corpus yields triples under both role sets
+    assert _rows(new)  # the corpus yields triples
 
 
-@pytest.mark.parametrize("funcs", [
-    (SUBJECT_FUNC, OBJECT_FUNC),
-    ("^(it's\\|subj|[nc]subj)", "^(o'bj|obj|dobj)$"),
-    ("'", "|"),
-])
 def test_triples_statement_matches_reference_on_edge_cases(spark, edge_views,
-                                                           tmp_path, funcs):
+                                                           tmp_path):
     mentions, verbs = edge_views
     cat = Catalog(spark, str(tmp_path))
     # the written chains table lacks doc b's object group
     cat.write(chains_from_mentions(mentions).filter("group_id != 99"), "chains")
     for chains in (None, cat.read("chains")):
-        new = triples_from_views(mentions, verbs, *funcs,
+        new = triples_from_views(mentions, verbs,
                                  chains=_unwritten_chains(mentions, chains))
-        ref = _reference_triples(mentions, verbs, *funcs, chains=chains)
+        ref = _reference_triples(mentions, verbs, chains=chains)
         _assert_same(new, ref)
 
 

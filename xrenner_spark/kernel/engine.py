@@ -56,7 +56,10 @@ def analyze_document_windowed(doc_id: str, conllu_text: str, lex,
     spanning > ``overlap`` sentences, the ``last[]`` register (unused by
     shipped models), and the verbal-event antecedent scan over the whole
     document prefix — see COVERAGE.md "giant-document bound" for the
-    proof and scripts/parity_sweep_adversarial.py for the measured rate.
+    proof and the rate measured against the reference engine
+    (``git show 5ce8ac4:scripts/parity_sweep_adversarial.py``);
+    scripts/self_diff.py's ``windowed`` family holds the stitcher to
+    that commit's.
     This bounds worst-case task latency and memory on pathological pages
     (SURVEY.md §7.2 risk 3: the one place salting cannot fix skew,
     because one document is one kernel call).  Documents at or under the

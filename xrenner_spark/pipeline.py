@@ -56,7 +56,7 @@ from pyspark.sql import types as T
 from .catalog import Catalog
 from .kernel import analyze_document_windowed
 from .lex import load_lex
-from .triples import parse_verbs
+from .triples import OBJECT_FUNC, SUBJECT_FUNC_DEFAULT, parse_verbs
 
 # ---------------------------------------------------------------------
 # schemas
@@ -684,13 +684,14 @@ _CHAINS_SQL = """
 #: (subj, pred, obj) rows from ``mentions``, ``verbs`` and ``chains``:
 #: the role-tagged arguments (mentions ⋈ verbs ⋈ chains) once, grouped
 #: per (url, verb_id) into subject and object lists — the one exchange —
-#: and one triple per (subject, object) pair of two different mentions
+#: and one triple per (subject, object) pair of two different mentions.
+#: The role regexes are triples.py's, the ones extract_triples applies
 _TRIPLES_SQL = """
     WITH args AS (
         SELECT m.url, m.warc_ts, m.sent_num, m.mark_id, m.group_id,
                v.verb_id, v.verb_lemma, c.canonical_text, c.entity AS chain_entity,
-               CASE WHEN regexp_like(m.head_func, :subject_func) THEN 'subj'
-                    WHEN regexp_like(m.head_func, :object_func) THEN 'obj'
+               CASE WHEN regexp_like(m.head_func, '%s') THEN 'subj'
+                    WHEN regexp_like(m.head_func, '%s') THEN 'obj'
                END AS role
         FROM {mentions} m
         JOIN {verbs} v ON m.url = v.url AND m.head_parent = v.verb_id
@@ -714,7 +715,7 @@ _TRIPLES_SQL = """
             'subj_group', x.group_id, 'obj_group', y.group_id,
             'subj_entity', x.chain_entity, 'obj_entity', y.chain_entity,
             'sent_num', x.sent_num, 'verb_id', verb_id)))))
-    FROM by_verb"""
+    FROM by_verb""" % (SUBJECT_FUNC_DEFAULT.pattern, OBJECT_FUNC.pattern)
 
 
 def chains_from_mentions(mentions: DataFrame) -> DataFrame:
@@ -729,28 +730,23 @@ def chains_stage(kernel_out: DataFrame) -> DataFrame:
     return chains_from_mentions(mentions_view(kernel_out))
 
 
-def triples_from_views(mentions: DataFrame, verbs: DataFrame,
-                       subject_func: str = "^[nc]subj",
-                       object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
-                       *, chains: DataFrame) -> DataFrame:
+def triples_from_views(mentions: DataFrame, verbs: DataFrame, *,
+                       chains: DataFrame) -> DataFrame:
     """(subj, pred, obj) emission: role-tagged verb arguments joined back
     to chain-canonical strings.  ``chains``: the chains of the same
     mentions — a written table (run_pipeline), or chains_from_mentions
     over them, which plans the aggregation into this query (streaming,
     the driver queries)."""
-    return mentions.sparkSession.sql(
-        _TRIPLES_SQL, args={"subject_func": subject_func, "object_func": object_func},
-        mentions=mentions, verbs=verbs, chains=chains)
+    return mentions.sparkSession.sql(_TRIPLES_SQL, mentions=mentions,
+                                     verbs=verbs, chains=chains)
 
 
-def triples_stage(kernel_out: DataFrame, subject_func: str = "^[nc]subj",
-                  object_func: str = "^(obj|dobj|iobj|obl|nmod)$",
-                  *, chains: DataFrame) -> DataFrame:
+def triples_stage(kernel_out: DataFrame, *, chains: DataFrame) -> DataFrame:
     """triples_from_views over the kernel table's mention and verb rows;
     ``chains``: the written chains table, or chains_stage of the same
     kernel table."""
     return triples_from_views(mentions_view(kernel_out), verbs_view(kernel_out),
-                              subject_func, object_func, chains=chains)
+                              chains=chains)
 
 
 # ---------------------------------------------------------------------

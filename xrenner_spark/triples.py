@@ -11,16 +11,17 @@ emitted triples" well-defined:
                  the reference itself uses for verbal antecedents,
                  xrenner_xrenner.py:240-241);
 2. arguments   = final (post-postprocessing) markables whose head token
-                 depends on that verb with func matching ``subject_func``
-                 (subj) or an object function (obj) — conj-propagated
-                 functions mean coordinated subjects each yield a triple;
+                 depends on that verb with func matching
+                 ``SUBJECT_FUNC_DEFAULT`` (subj) or ``OBJECT_FUNC`` (obj) —
+                 conj-propagated functions mean coordinated subjects each
+                 yield a triple;
 3. canonical   = per chain: core_text of the first proper-form member,
                  else the longest non-pronoun member, else the mention;
 4. triple      = (canonical(subj.group), verb lemma, canonical(obj.group))
                  with provenance (doc, sent_num, groups, entities).
 
-These rules are shared by the Spark SQL stage (pipeline.py) and the
-pytest parity harness.
+These rules are shared by the Spark SQL stage (pipeline.py, whose
+statement embeds both role patterns) and the pytest parity harness.
 """
 
 from __future__ import annotations
@@ -28,7 +29,8 @@ from __future__ import annotations
 import re
 from typing import Dict, Iterable, List, Tuple
 
-#: object-side dependency functions (subject side comes from config)
+#: role dependency functions of a verb's arguments, fixed: the subject
+#: pattern equals models/web's ``subject_func`` but is not read from it
 OBJECT_FUNC = re.compile(r"^(obj|dobj|iobj|obl|nmod)$")
 SUBJECT_FUNC_DEFAULT = re.compile(r"^[nc]subj")
 VERB_POS_DEFAULT = re.compile(r"^VERB$")
