@@ -34,9 +34,11 @@ _KERNEL_OUT_CACHE: dict = {}
 
 def _kg_kernel_out(spark: SparkSession, sf_dir: str):
     """Kernel output for the kg_* queries, persisted + eagerly materialized
-    (the triples stage derives three co-keyed views, which would otherwise
-    race-recompute the kernel) and memoized per sf_dir so consecutive kg
-    queries in one session share a single cached copy."""
+    (kg_triples reads it through the mention and verb views and again
+    through the chains aggregation planned into the same statement, and
+    the exports read it once per view, so an unpersisted plan would rerun
+    the kernel per scan) and memoized per sf_dir so consecutive kg queries in one
+    session share a single cached copy."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _KERNEL_OUT_CACHE:
         out = _KERNEL_OUT_CACHE[key]
@@ -47,13 +49,13 @@ def _kg_kernel_out(spark: SparkSession, sf_dir: str):
             out.count()
         return out
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage,
-                                        generate_pages, salt_by_url)
+    from xrenner_spark.pipeline import (extract_stage, generate_pages,
+                                        kernel_stage, salt_by_url)
     n = _n_docs(spark, sf_dir)
     partitions = max(spark.sparkContext.defaultParallelism, 8)
     pages = generate_pages(spark, n, partitions=partitions)
     bcast = spark.sparkContext.broadcast(load_lex())
-    out = fused_extract_kernel_stage(salt_by_url(pages, partitions), bcast).persist()
+    out = kernel_stage(extract_stage(salt_by_url(pages, partitions)), bcast).persist()
     out.count()
     _KERNEL_OUT_CACHE[key] = out
     return out
@@ -227,15 +229,15 @@ def kg_mentions_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scripts/make_ref_mentions_seq.py; 211 of the 500 docs diverge from
     the stock model, so the sequencer demonstrably changes output)."""
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage,
-                                        generate_pages, mentions_view,
+    from xrenner_spark.pipeline import (extract_stage, generate_pages,
+                                        kernel_stage, mentions_view,
                                         salt_by_url)
     n = _n_docs(spark, sf_dir)
     seq_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "xrenner_spark", "models", "web_seq")
     bcast = spark.sparkContext.broadcast(load_lex(seq_dir))
     pages = salt_by_url(generate_pages(spark, n, partitions=8), 8)
-    return (mentions_view(fused_extract_kernel_stage(pages, bcast))
+    return (mentions_view(kernel_stage(extract_stage(pages), bcast))
             .select("url", "mark_id", "text", "entity", "agree", "form",
                     "coref_type", "group_id", "sent_num"))
 

@@ -1,17 +1,15 @@
 #!/usr/bin/env python
-"""Round-6 optimization harness (bench.py is FROZEN; this file carries the
-extra measurements the optimization guide asks for):
+"""Operator-query measurements beside bench.py (the kg_pipeline wall is
+split by layer by ``perfbench/run.py --trace 1``, from run_pipeline):
 
-  phases  — split the kg_pipeline wall into generate+kernel+write vs
-            read-back+triples (job-description labelled)
   plans   — dump .explain("formatted") for every bench operator query
             to plans/r06/<name>_<tag>.txt
   ops     — noop-sink best-of-N timing for the operator queries only
             (skips the kg pipeline for fast A/B iteration)
 
-Usage: python bench_extra.py phases|plans <tag>|ops [names...]
+Usage: python bench_extra.py plans <tag>|ops [names...]
 """
-import json, os, shutil, sys, tempfile, time
+import json, os, sys, time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -19,7 +17,6 @@ from xrenner_spark.session import default_cores  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CORES = default_cores()
-DOC_MULTIPLIER = int(os.environ.get("SPARK_GRAFT_DOC_MULT", "10"))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "2"))
 
 
@@ -56,34 +53,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    if mode == "phases":
-        from xrenner_spark.lex import load_lex
-        from xrenner_spark.pipeline import (chains_stage, fused_extract_kernel_stage,
-                                            generate_pages, salt_by_url,
-                                            triples_stage)
-        n_docs = spark.read.parquet(SF_DIR + "/documents.parquet").count() * DOC_MULTIPLIER
-        out = {}
-        for rep in range(REPS):
-            wh = tempfile.mkdtemp(prefix="xkg_phase_")
-            sc.setJobDescription("kg phase 1: generate+kernel+write")
-            t0 = time.perf_counter()
-            pages = generate_pages(spark, n_docs, partitions=max(CORES, 8))
-            bcast = sc.broadcast(load_lex())
-            fused_extract_kernel_stage(
-                salt_by_url(pages, max(CORES, 8)), bcast).write.parquet(wh + "/stage_kernel")
-            t1 = time.perf_counter()
-            sc.setJobDescription("kg phase 2: read+triples+count")
-            kernel_out = spark.read.parquet(wh + "/stage_kernel")
-            chains = chains_stage(kernel_out)
-            n_triples = triples_stage(kernel_out, chains=chains).count()
-            t2 = time.perf_counter()
-            out.setdefault("phase1_kernel_write", []).append(round(t1 - t0, 3))
-            out.setdefault("phase2_triples", []).append(round(t2 - t1, 3))
-            out["n_triples"] = n_triples
-            shutil.rmtree(wh, ignore_errors=True)
-            spark._jvm.System.gc()
-        print(json.dumps(out))
-    elif mode == "plans":
+    if mode == "plans":
         tag = sys.argv[2] if len(sys.argv) > 2 else "before"
         names = sys.argv[3:]
         ops = get_ops()

@@ -50,9 +50,9 @@ def canary(procs: int = 32, n: int = 2_000_000) -> float:
 
 def main():
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (chains_stage, fused_extract_kernel_stage,
-                                        generate_pages, salt_by_url,
-                                        triples_stage)
+    from xrenner_spark.pipeline import (chains_stage, extract_stage,
+                                        generate_pages, kernel_stage,
+                                        salt_by_url, triples_stage)
     from xrenner_spark.session import get_spark
 
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
@@ -69,8 +69,8 @@ def main():
         t0 = time.perf_counter()
         pages = generate_pages(spark, n_docs, partitions=partitions)
         bcast = spark.sparkContext.broadcast(load_lex())
-        fused_extract_kernel_stage(
-            salt_by_url(pages, partitions), bcast
+        kernel_stage(
+            extract_stage(salt_by_url(pages, partitions)), bcast
         ).write.parquet(wh + "/stage_kernel")
         t_kernel = round(time.perf_counter() - t0, 3)
         kernel_out = spark.read.parquet(wh + "/stage_kernel")

@@ -24,8 +24,8 @@ sys.path.insert(0, REPO)
 
 def measure(model_dir, n_docs, cores):
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (fused_extract_kernel_stage,
-                                        generate_pages, salt_by_url)
+    from xrenner_spark.pipeline import (extract_stage, generate_pages,
+                                        kernel_stage, salt_by_url)
     from xrenner_spark.session import get_spark
 
     t0 = time.time()
@@ -38,7 +38,7 @@ def measure(model_dir, n_docs, cores):
     bcast = spark.sparkContext.broadcast(lex)
     pages = salt_by_url(generate_pages(spark, n_docs, partitions=cores), cores)
     t0 = time.time()
-    out = fused_extract_kernel_stage(pages, bcast)
+    out = kernel_stage(extract_stage(pages), bcast)
     n_mentions = out.filter("row_type = 'm'").count()
     wall = time.time() - t0
     spark.stop()

@@ -7,6 +7,8 @@ import importlib.util
 import inspect
 import os
 
+import pytest
+
 from xrenner_spark import pipeline
 
 PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -36,3 +38,40 @@ def test_workload_kwargs_bind_to_run_pipeline(monkeypatch):
     assert workloads.RUN_KWARGS
     for name, kwargs in workloads.RUN_KWARGS.items():
         signature.bind(None, None, "warehouse", **kwargs)  # TypeError if not
+
+
+@pytest.mark.parametrize("dedup", [False, True])
+def test_traced_functions_are_called_through_the_module(spark, tmp_path,
+                                                        monkeypatch, dedup):
+    """perfbench's traced pass wraps these functions by module attribute
+    and maps Catalog.write's table names to spans: a pass that inlined a
+    stage, called one by another name, or renamed a table would drop a
+    span without failing the run."""
+    from xrenner_spark.catalog import Catalog
+    layers = _load("layers", monkeypatch)
+    called, written = [], []
+
+    def recording(name, fn):
+        def wrapper(*args, **kwargs):
+            called.append(name)
+            return fn(*args, **kwargs)
+        return wrapper
+
+    for name in tuple(layers.PLAN_FUNCTIONS) + ("load_lex",):
+        monkeypatch.setattr(pipeline, name, recording(name, getattr(pipeline, name)))
+    orig_write = Catalog.write
+
+    def recording_write(self, df, name, *args, **kwargs):
+        written.append(name)
+        return orig_write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "write", recording_write)
+    pipeline.run_pipeline(spark, pipeline.generate_pages(spark, 20, partitions=2),
+                          str(tmp_path / "wh"), partitions=2, resume=False,
+                          dedup_kernel_inputs=dedup)
+
+    expected = set(layers.PLAN_FUNCTIONS) | {"load_lex"}
+    if not dedup:
+        expected.discard("dedup_kernel_stage")
+    assert set(called) == expected
+    assert sorted(written) == sorted(layers.PIPELINE_SPANS)

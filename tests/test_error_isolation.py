@@ -5,14 +5,14 @@ output: 'd' doc rows carry metrics/errors, 'm' rows are mentions)."""
 
 from xrenner_spark.catalog import Catalog
 from xrenner_spark.lex import load_lex
-from xrenner_spark.pipeline import (docs_view, fused_extract_kernel_stage,
+from xrenner_spark.pipeline import (docs_view, extract_stage, kernel_stage,
                                     run_pipeline)
 
 
 def test_corrupt_pages_are_isolated(spark, corrupt_pages):
     pages, bad_urls = corrupt_pages()
     bcast = spark.sparkContext.broadcast(load_lex())
-    out = fused_extract_kernel_stage(pages, bcast).collect()
+    out = kernel_stage(extract_stage(pages), bcast).collect()
     docs = [r for r in out if r.row_type == "d"]
     assert len(docs) == 10
     errors = {r.url: r.error for r in docs if r.error != ""}

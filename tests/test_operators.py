@@ -181,13 +181,12 @@ def test_model_bootstrap_roundtrip(spark, tmp_path):
     from xrenner_spark.operators.model_stats import (model_entity_deps,
                                                      model_freqs, model_hasa,
                                                      write_model_tables)
-    from xrenner_spark.pipeline import (extract_stage,
-                                        fused_extract_kernel_stage,
-                                        generate_pages, mentions_view,
+    from xrenner_spark.pipeline import (extract_stage, generate_pages,
+                                        kernel_stage, mentions_view,
                                         salt_by_url, tokens_stage)
     pages = generate_pages(spark, 60, partitions=4)
     bcast = spark.sparkContext.broadcast(load_lex())
-    kernel_out = fused_extract_kernel_stage(salt_by_url(pages, 4), bcast)
+    kernel_out = kernel_stage(extract_stage(salt_by_url(pages, 4)), bcast)
     kernel_out = kernel_out.persist()
     kernel_out.count()
     mentions = mentions_view(kernel_out)

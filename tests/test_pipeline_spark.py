@@ -12,8 +12,8 @@ from xrenner_spark import load_lex
 from xrenner_spark.catalog import Catalog
 from xrenner_spark.corpus import build_document
 from xrenner_spark.kernel import analyze_document
-from xrenner_spark.pipeline import (docs_view, fused_extract_kernel_stage,
-                                    generate_pages, run_pipeline)
+from xrenner_spark.pipeline import (docs_view, extract_stage, generate_pages,
+                                    kernel_stage, run_pipeline)
 from xrenner_spark.triples import extract_triples, parse_verbs
 
 N_DOCS = 40
@@ -123,14 +123,14 @@ def test_resume_after_losing_lineage(spark, warehouse):
 
 
 def test_run_pipeline_kernel_matches_fused_stage(spark, corrupt_pages, tmp_path):
-    """run_pipeline's checkpointed kernel output and the fused stage are
-    one code path: row-exact equal (modulo the nondeterministic
+    """run_pipeline's checkpointed kernel output and kernel_stage over
+    extract_stage are one code path: row-exact equal (modulo the nondeterministic
     part_id/kernel_ms columns) on generated pages plus corrupt ones."""
     pages, bad_urls = corrupt_pages(n=120, partitions=4)
     pages = pages.persist()
     run_pipeline(spark, pages, str(tmp_path / "wh"), partitions=4)
     staged = Catalog(spark, str(tmp_path / "wh")).read("stage_kernel")
-    fused = fused_extract_kernel_stage(pages, spark.sparkContext.broadcast(load_lex()))
+    fused = kernel_stage(extract_stage(pages), spark.sparkContext.broadcast(load_lex()))
     a = staged.drop("part_id", "kernel_ms")
     b = fused.drop("part_id", "kernel_ms")
     assert a.schema == b.schema
@@ -165,7 +165,7 @@ def test_sinks_have_one_python_position(spark, corrupt_pages, tmp_path, monkeypa
     from xrenner_spark.pipeline import serialize_stage, training_dump_stage
     pages, _ = corrupt_pages()
     bcast = spark.sparkContext.broadcast(load_lex())
-    for sink in (fused_extract_kernel_stage(pages, bcast),
+    for sink in (kernel_stage(extract_stage(pages), bcast),
                  serialize_stage(pages, bcast, formats=("sgml",)),
                  training_dump_stage(pages, bcast)):
         assert _python_nodes(sink) == ["MapInArrow"]
@@ -246,6 +246,32 @@ def test_dedup_kernel_inputs_byte_identity_per_copy(spark, tmp_path):
     assert set(errors.values()) == {""}
     mention_urls = {r.url for r in kernel.filter(kernel.row_type == "m").collect()}
     assert mention_urls == {r["url"] for r in rows[:3]}
+
+
+def test_dedup_kernel_stage_plans_over_extract_stage(spark, corrupt_pages):
+    """dedup_kernel_stage composed directly on extract_stage (no
+    checkpoint read in between) plans and runs, and gives the plain
+    kernel's rows except part_id, kernel_ms and the docname in error
+    strings (the payload key instead of the url)."""
+    from pyspark.sql import functions as F
+    from xrenner_spark.pipeline import dedup_kernel_stage
+    pages, bad_urls = corrupt_pages(n=60, partitions=4)
+    copies = (pages.filter(F.xxhash64("url") % 4 == 0)
+              .withColumn("url", F.concat(F.lit("copy-"), "url")))
+    pages = pages.union(copies).persist()
+    bcast = spark.sparkContext.broadcast(load_lex())
+    extracted = extract_stage(pages)
+    plain = (kernel_stage(extracted, bcast)
+             .withColumn("error", F.expr("replace(error, url, '<doc>')")))
+    dedup = (dedup_kernel_stage(extracted, bcast)
+             .withColumn("error", F.regexp_replace("error", "[0-9a-f]{64}", "<doc>")))
+    a = plain.drop("part_id", "kernel_ms")
+    b = dedup.drop("part_id", "kernel_ms")
+    assert a.count() == b.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    errors = docs_view(dedup).filter("error != ''").collect()
+    assert {r.url for r in errors} >= bad_urls
+    pages.unpersist()
 
 
 def test_dedup_kernel_inputs_giant_doc(spark, tmp_path):

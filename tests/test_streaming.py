@@ -1,6 +1,8 @@
-"""Streaming wrapper: the availableNow stream over file drops must emit
-exactly the triples the batch pipeline computes, and restarting the
-stream must not re-emit processed batches (checkpointed source offsets)."""
+"""Streaming: the availableNow stream over file drops runs the batch
+pipeline's pass per micro-batch, so its tables must hold exactly what
+run_pipeline writes for the same pages; restarting the stream must not
+re-emit processed batches (checkpointed source offsets), and a replayed
+batch must overwrite only its own partition."""
 
 import os
 
@@ -19,64 +21,91 @@ def _drop_pages(spark, path, lo, hi):
     spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(path)
 
 
+#: every table a micro-batch's pass writes, each under batch_id=<id>
+_TABLES = ("triples", "chains", "stage_extract", "stage_kernel",
+           "_lineage_extract", "_lineage_kernel")
+#: how long a row took: differs between two runs of the same pages
+_TIMING_COLS = ("kernel_ms", "wall_ms")
+
+
+def _rows(df, drop=("batch_id", "part_id") + _TIMING_COLS):
+    """The rows of ``df`` without the ``drop`` columns, as a sorted
+    multiset; array cells sorted (chains.mention_ids is a collect_list)."""
+    df = df.drop(*drop)
+    return sorted((tuple(sorted(v) if isinstance(v, list) else v for v in r)
+                   for r in df.collect()), key=repr)
+
+
+def _stream_pages(spark, source):
+    from xrenner_spark.pipeline import PAGES_SCHEMA
+    return spark.read.schema(PAGES_SCHEMA).parquet(source)
+
+
 def test_stream_matches_batch(spark, tmp_path):
-    from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import (chains_stage, fused_extract_kernel_stage,
-                                        triples_stage)
+    """A stream over six page files (two micro-batches at four files per
+    trigger) writes, over all batches, the triples, chains and kernel
+    rows of one run_pipeline over the same pages."""
+    from xrenner_spark.pipeline import run_pipeline
     from xrenner_spark.streaming import stream_pipeline
 
     source = str(tmp_path / "pages_stream")
     out = str(tmp_path / "out")
-    _drop_pages(spark, source, 0, 15)
-    _drop_pages(spark, source, 15, 30)
+    for lo in range(0, 30, 5):
+        _drop_pages(spark, source, lo, lo + 5)
 
     query = stream_pipeline(spark, source, out)
     query.awaitTermination(300)
+    stream = lambda t: spark.read.parquet(os.path.join(out, t))
+    assert {r.batch_id for r in stream("stage_kernel").select("batch_id")
+            .distinct().collect()} == {0, 1}
 
-    stream_triples = spark.read.parquet(out + "/triples")
-    got = {(r.url, r.subj, r.pred, r.obj, r.sent_num)
-           for r in stream_triples.collect()}
-
-    bcast = spark.sparkContext.broadcast(load_lex())
-    kernel = fused_extract_kernel_stage(
-        generate_pages(spark, 30, partitions=2), bcast).persist()
-    batch = triples_stage(kernel, chains=chains_stage(kernel))
-    want = {(r.url, r.subj, r.pred, r.obj, r.sent_num) for r in batch.collect()}
-    assert got == want
-    assert len(got) > 0
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, _stream_pages(spark, source), wh, resume=False)
+    for table in ("triples", "chains", "stage_kernel"):
+        got = _rows(stream(table))
+        assert got == _rows(spark.read.parquet(os.path.join(wh, table))), table
+        assert got, table
+    n_triples = stream("triples").count()
 
     # restart with a new file drop: only the new docs are processed
     _drop_pages(spark, source, 30, 40)
     query2 = stream_pipeline(spark, source, out)
     query2.awaitTermination(300)
-    after = spark.read.parquet(out + "/triples")
+    after = stream("triples")
     batch_ids = {r.batch_id for r in after.select("batch_id").distinct().collect()}
-    n_after = after.count()
-    assert n_after > len(got)  # new triples appended
+    assert after.count() > n_triples  # new triples appended
     # stream restarted from checkpoint: earlier triples not duplicated
     dup_check = (after.groupBy("url", "subj", "pred", "obj", "sent_num")
                  .count().filter("count > 1").count())
     assert dup_check == 0
-    assert len(batch_ids) >= 2
+    assert batch_ids == {0, 1, 2}
 
 
 def test_stream_replayed_batch_does_not_duplicate_triples(spark, tmp_path):
     """foreachBatch is at-least-once: a batch whose commit is lost is
     replayed under the same batch_id on restart.  The replay must replace
-    that batch's triples, not append a second copy."""
+    that batch's rows in every table, not append a second copy, and leave
+    the other batches alone."""
     from xrenner_spark.streaming import stream_pipeline
 
     source = str(tmp_path / "replay_stream")
     out = str(tmp_path / "replay_out")
-    _drop_pages(spark, source, 0, 10)
+    for lo in range(0, 10, 2):  # five files: batches 0 (four) and 1 (one)
+        _drop_pages(spark, source, lo, lo + 2)
     stream_pipeline(spark, source, out).awaitTermination(300)
-    key = lambda r: (r.url, r.subj, r.pred, r.obj, r.sent_num, r.verb_id)
-    before = sorted(map(key, spark.read.parquet(out + "/triples").collect()))
-    assert before
+    tables = lambda: {t: _rows(spark.read.parquet(os.path.join(out, t)),
+                               drop=_TIMING_COLS) for t in _TABLES}
+    success = lambda t, b: os.path.getmtime(
+        os.path.join(out, t, "batch_id=%d" % b, "_SUCCESS"))
+    before = tables()
+    assert all(before.values())
+    first_batch = {t: success(t, 0) for t in _TABLES}
 
-    # crash between the sink write and the commit of the last batch
+    # crash between the sink writes and the commit of the last batch
     commits = os.path.join(out, "_checkpoint", "commits")
     last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 1
+    replayed = {t: success(t, last) for t in _TABLES}
     for name in (str(last), ".%d.crc" % last):
         path = os.path.join(commits, name)
         if os.path.exists(path):
@@ -84,20 +113,46 @@ def test_stream_replayed_batch_does_not_duplicate_triples(spark, tmp_path):
     stream_pipeline(spark, source, out).awaitTermination(300)
 
     assert os.path.exists(os.path.join(commits, str(last)))  # replayed
-    after = sorted(map(key, spark.read.parquet(out + "/triples").collect()))
-    assert after == before
+    assert all(success(t, last) > replayed[t] for t in _TABLES)
+    assert {t: success(t, 0) for t in _TABLES} == first_batch
+    assert tables() == before
+
+
+def test_stream_isolates_corrupt_pages(spark, corrupt_pages, tmp_path):
+    """A file drop holding the two broken pages: the stream's kernel doc
+    rows carry the same errors for the same urls as run_pipeline over the
+    same pages, and the stream's kernel lineage counts them."""
+    from xrenner_spark.pipeline import docs_view, run_pipeline
+    from xrenner_spark.streaming import stream_pipeline
+
+    pages, bad_urls = corrupt_pages()
+    source = str(tmp_path / "corrupt_stream")
+    out = str(tmp_path / "corrupt_out")
+    pages.coalesce(1).write.parquet(source)
+    stream_pipeline(spark, source, out).awaitTermination(300)
+
+    run_pipeline(spark, _stream_pages(spark, source), str(tmp_path / "wh"),
+                 resume=False)
+    errors = lambda path: {r.url: r.error for r in docs_view(
+        spark.read.parquet(os.path.join(path, "stage_kernel"))).collect()
+        if r.error != ""}
+    got = errors(out)
+    assert set(got) == bad_urls
+    assert got == errors(str(tmp_path / "wh"))
+    lineage = spark.read.parquet(os.path.join(out, "_lineage_kernel"))
+    assert lineage.selectExpr("sum(errors)").first()[0] == 2
 
 
 def test_mention_rate_stream_plan(spark):
     """The watermarked aggregation compiles against the kernel schema
     (smoke: batch execution of the same expression tree)."""
     from xrenner_spark.lex import load_lex
-    from xrenner_spark.pipeline import fused_extract_kernel_stage
+    from xrenner_spark.pipeline import extract_stage, kernel_stage
     from xrenner_spark.streaming import mention_rate_stream
 
     bcast = spark.sparkContext.broadcast(load_lex())
-    kernel_out = fused_extract_kernel_stage(
-        generate_pages(spark, 25, partitions=2), bcast)
+    kernel_out = kernel_stage(
+        extract_stage(generate_pages(spark, 25, partitions=2)), bcast)
     rows = mention_rate_stream(kernel_out).collect()
     assert sum(r.docs for r in rows) == 25
     assert all(r.errors == 0 for r in rows)

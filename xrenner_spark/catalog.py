@@ -35,11 +35,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class Catalog:
+    """``partition`` (parquet only): a ``column=value`` directory, e.g.
+    ``batch_id=7``, under every table; the catalog sees only that
+    partition, and a reader of a table's directory gets every partition
+    with the column (partition discovery)."""
+
     def __init__(self, spark: SparkSession, warehouse: str,
-                 iceberg_catalog: Optional[str] = None):
+                 iceberg_catalog: Optional[str] = None,
+                 partition: Optional[str] = None):
         self.spark = spark
         self.warehouse = warehouse
         self.iceberg_catalog = iceberg_catalog
+        self.partition = partition
         if iceberg_catalog is None:
             os.makedirs(warehouse, exist_ok=True)
         else:
@@ -61,7 +68,8 @@ class Catalog:
 
     # -- naming ---------------------------------------------------------
     def _path(self, name: str) -> str:
-        return os.path.join(self.warehouse, name)
+        path = os.path.join(self.warehouse, name)
+        return os.path.join(path, self.partition) if self.partition else path
 
     def _ident(self, name: str) -> str:
         return "%s.%s" % (self.iceberg_catalog, name)
@@ -73,21 +81,15 @@ class Catalog:
         path = self._path(name)
         return os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite",
-              partition_by=None):
+    def write(self, df: DataFrame, name: str, mode: str = "overwrite"):
         if self.iceberg_catalog:
             writer = df.writeTo(self._ident(name))
-            if partition_by:
-                writer = writer.partitionedBy(*partition_by)
             if mode == "append":
                 writer.append()
             else:
                 writer.createOrReplace()
             return
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._path(name))
+        df.write.mode(mode).parquet(self._path(name))
 
     def read(self, name: str, schema=None) -> DataFrame:
         """``schema`` (parquet only): the table's known schema, which

@@ -29,15 +29,18 @@ markers), so building a pass's plans costs a few py4j round trips each:
              exchange GROUP BY (url, verb_id) collecting subjects and
              objects, pairs via inline/transform → triples table
 
+kg_pass is this graph over a Catalog: run_pipeline runs one pass, and
+stream_pipeline one per micro-batch into a ``batch_id=<id>`` partition.
+
 Every stage is resumable: if its checkpoint table exists (same run_dir),
 it is read back instead of recomputed, so a killed job restarted with the
 same warehouse continues where it left off and produces byte-identical
 triples and chains (verified in tests/test_pipeline_spark.py).
 
 Per-row Python runs only where it cannot be avoided — the kernel — and
-in one place: every sink (kernel_stage, fused_extract_kernel_stage,
-serialize_stage, training_dump_stage) is SQL extract_stage followed by
-the single _map_docs loop, which runs analyze_page once per document
+in one place: every sink (kernel_stage, serialize_stage,
+training_dump_stage) is SQL extract_stage followed by the single
+_map_docs loop, which runs analyze_page once per document
 and hands the result to the sink's emit callback; the rule/gazetteer
 bundle is broadcast once per executor.
 """
@@ -477,25 +480,27 @@ def kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
 # dedup_kernel_stage's two statements share the extract rows keyed on the
 # exact kernel input: extracted text, conllu payload AND the byte-identity
 # flag (analyze_page rejects a violating copy, so it must not share a
-# representative with an intact one)
-_PAYLOAD_KEYED = """WITH keyed AS (
+# representative with an intact one).  A subquery, not a WITH: Spark
+# cannot plan this CTE over an extract_stage plan's own CTEs
+# (NoSuchElementException in PushdownPredicatesAndPruneColumnsForCTEDef)
+_PAYLOAD_KEYED = """(
     SELECT *, sha2(concat(text_sha256, sha2(conllu, 256),
                           CAST(byte_identical AS STRING)), 256) AS payload_key
     FROM {extracted})"""
 
 #: one representative per payload (the least url), named by payload_key
-_DEDUP_REPS_SQL = _PAYLOAD_KEYED + """
+_DEDUP_REPS_SQL = """
     SELECT payload_key AS url, warc_ts, lang, conllu, text_sha256, byte_identical
     FROM (SELECT *, row_number() OVER (PARTITION BY payload_key ORDER BY url) AS rn
-          FROM keyed)
-    WHERE rn = 1"""
+          FROM %s keyed)
+    WHERE rn = 1""" % _PAYLOAD_KEYED
 
 #: the representatives' kernel rows under every copy's url/warc_ts/lang
-_DEDUP_JOIN_BACK_SQL = _PAYLOAD_KEYED + """
+_DEDUP_JOIN_BACK_SQL = """
     SELECT %s
-    FROM {rep_rows} r JOIN keyed c ON r.url = c.payload_key""" % ", ".join(
+    FROM {rep_rows} r JOIN %s c ON r.url = c.payload_key""" % (", ".join(
     ("c.`%s`" if name in ("url", "warc_ts", "lang") else "r.`%s`") % name
-    for name in _KERNEL_COLS)
+    for name in _KERNEL_COLS), _PAYLOAD_KEYED)
 
 
 def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
@@ -527,15 +532,6 @@ def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
     # content
     return spark.sql(_DEDUP_JOIN_BACK_SQL, extracted=extracted,
                      rep_rows=kernel_stage(reps, lex_broadcast))
-
-
-def fused_extract_kernel_stage(pages: DataFrame, lex_broadcast) -> DataFrame:
-    """Extraction + kernel with ONE Python position and no checkpoint in
-    between (bench, streaming, the driver queries).  Chaining two Python
-    evaluations in one Spark stage runs two python workers per task
-    back-to-back (~10x slower measured); extract_stage is Catalyst
-    only, so this plan crosses the UDF boundary once."""
-    return kernel_stage(extract_stage(pages), lex_broadcast)
 
 
 SERIALIZE_SCHEMA = T.StructType([
@@ -734,9 +730,9 @@ def triples_from_views(mentions: DataFrame, verbs: DataFrame, *,
                        chains: DataFrame) -> DataFrame:
     """(subj, pred, obj) emission: role-tagged verb arguments joined back
     to chain-canonical strings.  ``chains``: the chains of the same
-    mentions — a written table (run_pipeline), or chains_from_mentions
-    over them, which plans the aggregation into this query (streaming,
-    the driver queries)."""
+    mentions — a written table (kg_pass), or chains_from_mentions over
+    them, which plans the aggregation into this query (the driver
+    queries)."""
     return mentions.sparkSession.sql(_TRIPLES_SQL, mentions=mentions,
                                      verbs=verbs, chains=chains)
 
@@ -769,6 +765,40 @@ def _checkpoint(cat: Catalog, stage: str, schema: T.StructType, resume: bool,
     return out
 
 
+def kg_pass(cat: Catalog, pages: DataFrame, lex_broadcast,
+            partitions: int = None, resume: bool = True,
+            dedup_kernel_inputs: bool = False) -> DataFrame:
+    """One KG pass of ``pages`` into ``cat``'s tables (the extract and
+    kernel checkpoints with their lineage, then chains and triples);
+    returns the written triples.  ``lex_broadcast()`` gives the broadcast
+    model and is called only when the kernel runs."""
+    if partitions is None:
+        partitions = max(cat.spark.sparkContext.defaultParallelism, 8)
+
+    extracted = _checkpoint(cat, "extract", EXTRACT_SCHEMA, resume,
+                            lambda: extract_stage(salt_by_url(pages, partitions)))
+
+    def kernel():
+        bcast = lex_broadcast()
+        return (dedup_kernel_stage(extracted, bcast) if dedup_kernel_inputs
+                else kernel_stage(extracted, bcast))
+
+    kernel_out = _checkpoint(cat, "kernel", KERNEL_SCHEMA, resume, kernel)
+
+    if resume and cat.exists("triples"):
+        return cat.read("triples")
+    # chains first: triples join the written table instead of running
+    # the canonicalization aggregation again, and a crash between the
+    # two writes leaves chains to reuse rather than a triples table
+    # without chains
+    chains = chains_stage(kernel_out)
+    if not (resume and cat.exists("chains")):
+        cat.write(chains, "chains")
+    triples = triples_stage(kernel_out, chains=cat.read("chains", chains.schema))
+    cat.write(triples, "triples")
+    return cat.read("triples", triples.schema)
+
+
 def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
                  partitions: int = None, lex_dir: Optional[str] = None,
                  resume: bool = True, rule_based: bool = False,
@@ -787,19 +817,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
     lineage-metric differences).
     """
     cat = Catalog(spark, warehouse)
-    if partitions is None:
-        partitions = max(spark.sparkContext.defaultParallelism, 8)
-
-    extracted = _checkpoint(cat, "extract", EXTRACT_SCHEMA, resume,
-                            lambda: extract_stage(salt_by_url(pages, partitions)))
-
-    def kernel():
-        lex = load_lex(lex_dir, rule_based=rule_based,
-                       no_seq=no_seq, override=override)
-        bcast = spark.sparkContext.broadcast(lex)
-        return (dedup_kernel_stage(extracted, bcast) if dedup_kernel_inputs
-                else kernel_stage(extracted, bcast))
-
     if resume and cat.exists("stage_kernel") and (
             lex_dir or rule_based or no_seq or override):
         import sys
@@ -808,17 +825,10 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
             "no_seq/override have NO effect on resumed output — "
             "pass resume=False (run_kg --no-resume) to recompute "
             "under the requested model mode\n")
-    kernel_out = _checkpoint(cat, "kernel", KERNEL_SCHEMA, resume, kernel)
 
-    if resume and cat.exists("triples"):
-        return cat.read("triples")
-    # chains first: triples join the written table instead of running
-    # the canonicalization aggregation again, and a crash between the
-    # two writes leaves chains to reuse rather than a triples table
-    # without chains
-    chains = chains_stage(kernel_out)
-    if not (resume and cat.exists("chains")):
-        cat.write(chains, "chains")
-    triples = triples_stage(kernel_out, chains=cat.read("chains", chains.schema))
-    cat.write(triples, "triples")
-    return cat.read("triples", triples.schema)
+    def lex_broadcast():
+        return spark.sparkContext.broadcast(load_lex(
+            lex_dir, rule_based=rule_based, no_seq=no_seq, override=override))
+
+    return kg_pass(cat, pages, lex_broadcast, partitions, resume,
+                   dedup_kernel_inputs)

@@ -1,17 +1,16 @@
-"""Structured Streaming wrapper over the same KG kernel.
+"""Structured Streaming over the same KG pass.
 
 The reference is strictly batch (SURVEY.md §2.7: no streaming operators
 exist in it), so streaming is an additive capability here: a continuous
-ingestion mode for the identical per-document kernel.
+ingestion mode for the identical pipeline.
 
-Design: the fused extract+kernel stage (SQL extraction plus one
-mapInArrow) is stateless and therefore directly streamable; the
-chain/triple SQL stage self-joins the kernel output three ways, which
-stream-stream join semantics cannot express per-document-exactly — and
-chains never cross documents — so the triple stage runs per micro-batch
-via ``foreachBatch`` (the canonical reuse-batch-logic pattern).
-Watermarked event-time aggregation over ``warc_ts`` is provided for
-monitoring/late-data demonstration.
+Design: a micro-batch is an ordinary batch.  ``stream_pipeline``'s
+``foreachBatch`` runs run_pipeline's pass, pipeline.kg_pass, on the
+batch's pages into a ``batch_id=<id>`` partition of the same tables
+(checkpoints, lineage, chains, triples); chains never cross documents,
+so the union of the batches is the batch pipeline's output.  The
+cross-batch stateful operators and a watermarked event-time aggregation
+over ``warc_ts`` are the streaming-only parts.
 """
 
 from __future__ import annotations
@@ -22,9 +21,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lex import load_lex
-from .pipeline import (PAGES_SCHEMA, chains_stage, fused_extract_kernel_stage,
-                       triples_stage)
+from .catalog import Catalog
+from .pipeline import PAGES_SCHEMA, kg_pass, load_lex
 
 
 def read_pages_stream(spark: SparkSession, source_dir: str,
@@ -39,38 +37,24 @@ def read_pages_stream(spark: SparkSession, source_dir: str,
 
 def stream_pipeline(spark: SparkSession, source_dir: str, out_dir: str,
                     lex_dir: Optional[str] = None, available_now: bool = True):
-    """Continuous KG construction: pages stream -> kernel -> per-batch
-    triple emission.  Returns the started StreamingQuery.
+    """Continuous KG construction: one kg_pass per micro-batch of the
+    pages stream, into ``<out_dir>/<table>/batch_id=<id>/``.  Returns the
+    started StreamingQuery.
 
     ``foreachBatch`` is only at-least-once: a batch whose commit did not
     reach the checkpoint is replayed under the same ``batch_id`` on
-    restart.  Each batch therefore writes its own ``batch_id=<id>``
-    partition with dynamic partition overwrite, so a replay replaces its
-    own rows instead of appending a second copy — the triples table is
-    idempotent per batch."""
-    pages = read_pages_stream(spark, source_dir)
+    restart.  The replay overwrites its own partition of every table
+    instead of appending a second copy, so each table is idempotent per
+    batch.  The model is loaded and broadcast once per query."""
     bcast = spark.sparkContext.broadcast(load_lex(lex_dir))
-    kernel_out = fused_extract_kernel_stage(pages, bcast)
 
-    triples_path = os.path.join(out_dir, "triples")
-    checkpoint = os.path.join(out_dir, "_checkpoint")
+    def run_batch(pages: DataFrame, batch_id: int):
+        cat = Catalog(pages.sparkSession, out_dir, partition="batch_id=%d" % batch_id)
+        kg_pass(cat, pages, lambda: bcast, resume=False)
 
-    def emit_triples(batch_df: DataFrame, batch_id: int):
-        batch_df = batch_df.persist()
-        try:
-            batch_df.count()  # materialize before the 3-way join fan-out
-            (triples_stage(batch_df, chains=chains_stage(batch_df))
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .parquet(triples_path))
-        finally:
-            batch_df.unpersist()
-
-    writer = (kernel_out.writeStream
-              .foreachBatch(emit_triples)
-              .option("checkpointLocation", checkpoint))
+    writer = (read_pages_stream(spark, source_dir).writeStream
+              .foreachBatch(run_batch)
+              .option("checkpointLocation", os.path.join(out_dir, "_checkpoint")))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
