@@ -6,9 +6,17 @@ or else the CPUs this process may run on.
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...,
-     "triples_per_sec": ..., "cores": N}
+     "triples_per_sec": ..., "cores": N, "host": {...}, "source": {...},
+     "host.canary_s": [before, after], "host.steal_s": ...}
+
+A kg rep that writes 0 triples from a non-empty input ends the run with
+a non-zero exit status and no result line.
+
+``host_record`` is the host record every bench script prints: the one
+perfbench/run.py keeps, from perfbench's own functions.
 """
 
+import contextlib
 import json
 import os
 import shutil
@@ -16,7 +24,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from xrenner_spark.session import default_cores  # noqa: E402
 
@@ -34,18 +43,31 @@ def _noop_write(df):
     df.write.mode("overwrite").format("noop").save()
 
 
-def main():
-    from xrenner_spark.session import get_spark
+@contextlib.contextmanager
+def host_record():
+    """perfbench's host record around a timed run.  The yielded dict is
+    filled when the block ends: ``host`` (CPUs, affinity, memory),
+    ``source`` (git sha, source md5), ``host.canary_s`` (the md5 canary
+    before and after) and ``host.steal_s`` (hypervisor steal seconds
+    during the block, summed over the machine's CPUs)."""
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import procstat
+    from run import source_id
+    record = {}
+    canary_before, (steal_before, _) = procstat.canary_s(), procstat.steal()
+    yield record
+    steal_after, _ = procstat.steal()
+    record.update({"host": procstat.host_info(), "source": source_id(REPO),
+                   "host.canary_s": [round(canary_before, 3),
+                                     round(procstat.canary_s(), 3)],
+                   "host.steal_s": round(steal_after - steal_before, 2)})
+
+
+def _timed_runs(spark, n_docs):
+    """The kg_pipeline reps and the operator queries: (timings, reps, extra)."""
     from xrenner_spark.pipeline import generate_pages, run_pipeline
     from xrenner_spark.operators import (relational, dedup, similarity,
                                          textstats, ml_score, web)
-
-    spark = get_spark("bench", cores=CORES, shuffle_partitions=max(32, CORES))
-    spark.sparkContext.setLogLevel("ERROR")
-
-    sf_label = SF_DIR.rstrip("/").split("/")[-1]
-    n_docs = spark.read.parquet(SF_DIR + "/documents.parquet").count() * DOC_MULTIPLIER
-
     timings = {}
     extra = {}
 
@@ -58,15 +80,19 @@ def main():
     # bursts the md5 canary misses, and a burst landing on the single
     # headline number would poison the whole round's record
     kg_reps = []
-    for _rep in range(2):
+    for rep in range(2):
         wh = tempfile.mkdtemp(prefix="xkg_bench_")
         t0 = time.perf_counter()
         pages = generate_pages(spark, n_docs, partitions=max(CORES, 8))
         n_triples = run_pipeline(spark, pages, wh, partitions=max(CORES, 8),
                                  resume=False).count()
         kg_reps.append(round(time.perf_counter() - t0, 3))
-        if _rep == 0:
-            shutil.rmtree(wh, ignore_errors=True)
+        shutil.rmtree(wh, ignore_errors=True)
+        if n_triples == 0 and n_docs > 0:
+            # a 1M-doc rep once wrote 0 triples with no error recorded;
+            # a silently empty rep must never enter the record
+            raise SystemExit("kg rep %d wrote 0 triples from %d docs"
+                             % (rep, n_docs))
         spark._jvm.System.gc()
     kg_sec = min(kg_reps)
     timings["kg_pipeline"] = kg_sec
@@ -92,7 +118,6 @@ def main():
         "rel_join_chain": relational.rel_join_chain,
         "rel_window_top1": relational.rel_window_top1,
     }
-    shutil.rmtree(wh, ignore_errors=True)
     # each operator query runs twice and reports the BEST rep: the host's
     # external tenancy arrives in bursts that the md5 canary misses
     # (measured 2026-08-16: the identical cached-codegen ann_lsh query in
@@ -115,6 +140,20 @@ def main():
             _noop_write(fn(spark, SF_DIR))
             reps[name].append(round(time.perf_counter() - t0, 3))
         timings[name] = min(reps[name])
+    return timings, reps, extra
+
+
+def main():
+    from xrenner_spark.session import get_spark
+
+    spark = get_spark("bench", cores=CORES, shuffle_partitions=max(32, CORES))
+    spark.sparkContext.setLogLevel("ERROR")
+
+    sf_label = SF_DIR.rstrip("/").split("/")[-1]
+    n_docs = spark.read.parquet(SF_DIR + "/documents.parquet").count() * DOC_MULTIPLIER
+
+    with host_record() as host:
+        timings, reps, extra = _timed_runs(spark, n_docs)
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -127,6 +166,7 @@ def main():
         "cores": CORES,
     }
     out.update(extra)
+    out.update(host)
     print(json.dumps(out))
     spark.stop()
 

@@ -1,15 +1,15 @@
 #!/usr/bin/env python
 """Kernel throughput at toy vs production-scale lexicon (VERDICT r2 #4).
 
-Runs the identical fused extract+kernel pipeline over the same N docs
-with (a) the bundled toy models/web and (b) the .large_model variant
-generated by scripts/make_large_model.py, reporting lex build time,
-broadcast payload size, docs/s and mention counts for each.
+Runs the identical ``kernel_stage(extract_stage(...))`` pass over the
+same N docs with (a) the bundled toy models/web and (b) the .large_model
+variant generated by scripts/make_large_model.py, reporting lex build
+time, broadcast payload size, docs/s and mention counts for each, with
+bench.py's host record on every line.  Fresh Spark session per model so
+JVM/GC state cannot couple the two measurements.
 
-Run in a quiet window (md5 canary per CLAUDE.md); fresh Spark session
-per model so JVM/GC state cannot couple the two measurements.
-
-Usage: python scripts/bench_model_scale.py [n_docs] [cores]
+Usage: python scripts/bench_model_scale.py [n_docs] [cores] [reps]
+(cores defaults to the CPUs this process may run on)
 """
 
 import json
@@ -20,6 +20,9 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench import host_record  # noqa: E402
+from xrenner_spark.session import default_cores  # noqa: E402
 
 
 def measure(model_dir, n_docs, cores):
@@ -52,11 +55,13 @@ def main():
     # one model per process: a shared JVM would hand the second config a
     # JIT-warmed runtime (measured: +46% docs/s for whichever runs second)
     if len(sys.argv) > 1 and sys.argv[1] == "--one":
-        print(json.dumps(measure(sys.argv[2], int(sys.argv[3]), int(sys.argv[4]))))
+        with host_record() as host:
+            result = measure(sys.argv[2], int(sys.argv[3]), int(sys.argv[4]))
+        print(json.dumps({**result, **host}))
         return
     import subprocess
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    cores = int(sys.argv[2]) if len(sys.argv) > 2 else default_cores()
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     large_dir = os.path.join(REPO, ".large_model")
     if not os.path.isdir(large_dir):

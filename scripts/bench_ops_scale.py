@@ -18,9 +18,9 @@ temporary sf_dir and runs the unmodified operator queries against it:
   dedup_exact         (md5 groupBy)
   dedup_simhash_pairs (pigeonhole banding + popcount verify)
 
-Reports wall seconds + output rows per operator plus a 32-proc md5
-canary before each. Usage: python scripts/bench_ops_scale.py [n_vecs]
-[doc_mult] [reps]
+Reports wall seconds + output rows per operator, then one line with
+all of them and bench.py's host record.  Usage:
+python scripts/bench_ops_scale.py [n_vecs] [doc_mult] [reps]
 """
 
 import json
@@ -33,8 +33,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scripts.bench_1m import canary  # noqa: E402
-
+from bench import host_record  # noqa: E402
 from xrenner_spark.session import default_cores  # noqa: E402
 
 CORES = default_cores()
@@ -109,27 +108,26 @@ def main():
         "web_url_dedup": web.url_dedup,
     }
     results = {}
-    for name, fn in ops.items():
-        if name == "dedup_cluster_assign" and verified["df"] is None:
-            verified["df"] = dedup.dedup_jaccard_verify(spark, out_dir) \
-                .localCheckpoint(eager=True)
-        walls, rows = [], None
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            spark._jvm.System.gc()
-            c = canary()
-            t0 = time.perf_counter()
-            df = fn(spark, out_dir)
-            df.write.mode("overwrite").format("noop").save()
-            walls.append(round(time.perf_counter() - t0, 2))
-            if rows is None:
-                rows = fn(spark, out_dir).count()
-        results[name] = {"wall_s": min(walls), "walls": walls,
-                         "canary_s": c, "rows": rows}
-        print(json.dumps({name: results[name]}))
+    with host_record() as host:
+        for name, fn in ops.items():
+            if name == "dedup_cluster_assign" and verified["df"] is None:
+                verified["df"] = dedup.dedup_jaccard_verify(spark, out_dir) \
+                    .localCheckpoint(eager=True)
+            walls, rows = [], None
+            for _ in range(reps):
+                spark.catalog.clearCache()
+                spark._jvm.System.gc()
+                t0 = time.perf_counter()
+                df = fn(spark, out_dir)
+                df.write.mode("overwrite").format("noop").save()
+                walls.append(round(time.perf_counter() - t0, 2))
+                if rows is None:
+                    rows = fn(spark, out_dir).count()
+            results[name] = {"wall_s": min(walls), "walls": walls, "rows": rows}
+            print(json.dumps({name: results[name]}))
     print(json.dumps({"n_vecs": n_vecs, "n_docs_mult": doc_mult,
                       "synth_s": t_synth, "cores": CORES,
-                      "results": results}))
+                      "results": results, **host}))
     shutil.rmtree(out_dir, ignore_errors=True)
 
 

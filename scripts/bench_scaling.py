@@ -2,14 +2,11 @@
 """Scaling-efficiency evidence for the north rule's N->4N criterion.
 
 Runs bench.py at local[N] and local[4N] on the SAME input (fresh JVM per
-run, strictly sequential), measures the host's raw parallel-CPU ceiling,
-and writes BENCH/BASELINE.md.
-
-The sandbox host advertises 32 cpus but a raw md5-burn shows per-process
-throughput is flat only up to ~8 concurrent processes (SMT beyond that):
-8->32 processes yields only ~2.5x even for pure hashing, so the honest
-N->4N window on this box is 2->8 cores; the 8->32 capacity point is also
-reported against the measured hardware ceiling.
+run, strictly sequential), measures the host's raw parallel-CPU ceiling
+at N and 4N processes, and writes BENCH/BASELINE.md.  4N is the CPUs
+this process may run on (``session.default_cores``) and N = max(1, 4N // 4),
+so the window never asks for more cores than the host gives; each bench.py
+run carries its own host record (md5 canary before and after, steal).
 
 Usage: python scripts/bench_scaling.py [doc_mult]
 """
@@ -24,18 +21,21 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from xrenner_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DOC_MULT = sys.argv[1] if len(sys.argv) > 1 else "40"
-
-N_SMALL, N_BIG, N_CAP = 2, 8, 32
 
 
-def run_bench(cores: int) -> dict:
+def run_bench(cores: int, doc_mult: str) -> dict:
     env = dict(os.environ)
     env.update({"SPARK_GRAFT_CPUS": str(cores), "SPARK_GRAFT_SF_DIR": SF_DIR,
-                "SPARK_GRAFT_DOC_MULT": DOC_MULT})
+                "SPARK_GRAFT_DOC_MULT": doc_mult})
     out = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")],
                          env=env, capture_output=True, text=True, timeout=3600)
+    if out.returncode:
+        raise SystemExit("bench.py at local[%d] failed:\n%s" % (cores, out.stderr[-2000:]))
     line = [ln for ln in out.stdout.strip().split("\n") if ln.startswith("{")][-1]
     return json.loads(line)
 
@@ -59,7 +59,6 @@ def reference_throughput(n_docs: int = 200):
     if not os.path.isdir(ref):
         return None
     sys.path.insert(0, ref)
-    sys.path.insert(0, REPO)
     import warnings
     warnings.filterwarnings("ignore")
     from xrenner import Xrenner
@@ -77,46 +76,39 @@ def reference_throughput(n_docs: int = 200):
 
 
 def main():
-    burn = {p: cpu_ceiling(p) for p in (N_SMALL, N_BIG, N_CAP)}
+    doc_mult = sys.argv[1] if len(sys.argv) > 1 else "40"
+    n_big = default_cores()
+    n_small = max(1, n_big // 4)
+    burn = {p: cpu_ceiling(p) for p in (n_small, n_big)}
     ref = reference_throughput()
-    # the sandbox host's available CPU oscillates with external tenancy
-    # (measured md5 8->32 scaling swings between 2.6x and 3.3x within an
-    # hour) — record a 32-proc canary immediately before each config so
-    # slow windows are visible next to the number they taint
-    results, canaries = {}, {}
-    for c in (N_SMALL, N_BIG, N_CAP):
-        canaries[c] = cpu_ceiling(32)
-        results[c] = run_bench(c)
-    r_small, r_big, r_cap = results[N_SMALL], results[N_BIG], results[N_CAP]
+    results = {c: run_bench(c, doc_mult) for c in (n_small, n_big)}
+    r_small, r_big = results[n_small], results[n_big]
 
     eff = r_big["docs_per_sec"] / (4.0 * r_small["docs_per_sec"])
-    hw_small_big = burn[N_BIG] / burn[N_SMALL]
+    hw_small_big = burn[n_big] / burn[n_small]
     eff_vs_hw = (r_big["docs_per_sec"] / r_small["docs_per_sec"]) / hw_small_big
-    hw_8_32 = burn[N_CAP] / burn[N_BIG]
-    cap_ratio = r_cap["docs_per_sec"] / r_big["docs_per_sec"]
 
     md = io.StringIO()
     md.write("# BENCH baseline — measured\n\n")
-    md.write("Host: %d advertised cpus, Spark local mode, input %s, kg corpus "
-             "= %s x documents rows (%d docs). All runs sequential and "
-             "isolated (fresh JVM per config).\n\n"
-             % (multiprocessing.cpu_count(), SF_DIR, DOC_MULT, r_big["kg_docs"]))
+    md.write("Host: %d advertised cpus, %d usable, Spark local mode, input %s, "
+             "kg corpus = %s x documents rows (%d docs). All runs sequential "
+             "and isolated (fresh JVM per config).\n\n"
+             % (multiprocessing.cpu_count(), n_big, SF_DIR, doc_mult,
+                r_big["kg_docs"]))
     md.write("## Hardware parallelism ceiling (raw md5 burn, no Spark)\n\n")
     md.write("| concurrent procs | aggregate Mhash/s | per-proc |\n|---|---|---|\n")
     for p, v in burn.items():
         md.write("| %d | %.1f | %.2f |\n" % (p, v, v / p))
-    md.write("\nPer-process throughput is flat only to ~8 processes; "
-             "8->32 procs yields %.2fx even for pure hashing (SMT), so the "
-             "honest N->4N window on this host is %d->%d cores.\n\n"
-             % (hw_8_32, N_SMALL, N_BIG))
-    md.write("32-proc md5 canary immediately before each config "
-             "(external-tenancy visibility): %s Mhash/s.\n\n"
-             % ", ".join("local[%d]: %.1f" % (c, canaries[c])
-                         for c in (N_SMALL, N_BIG, N_CAP)))
+    md.write("\nmd5 canary seconds before and after each config "
+             "(bench.py's host record): %s.\n\n"
+             % ", ".join("local[%d]: %s, steal %.1f s"
+                         % (c, results[c]["host.canary_s"],
+                            results[c]["host.steal_s"])
+                         for c in (n_small, n_big)))
     md.write("## N -> 4N scaling (local[%d] -> local[%d], identical input)\n\n"
-             % (N_SMALL, N_BIG))
+             % (n_small, n_big))
     md.write("| metric | local[%d] | local[%d] | scaling efficiency |\n|---|---|---|---|\n"
-             % (N_SMALL, N_BIG))
+             % (n_small, n_big))
     md.write("| KG pipeline docs/sec | %.0f | %.0f | **%.2f** |\n"
              % (r_small["docs_per_sec"], r_big["docs_per_sec"], eff))
     md.write("| KG pipeline triples/sec | %.0f | %.0f | **%.2f** |\n"
@@ -127,34 +119,26 @@ def main():
     md.write("Pipeline %d->%d speedup %.2fx vs hardware ceiling %.2fx "
              "(raw md5 burn) -> **%.2f of attainable**; single/dual-process "
              "turbo inflates the small-N baseline on this host.\n\n"
-             % (N_SMALL, N_BIG,
+             % (n_small, n_big,
                 r_big["docs_per_sec"] / r_small["docs_per_sec"],
                 hw_small_big, eff_vs_hw))
-    md.write("## Capacity point (local[%d])\n\n" % N_CAP)
-    md.write("local[%d] -> local[%d]: %.2fx pipeline speedup vs a %.2fx raw-CPU "
-             "hardware ceiling (%.0f%% of attainable).\n\n"
-             % (N_BIG, N_CAP, cap_ratio, hw_8_32, 100.0 * cap_ratio / hw_8_32))
     if ref:
         md.write("## Reference comparison\n\n")
         md.write("Reference engine (single process, same model + corpus): "
                  "%.0f docs/sec, %.0f tokens/sec.\n" % (ref["docs_per_sec"],
                                                         ref["tokens_per_sec"]))
         md.write("This pipeline: %.0f docs/sec at local[%d] (**%.1fx** reference), "
-                 "%.0f docs/sec at local[%d] (**%.1fx**), per-core at local[%d]: "
-                 "%.2fx reference single-core.\n\n"
-                 % (r_big["docs_per_sec"], N_BIG,
+                 "per-core: %.2fx reference single-core.\n\n"
+                 % (r_big["docs_per_sec"], n_big,
                     r_big["docs_per_sec"] / ref["docs_per_sec"],
-                    r_cap["docs_per_sec"], N_CAP,
-                    r_cap["docs_per_sec"] / ref["docs_per_sec"],
-                    N_BIG, (r_big["docs_per_sec"] / N_BIG) / ref["docs_per_sec"]))
-    md.write("## Per-query wall seconds\n\n| query | local[%d] | local[%d] | local[%d] |\n|---|---|---|---|\n"
-             % (N_SMALL, N_BIG, N_CAP))
+                    (r_big["docs_per_sec"] / n_big) / ref["docs_per_sec"]))
+    md.write("## Per-query wall seconds\n\n| query | local[%d] | local[%d] |\n|---|---|---|\n"
+             % (n_small, n_big))
     for name in r_big["queries"]:
-        md.write("| %s | %.2f | %.2f | %.2f |\n"
-                 % (name, r_small["queries"][name], r_big["queries"][name],
-                    r_cap["queries"].get(name, float("nan"))))
+        md.write("| %s | %.2f | %.2f |\n"
+                 % (name, r_small["queries"][name], r_big["queries"][name]))
     md.write("\nRaw JSON:\n\n```\n")
-    for c in (N_SMALL, N_BIG, N_CAP):
+    for c in (n_small, n_big):
         md.write("local[%d]: %s\n" % (c, json.dumps(results[c])))
     md.write("```\n")
 

@@ -9,6 +9,8 @@ bench_ops_scale.py) with per-copy urls and staggered event timestamps,
 so cross-batch state is genuinely exercised: copies of one text land
 in MANY different micro-batches and all but the first must drop.
 
+Prints one JSON line with every run and bench.py's host record.
+
 Usage: python scripts/bench_streaming_scale.py [doc_mult] [files_per_trigger]
 """
 
@@ -22,8 +24,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scripts.bench_1m import canary  # noqa: E402
-
+from bench import host_record  # noqa: E402
 from xrenner_spark.session import default_cores  # noqa: E402
 
 CORES = default_cores()
@@ -50,17 +51,10 @@ def synth_pages(spark, src_dir, doc_mult):
     return spark.read.parquet(src_dir).count()
 
 
-def main():
+def measure(spark, doc_mult, fpt):
     from pyspark.sql import functions as F
-    from xrenner_spark.session import get_spark
     from xrenner_spark.streaming import streaming_dedup, streaming_domain_cap
 
-    doc_mult = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    fpt = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-
-    spark = get_spark("stream-scale", cores=CORES,
-                      shuffle_partitions=max(32, CORES))
-    spark.sparkContext.setLogLevel("ERROR")
     base = tempfile.mkdtemp(prefix="xstream_scale_")
     src = base + "/src"
     n_pages = synth_pages(spark, src, doc_mult)
@@ -72,7 +66,6 @@ def main():
 
     def run(name, build):
         out, ckpt = base + "/out_" + name, base + "/ckpt_" + name
-        c = canary()
         t0 = time.perf_counter()
         pages = (spark.readStream.schema(schema)
                  .option("maxFilesPerTrigger", fpt).parquet(src))
@@ -83,8 +76,8 @@ def main():
         wall = round(time.perf_counter() - t0, 2)
         batches = q.lastProgress["batchId"] + 1 if q.lastProgress else None
         got = spark.read.parquet(out)
-        report[name] = {"wall_s": wall, "canary_s": c,
-                        "micro_batches": batches, "rows": got.count()}
+        report[name] = {"wall_s": wall, "micro_batches": batches,
+                        "rows": got.count()}
         return got
 
     got = run("dedup", streaming_dedup)
@@ -138,8 +131,22 @@ def main():
         F.max("count")).collect()[0][0]
     report["domain_cap"]["domains"] = by_dom.count()
 
-    print(json.dumps(report))
     shutil.rmtree(base, ignore_errors=True)
+    return report
+
+
+def main():
+    from xrenner_spark.session import get_spark
+
+    doc_mult = int(sys.argv[1]) if len(sys.argv) > 1 else 100
+    fpt = int(sys.argv[2]) if len(sys.argv) > 2 else 4
+
+    spark = get_spark("stream-scale", cores=CORES,
+                      shuffle_partitions=max(32, CORES))
+    spark.sparkContext.setLogLevel("ERROR")
+    with host_record() as host:
+        report = measure(spark, doc_mult, fpt)
+    print(json.dumps({**report, **host}))
 
 
 if __name__ == "__main__":

@@ -1,18 +1,26 @@
 """The benchmark's hooks into the program: perfbench wraps pipeline
 functions by name for its traced pass and passes each workload's keyword
 arguments to run_pipeline.  A rename or a dropped keyword would break a
-traced run or a workload without failing any other test."""
+traced run or a workload without failing any other test.  The bench
+scripts are run by hand, so a helper they import can vanish unnoticed:
+each is imported here."""
 
+import glob
 import importlib.util
 import inspect
 import os
+import sys
 
 import pytest
 
-from xrenner_spark import pipeline
+from xrenner_spark import pipeline, session
 
-PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                         "perfbench")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PERFBENCH = os.path.join(REPO, "perfbench")
+BENCH_SCRIPTS = sorted(
+    os.path.relpath(path, REPO)
+    for pattern in ("bench.py", "scripts/bench_*.py", "scripts/ann_recall_*.py")
+    for path in glob.glob(os.path.join(REPO, pattern)))
 
 
 def _load(name, monkeypatch):
@@ -75,3 +83,48 @@ def test_traced_functions_are_called_through_the_module(spark, tmp_path,
         expected.discard("dedup_kernel_stage")
     assert set(called) == expected
     assert sorted(written) == sorted(layers.PIPELINE_SPANS)
+
+
+def _load_script(relpath, monkeypatch):
+    """A bench script imported as a module, without running its main()."""
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    name = "bench_script_" + os.path.splitext(os.path.basename(relpath))[0]
+    spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, relpath))
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+@pytest.mark.parametrize("relpath", BENCH_SCRIPTS)
+def test_bench_script_imports(relpath, monkeypatch):
+    assert callable(_load_script(relpath, monkeypatch).main)
+
+
+def test_host_record_has_perfbench_fields(monkeypatch):
+    bench = _load_script("bench.py", monkeypatch)
+    with bench.host_record() as record:
+        pass
+    assert set(record) == {"host", "source", "host.canary_s", "host.steal_s"}
+    assert set(record["host"]) == {"nproc", "affinity_cpus", "mem_total_mb"}
+    assert len(record["source"]["src_md5"]) == 32
+    assert len(record["host.canary_s"]) == 2 and min(record["host.canary_s"]) > 0
+    assert record["host.steal_s"] >= 0
+
+
+def test_bench_exits_on_zero_triples(spark, tmp_path, monkeypatch, capsys):
+    """A kg rep that writes 0 triples from a non-empty input ends bench.py
+    with a non-zero status and no result line."""
+    bench = _load_script("bench.py", monkeypatch)
+    spark.range(3).withColumnRenamed("id", "doc_id").write.parquet(
+        str(tmp_path / "documents.parquet"))
+    monkeypatch.setattr(bench, "SF_DIR", str(tmp_path))
+    monkeypatch.setattr(session, "get_spark", lambda *args, **kwargs: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(pipeline, "generate_pages", lambda *args, **kwargs: None)
+    monkeypatch.setattr(pipeline, "run_pipeline",
+                        lambda *args, **kwargs: spark.range(0))
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code not in (None, 0)
+    assert "0 triples from %d docs" % (3 * bench.DOC_MULTIPLIER) in exc.value.code
+    assert capsys.readouterr().out == ""

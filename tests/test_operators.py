@@ -385,8 +385,8 @@ def test_web_canonicalize_random_urls(spark):
 def test_bucketed_join_eliminates_exchanges(spark, tmp_path):
     """Write-side bucketing makes doc-keyed joins exchange-free: both
     bucketed scans report the hashpartitioning, SortMergeJoin consumes
-    them in place (scripts/bench_bucketed_join.py measures at 5M rows;
-    the win at cluster scale is the removed network shuffle)."""
+    them in place (BENCH/PLANS.md §19 has the 5M-row numbers; the win at
+    cluster scale is the removed network shuffle)."""
     from pyspark.sql import functions as F
     a = (spark.range(0, 2000, 1, 4).withColumnRenamed("id", "doc_id")
          .withColumn("x", F.expr("doc_id % 7")))

@@ -257,5 +257,5 @@ QUERIES = {
     # rel_join_chain ROTATED OFF the board in round 5 (its multi-way
     # join plan is the union of operator classes the broadcast/semi-anti/
     # band join rows still demonstrate) to make room for web_url_dedup;
-    # bench.py and bench_extra.py still time it.
+    # bench.py still times it.
 }

@@ -92,10 +92,6 @@ def _corpus_size(spark: SparkSession, sf_dir: str) -> int:
                             sf_dir + "/embeddings.parquet"))
 
 
-def _corpus_bits(spark: SparkSession, sf_dir: str) -> int:
-    return _n_bits(_corpus_size(spark, sf_dir))
-
-
 def _n_subgroups(n_vecs: int) -> int:
     """Spark-group coarsening for the bucket scorers (r6): per-group
     applyInPandas machinery (arrow round trip + pandas frame build per

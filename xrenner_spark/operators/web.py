@@ -130,10 +130,11 @@ def _canon_sql(engine: str) -> str:
         # branches defeat codegen subexpression elimination, and the
         # duplicated trees blew the generated method past what HotSpot
         # will JIT promptly: the first 4M-row run took 205 s vs 4.7 s
-        # once compiled (scripts/bench_web_scale.py).  Where a subtree
-        # must appear twice (the substr-past-prefix remainder helper),
-        # both references are always-evaluated, so CSE deduplicates
-        # them — only conditional duplication is forbidden.
+        # once compiled (BENCH/BASELINE.md, "web_url_dedup at 4M
+        # captures").  Where a subtree must appear twice (the
+        # substr-past-prefix remainder helper), both references are
+        # always-evaluated, so CSE deduplicates them — only conditional
+        # duplication is forbidden.
         host = "regexp_replace(%s, '^www\\\\.', '')" % host0
         portc = "regexp_replace(':' || %s, '^:(80|443)?$', '')" % port
         params = ("filter(split(%s, '&'), p -> p != '' "
