@@ -54,33 +54,11 @@ def cpu_ceiling(procs: int, n: int = 2_000_000) -> float:
     return procs * n / (time.perf_counter() - t0) / 1e6
 
 
-def reference_throughput(n_docs: int = 200):
-    ref = os.environ.get("XRENNER_REFERENCE", "/root/reference")
-    if not os.path.isdir(ref):
-        return None
-    sys.path.insert(0, ref)
-    import warnings
-    warnings.filterwarnings("ignore")
-    from xrenner import Xrenner
-    from xrenner_spark.corpus import build_document
-    engine = Xrenner(model=os.path.join(REPO, "xrenner_spark/models/web"),
-                     rule_based=True, no_seq=True)
-    docs = [build_document(i)["conllu"] for i in range(n_docs)]
-    n_tokens = sum(d.count("\n") + 1 for d in docs)
-    t0 = time.perf_counter()
-    for d in docs:
-        engine.analyze(d, "none")
-    wall = time.perf_counter() - t0
-    return {"docs_per_sec": n_docs / wall, "tokens_per_sec": n_tokens / wall,
-            "n_docs": n_docs}
-
-
 def main():
     doc_mult = sys.argv[1] if len(sys.argv) > 1 else "40"
     n_big = default_cores()
     n_small = max(1, n_big // 4)
     burn = {p: cpu_ceiling(p) for p in (n_small, n_big)}
-    ref = reference_throughput()
     results = {c: run_bench(c, doc_mult) for c in (n_small, n_big)}
     r_small, r_big = results[n_small], results[n_big]
 
@@ -122,16 +100,6 @@ def main():
              % (n_small, n_big,
                 r_big["docs_per_sec"] / r_small["docs_per_sec"],
                 hw_small_big, eff_vs_hw))
-    if ref:
-        md.write("## Reference comparison\n\n")
-        md.write("Reference engine (single process, same model + corpus): "
-                 "%.0f docs/sec, %.0f tokens/sec.\n" % (ref["docs_per_sec"],
-                                                        ref["tokens_per_sec"]))
-        md.write("This pipeline: %.0f docs/sec at local[%d] (**%.1fx** reference), "
-                 "per-core: %.2fx reference single-core.\n\n"
-                 % (r_big["docs_per_sec"], n_big,
-                    r_big["docs_per_sec"] / ref["docs_per_sec"],
-                    (r_big["docs_per_sec"] / n_big) / ref["docs_per_sec"]))
     md.write("## Per-query wall seconds\n\n| query | local[%d] | local[%d] |\n|---|---|---|\n"
              % (n_small, n_big))
     for name in r_big["queries"]:

@@ -19,13 +19,20 @@ Every input is generated once, by this checkout:
                  windowed stitcher runs; every 50th document has 120-1,200
                  sentences and the default windows (500 sentences, the
                  longest rule distance as overlap)
+- ``rules``      one random coref_rules.tab per forest document (rules.py's
+                 constraint language, shipped rule shapes among them)
+- ``depedit``    one random depedit.ini per forest document (depedit_lite's
+                 nodes, relations, actions and ``{var}`` lines)
 
 Both sides fingerprint each document with ``fingerprint`` — depedit, the
 (windowed) kernel, parse_verbs and read_document, APIs both trees have —
 one side importing this checkout's xrenner_spark, the other the commit's,
 unpacked by ``git archive`` into a temp dir; each side runs in
-subprocesses whose PYTHONPATH is its tree.  A mismatch names its family,
-model and index.
+subprocesses whose PYTHONPATH is its tree.  A ``rules`` or ``depedit``
+document runs under the side's own models/web with that one file
+replaced (a temp directory), and its fingerprint adds depedit's output.
+A mismatch names its family, model and index, and prints the document
+and its config.
 
 ``--fingerprints`` writes tests/fixtures/kernel_fingerprints.json instead:
 per 100-document block, the md5 of the inputs and of the REV kernel's
@@ -37,9 +44,11 @@ Usage:
 
 REV defaults to 5ce8ac4, the last commit whose kernel passed the
 differential sweeps against the reference engine (their scripts:
-``git show 5ce8ac4:scripts/parity_sweep.py`` and siblings).  After an
-intended change of kernel output, commit it and run
-``--fingerprints HEAD``.  Nothing is written into the checkout except by
+``git show 5ce8ac4:scripts/parity_sweep.py`` and siblings) and the
+random-config fuzzers (``git show cb51f14:scripts/fuzz_coref_rules.py``,
+``fuzz_depedit.py``), whose generators the ``rules`` and ``depedit``
+families reuse.  After an intended change of kernel output, commit it
+and run ``--fingerprints HEAD``.  Nothing is written into the checkout except by
 ``--fingerprints``.
 """
 
@@ -48,12 +57,14 @@ import io
 import json
 import os
 import random
+import re
 import shutil
 import subprocess
 import sys
 import tarfile
 import tempfile
 import time
+from contextlib import contextmanager
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PINNED_REV = "5ce8ac4"
@@ -70,6 +81,8 @@ FAMILIES = [
     ("adversarial", "web", 2000),
     ("whitespace", "web", 2000),
     ("windowed", "web", 1000),
+    ("rules", "web", 2000),
+    ("depedit", "web", 2000),
 ]
 
 
@@ -77,22 +90,30 @@ FAMILIES = [
 # the fingerprint, identical on both sides
 # ---------------------------------------------------------------------
 
-def fingerprint(conllu, lex, max_sentences=500, overlap=None):
+def fingerprint(conllu, lex, max_sentences=500, overlap=None, rewritten=False):
     """md5 of what the kernel makes of one document — its mention rows,
     verb rows and sentence and token counts — and of read_document's
-    parse of the text as given; each an exception class if it raises."""
+    parse of the text as given; each an exception class if it raises.
+    ``rewritten`` adds depedit's output, whose lemma or morph rewrites
+    no mention row need show."""
     from xrenner_spark.kernel import analyze_document_windowed
     from xrenner_spark.kernel.parsing import read_document
     from xrenner_spark.triples import parse_verbs
 
+    def depedit():
+        return lex.depedit.run(conllu) if lex.depedit is not None else conllu
+
     def kernel():
-        text = lex.depedit.run(conllu) if lex.depedit is not None else conllu
+        text = depedit()
         res = analyze_document_windowed("doc", text, lex, max_sentences=max_sentences,
                                         pre_rewritten=True, overlap=overlap)
         return ([sorted(m.items()) for m in res.mentions],
                 sorted(parse_verbs(text).items()), res.n_sentences, res.n_tokens)
 
-    return _md5(repr((_outcome(kernel), _outcome(lambda: _parse(read_document(conllu, lex))))))
+    outcomes = (_outcome(kernel), _outcome(lambda: _parse(read_document(conllu, lex))))
+    if rewritten:
+        outcomes += (_outcome(depedit),)
+    return _md5(repr(outcomes))
 
 
 def _outcome(run):
@@ -126,22 +147,54 @@ def model_dir(model):
     return os.path.join(os.path.dirname(xrenner_spark.__file__), "models", model)
 
 
-def run_side(jobs_path, out_path):
-    """Subprocess entry: fingerprint each (model, conllu, max_sentences,
-    overlap) job of a job file with the importable tree."""
-    import xrenner_spark
+@contextmanager
+def replaced_model(src, name, text):
+    """A temp model directory: symlinks to the files of the full model
+    directory ``src``, but model file ``name`` holding ``text``."""
+    tmp = tempfile.mkdtemp(prefix="model_")
+    try:
+        for fname in os.listdir(src):
+            if fname != name:
+                os.symlink(os.path.join(src, fname), os.path.join(tmp, fname))
+        with io.open(os.path.join(tmp, name), "w", encoding="utf8") as fh:
+            fh.write(text)
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def job_fingerprints(jobs):
+    """The fingerprint of each (model, conllu, max_sentences, overlap)
+    job with the importable tree.  A job that adds (model file, text)
+    runs under its model with that file replaced, and its fingerprint
+    adds depedit's output; a config that fails to load fingerprints as
+    its exception class."""
     from xrenner_spark import load_lex
+    lexes, digests = {}, []
+    for model, conllu, max_sentences, overlap, *config in jobs:
+        if not config:
+            if model not in lexes:
+                lexes[model] = load_lex(model_dir(model))
+            digests.append(fingerprint(conllu, lexes[model], max_sentences, overlap))
+            continue
+        with replaced_model(model_dir(model), *config) as path:
+            try:
+                lex = load_lex(path)
+            except Exception as exc:  # noqa: BLE001 - a load failure is an outcome too
+                digests.append(_md5(repr(("raises", type(exc).__name__))))
+                continue
+            digests.append(fingerprint(conllu, lex, max_sentences, overlap, rewritten=True))
+    return digests
+
+
+def run_side(jobs_path, out_path):
+    """Subprocess entry: job_fingerprints of a job file."""
+    import xrenner_spark
     with io.open(jobs_path, encoding="utf8") as fh:
         jobs = json.load(fh)
-    lexes = {}
-    digests = []
-    for model, conllu, max_sentences, overlap in jobs:
-        if model not in lexes:
-            lexes[model] = load_lex(model_dir(model))
-        digests.append(fingerprint(conllu, lexes[model], max_sentences, overlap))
     with io.open(out_path, "w", encoding="utf8") as fh:
         json.dump({"tree": os.path.dirname(os.path.dirname(xrenner_spark.__file__)),
-                   "digests": digests}, fh)
+                   "digests": job_fingerprints(jobs)}, fh)
 
 
 # ---------------------------------------------------------------------
@@ -290,9 +343,243 @@ def whitespace_doc(rng):
     return "\n".join(lines)
 
 
+# random configs: coref_rules.tab (rules.py's constraint language) and
+# depedit.ini (depedit_lite's rule language); the generators of the
+# fuzzers that diffed them against the reference engine
+# (git show cb51f14:scripts/fuzz_coref_rules.py, fuzz_depedit.py)
+
+FORMS = ["proper", "common", "pronoun"]
+ENTITIES = ["person", "place", "organization", "object", "abstract",
+            "animal", "time", "event", "zork"]
+AGREES = ["male", "female", "neuter", "plural", "inanim", "1sg", "1pl",
+          "2sg", "Plur"]
+RULE_WORDS = ["cat", "dog", "bank", "report", "the", "she", "it", "Ada",
+              "Paris", "zorblax", "treaty"]
+PROP_KEYS = ["form", "text", "agree", "entity", "subclass", "cardinality",
+             "text_lower", "lemma", "pos", "func", "quoted", "mood",
+             "speaker", "sentence"]
+DIRECTIVES = ["anytext", "anyagree", "anycardinality", "anyentity",
+              "lookahead", "takefirst", "take_first", "none"]
+#: rule shapes that fire on forest documents, most of them from the
+#: shipped rules, so that matching rules (propagation, group merges,
+#: ``*`` blacklists) are drawn, not only non-matching ones
+PRODUCTIVE = [
+    ("form=pronoun", "form!=pronoun"),
+    ("form=pronoun", "text=$1&!sameparent*"),
+    ("form=pronoun", "func=/^[nc]subj/&!sameparent*"),
+    ('form="proper"', 'form="proper"&text=$1&take_first'),
+    ("none", "none"),
+    ("agree=/^1/", "agree=/^1/&samespeaker"),
+    ('func="appos"', 'has_child_func="appos"&entity=$1&anyagree'),
+    ("form=pronoun", "entity=$1"),
+    ("form=pronoun", "agree=$1"),
+    ("pos=/^(NOUN|PROPN)/", "text_lower=$1"),
+    ("form=pronoun", "anyentity&anyagree"),
+    ("form=proper", "anytext"),
+]
+
+
+def _rule_value(rng, key):
+    choices = {"form": FORMS, "entity": ENTITIES, "subclass": ENTITIES,
+               "agree": AGREES, "pos": POS, "func": FUNCS,
+               "quoted": ["True", "False"], "mood": ["question", ""],
+               "speaker": ["Ada", "Bob", ""],
+               "cardinality": ["2.0", "2", "0.0", "3.0"],
+               "sentence": ["mood: question", "speaker: Ada", "type: q", "S1 from"]}
+    return rng.choice(choices.get(key, RULE_WORDS))
+
+
+def _wrap_value(rng, key, val):
+    """A value as literal, quoted, regex or anchored regex."""
+    if key == "sentence":  # only a regex fits the Sentence repr it tests
+        return "/%s/" % (re.escape(val) if rng.random() < 0.5 else val)
+    r = rng.random()
+    if r < 0.3:
+        return '"%s"' % val
+    if r < 0.5:
+        return val
+    if r < 0.9:
+        return rng.choice(["/%s/", "/^%s/", "/%s$/", "/^%s$/"]) % val
+    return "/(%s|%s)/" % (val, _rule_value(rng, key))
+
+
+def rand_constraint(rng, ante_side):
+    """One constraint: property test (negated, ``$1``-relative), same-
+    family, structural ``$1`` test, mod / has_child_func, last[agree],
+    directive, or an unknown key or bare word (the reference's silent
+    always-true / always-false quirks); ``*`` group failure on the
+    antecedent side."""
+    r = rng.random()
+    if r < 0.55:
+        key = rng.choice(PROP_KEYS)
+        neg = "!" if rng.random() < 0.2 else ""
+        if ante_side and rng.random() < 0.25:
+            spec = "%s%s=$1" % (key, neg)
+        else:
+            spec = "%s%s=%s" % (key, neg, _wrap_value(rng, key, _rule_value(rng, key)))
+    elif r < 0.65 and ante_side:
+        spec = ("!" if rng.random() < 0.4 else "") + rng.choice(
+            ["sameparent", "samespeaker", "samesentence"])
+    elif r < 0.72 and ante_side:
+        spec = rng.choice(["head=$1", "child=$1", "hasa=$1", "mod=$1"])
+    elif r < 0.78:
+        if rng.random() < 0.5:
+            spec = "mod=%s" % rng.choice(RULE_WORDS)
+        else:
+            func = rng.choice(FUNCS)
+            spec = "has_child_func=%s" % rng.choice(['"%s"' % func, func])
+    elif r < 0.84 and ante_side:
+        spec = "last[%s]" % rng.choice(AGREES + ["nosuch"])
+    elif r < 0.92:
+        spec = rng.choice(DIRECTIVES)
+    else:
+        spec = rng.choice(["zorble", "frobnicate", "foo=bar", "foo!=bar", "foo=$1",
+                           "quux=/^x/", "hasa=cat"])
+    if ante_side and rng.random() < 0.15:
+        spec += "*"
+    return spec
+
+
+def rand_rules(rng):
+    """A coref_rules.tab of 2-6 rules of 4-6 fields, most of them
+    PRODUCTIVE shapes, some with a random constraint added."""
+    lines = []
+    for _ in range(rng.randint(2, 6)):
+        if rng.random() < 0.6:
+            ana, ante = rng.choice(PRODUCTIVE)
+            if rng.random() < 0.3:
+                ana += "&" + rand_constraint(rng, False)
+            if rng.random() < 0.3:
+                ante += "&" + rand_constraint(rng, True)
+        else:
+            ana = "&".join(rand_constraint(rng, False) for _ in range(rng.randint(1, 3)))
+            ante = "&".join(rand_constraint(rng, True) for _ in range(rng.randint(1, 3)))
+        fields = [ana, ante, str(rng.randint(0, 8)),
+                  rng.choice(["propagate", "nopropagate", "propagate",
+                              "propagate_forward", "propagate_back"])]
+        if rng.random() < 0.1:
+            fields.append("_default_")
+            if rng.random() < 0.5:
+                fields.append("0.5")
+        lines.append(";".join(fields))
+    return "\n".join(lines) + "\n"
+
+
+DEPEDIT_FIELDS = ["text", "pos", "lemma", "func", "morph", "num",
+                  "form", "upos", "feats", "deprel", "misc"]
+
+
+def rand_value(rng):
+    return rng.choice([rng.choice(POS), "NOUN|VERB", "(cat|dog)", "(c.t)", "r.*n",
+                       "[A-Z].*", "the", "(a|;)", rng.choice(FUNCS)])
+
+
+def rand_nodedef(rng, variables):
+    """A node: 1-2 &-joined criteria (negation, regex, ``{var}``), or
+    one ``#S:`` sentence-annotation criterion."""
+    crits = []
+    for _ in range(rng.randint(1, 2)):
+        attr = rng.choice(["pos", "text", "lemma", "func", "morph",
+                           "position", "num", "upos", "form"])
+        neg = "!" if rng.random() < 0.2 else ""
+        if attr == "position":
+            val = rng.choice(["first", "last", "mid"])
+        elif attr == "num":
+            val = str(rng.randint(1, 6))
+        elif rng.random() < 0.25 and variables:
+            val = "{%s}" % rng.choice(sorted(variables))
+        else:
+            val = rand_value(rng)
+        crits.append("%s%s=/%s/" % (attr, neg, val))
+    if rng.random() < 0.15:
+        return "#S:%s=/%s/" % (rng.choice(["speaker", "s_type", "dlg"]),
+                               rng.choice(["Ada", "Bob", ".+", "yes"]))
+    return "&".join(crits)
+
+
+def rand_rel(rng, a, b):
+    """Parenthood, adjacency, a distance band or == on a (real or
+    aliased) field."""
+    r = rng.random()
+    if r < 0.3:
+        return "#%d>#%d" % (a, b)
+    if r < 0.5:
+        return "#%d.#%d" % (a, b)
+    if r < 0.7:
+        lo = rng.randint(1, 3)
+        return "#%d.%d,%d#%d" % (a, lo, lo + rng.randint(0, 5), b)
+    return "#%d:%s==#%d" % (a, rng.choice(DEPEDIT_FIELDS), b)
+
+
+def shorthand_join(rels):
+    """``#1>#2``, ``#2.#3`` -> ``#1>#2.#3``; ValueError if the
+    endpoints do not chain."""
+    out = rels[0]
+    for r in rels[1:]:
+        left = r.split(">")[0].split(".")[0].split(":")[0]
+        if not out.endswith(left):
+            raise ValueError("not chainable")
+        out += r[len(left):]
+    return out
+
+
+def rand_rule(rng, variables):
+    """One depedit rule: 1-4 nodes joined by a random spanning chain of
+    relations (sometimes as shorthand) and 1-2 actions (set, with ``$1``
+    only where a positive criterion captures; head reattachment;
+    ``#S:`` annotation; ``last``)."""
+    n_nodes = rng.randint(1, 4)
+    nodes = [rand_nodedef(rng, variables) for _ in range(n_nodes)]
+    rel = "none"
+    if n_nodes > 1:
+        order = list(range(1, n_nodes + 1))
+        rng.shuffle(order)
+        rels = [rand_rel(rng, a, b) for a, b in zip(order, order[1:])]
+        if rng.random() < 0.3:
+            rels.append(rand_rel(rng, *rng.sample(order, 2)))
+        rel = ";".join(rels)
+        if (rng.random() < 0.2 and len(rels) == n_nodes - 1
+                and all(">" in r or "." in r for r in rels)):
+            try:
+                rel = shorthand_join(rels)
+            except ValueError:
+                pass
+    has_groups = any("(" in crit and "!=" not in crit
+                     for node in nodes for crit in node.split("&"))
+    actions = []
+    for _ in range(rng.randint(1, 2)):
+        kind = rng.random()
+        tgt = rng.randint(1, n_nodes)
+        if kind < 0.5:
+            attr = rng.choice(["morph", "func", "lemma", "func2", "pos"])
+            val = rng.choice(["X", "Y=Z", "pre-$1"] if has_groups else ["X", "Y=Z", "W"])
+            actions.append("#%d:%s=%s" % (tgt, attr, val))
+        elif kind < 0.65 and n_nodes >= 2:
+            actions.append("#%d>#%d" % tuple(rng.sample(range(1, n_nodes + 1), 2)))
+        elif kind < 0.8:
+            actions.append("#S:%s=%s" % (rng.choice(["dlg", "seen"]), rng.choice(["yes", "no"])))
+        elif kind < 0.9:
+            actions.append("last")
+        else:
+            actions.append("#%d:morph=M" % tgt)
+    return "\t".join([";".join(nodes), rel, ";".join(actions)])
+
+
+def rand_depedit(rng):
+    """A depedit.ini: sometimes ``{var}`` definitions, then 1-3 rules."""
+    variables, lines = {}, []
+    if rng.random() < 0.3:
+        for v in ("v1", "v2")[:rng.randint(1, 2)]:
+            variables[v] = rand_value(rng)
+            lines.append("{%s}=/%s/" % (v, variables[v]))
+    lines.extend(rand_rule(rng, variables) for _ in range(rng.randint(1, 3)))
+    return "\n".join(lines) + "\n"
+
+
 def family_docs(family, n):
     """The first ``n`` documents of a family: (conllu, max_sentences,
-    overlap) triples; the family name seeds its random draws."""
+    overlap) triples, plus (model file, text) for a config family; the
+    family name seeds its random draws."""
     from xrenner_spark.corpus import build_document
     rng = random.Random(family)
     docs = []
@@ -309,6 +596,13 @@ def family_docs(family, n):
             docs.append((mutators[i % 3](build_document(k)["conllu"], k), 500, None))
     elif family == "whitespace":
         docs = [(whitespace_doc(rng), 500, None) for _ in range(n)]
+    elif family in ("rules", "depedit"):
+        heads, names = vocabulary()
+        name, rand_config = {"rules": ("coref_rules.tab", rand_rules),
+                             "depedit": ("depedit.ini", rand_depedit)}[family]
+        for _ in range(n):
+            config = rand_config(rng)
+            docs.append((forest_doc(rng, heads, names), 500, None, name, config))
     elif family == "windowed":
         for i in range(n):
             long_doc = i % 50 == 0  # default windows: rule distances up to 100
@@ -326,8 +620,7 @@ def family_docs(family, n):
 
 
 def jobs_of(family, model, n):
-    return [(model, conllu, max_sentences, overlap)
-            for conllu, max_sentences, overlap in family_docs(family, n)]
+    return [(model,) + doc for doc in family_docs(family, n)]
 
 
 def input_digest(job):
@@ -431,6 +724,8 @@ def main(argv):
         family, model, i, job = first
         print("first mismatch: %s/%s document %d (max_sentences=%d, overlap=%s):\n%s"
               % (family, model, i, job[2], job[3], job[1][:2000]))
+        if len(job) > 4:
+            print("under %s:\n%s" % (job[4], job[5]))
         return 1
     return 0
 

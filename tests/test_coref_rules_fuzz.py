@@ -1,25 +1,30 @@
 """Pinned coref-rule differential-fuzz cases.
 
-scripts/fuzz_coref_rules.py ran 5,000 random coref_rules.tab configs
-(~7,500 random docs, 8 seeds + the fixture seed) against the reference
-engine with 0 divergences; these 25 link-producing samples pin that
-surface — random constraint mini-language programs (literal / quoted /
-regex / anchored values, negation, $1-relative tests, same-family,
-last[], mod / has_child_func, group-failure ``*``, directives, and the
-reference's silent unknown-key quirks) — WITHOUT needing the reference
-at test time.  Regenerate with
-``python scripts/fuzz_coref_rules.py 1000 7 --fixture`` (sandbox-only).
+A fuzzer ran 5,000 random coref_rules.tab configs (~7,500 random docs,
+8 seeds + the fixture seed) against the reference engine with 0
+divergences; these 25 link-producing samples pin that surface — random
+constraint mini-language programs (literal / quoted / regex / anchored
+values, negation, $1-relative tests, same-family, last[], mod /
+has_child_func, group-failure ``*``, directives, and the reference's
+silent unknown-key quirks) — WITHOUT needing the reference at test
+time.  The mentions are reference outputs, made by
+``git show cb51f14:scripts/fuzz_coref_rules.py`` (``1000 7 --fixture``);
+the live gate for random rule configs is now the ``rules`` family of
+scripts/self_diff.py.
 """
 
+import importlib.util
 import json
 import os
-import shutil
-import tempfile
 
 import pytest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 MODEL = os.path.join(HERE, "..", "xrenner_spark", "models", "web")
+_spec = importlib.util.spec_from_file_location(
+    "self_diff", os.path.join(HERE, "..", "scripts", "self_diff.py"))
+self_diff = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(self_diff)
 
 
 def _fuzz_cases():
@@ -42,18 +47,8 @@ def test_rule_fuzz_cases_match_reference(name, case):
     from xrenner_spark import load_lex
     from xrenner_spark.kernel import analyze_document
 
-    tmp = tempfile.mkdtemp(prefix="coreffuzzpin_")
-    try:
-        for fname in os.listdir(MODEL):
-            if fname == "coref_rules.tab":
-                continue
-            os.symlink(os.path.join(MODEL, fname), os.path.join(tmp, fname))
-        with open(os.path.join(tmp, "coref_rules.tab"), "w",
-                  encoding="utf8") as fh:
-            fh.write(case["rules"])
-        lex = load_lex(tmp)
+    with self_diff.replaced_model(MODEL, "coref_rules.tab", case["rules"]) as path:
+        lex = load_lex(path)
         ours = _mention_tuples(analyze_document("fuzz", case["input"], lex))
-        expected = sorted([list(m) for m in case["mentions"]])
-        assert ours == expected
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    expected = sorted([list(m) for m in case["mentions"]])
+    assert ours == expected

@@ -100,9 +100,12 @@ def _fuzz_cases():
 @pytest.mark.parametrize("name,case", _fuzz_cases(),
                          ids=[n for n, _ in _fuzz_cases()])
 def test_fuzz_cases_match_reference(name, case):
-    """Reference-captured differential-fuzz cases (scripts/
-    fuzz_depedit.py --fixture; the live fuzzer ran 4,000+ trials across
-    seeds with 0 divergences — these 40 rule-changed samples pin that
-    surface without needing the reference at test time)."""
+    """Reference-captured differential-fuzz cases: the fuzzer ran
+    4,000+ trials across seeds with 0 divergences, and these 40
+    rule-changed samples pin that surface without needing the reference
+    at test time.  The outputs are reference outputs, made by
+    ``git show cb51f14:scripts/fuzz_depedit.py`` (``--fixture``); the
+    live gate for random depedit configs is now the ``depedit`` family
+    of scripts/self_diff.py."""
     engine = DepEditLite(case["ini"].split("\n"))
     assert engine.run(case["input"]) == case["output"]

@@ -11,8 +11,6 @@ import os
 
 import pytest
 
-from xrenner_spark import load_lex
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _spec = importlib.util.spec_from_file_location(
     "self_diff", os.path.join(REPO, "scripts", "self_diff.py"))
@@ -38,9 +36,7 @@ def test_kernel_output_matches_fingerprints(family, model, _n):
         "%s: the generated inputs changed (corpus.build_document or a "
         "self_diff generator), not the kernel; regenerate the fixture with "
         "scripts/self_diff.py --fingerprints" % key)
-    lex = load_lex(self_diff.model_dir(model))
-    outputs = self_diff.block_digests(
-        [self_diff.fingerprint(conllu, lex, ms, ov) for _m, conllu, ms, ov in jobs])
+    outputs = self_diff.block_digests(self_diff.job_fingerprints(jobs))
     bad = [i for i, (got, exp) in enumerate(zip(outputs, want["outputs"])) if got != exp]
     assert not bad, (
         "%s: kernel output changed on the same inputs, first in documents "
