@@ -95,9 +95,8 @@ def _ensure_kg_exports(spark: SparkSession, sf_dir: str) -> str:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: triples from the synthetic web corpus at sf0.001."""
-    from xrenner_spark.pipeline import chains_stage, triples_stage
-    kernel_out = _kg_kernel_out(spark, _SF0001)
-    return triples_stage(kernel_out, chains=chains_stage(kernel_out))
+    from xrenner_spark.pipeline import triples_stage
+    return triples_stage(_kg_kernel_out(spark, _SF0001))
 
 
 # ---------------------------------------------------------------------

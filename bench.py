@@ -73,9 +73,7 @@ def _timed_runs(spark, n_docs):
 
     # headline: the full KG construction pipeline, run_pipeline from
     # generated pages to its written stage, lineage, chains and triples
-    # tables in a temp warehouse; the count reads the written triples back
-    # (a count over an unwritten triples plan lets Catalyst drop the
-    # chains join, so canonicalization would go untimed).
+    # tables in a temp warehouse; the count reads the written triples back.
     # best-of-2 like the operator queries below: host tenancy arrives in
     # bursts the md5 canary misses, and a burst landing on the single
     # headline number would poison the whole round's record

@@ -20,9 +20,11 @@ Every input is generated once, by this checkout:
                  sentences and the default windows (500 sentences, the
                  longest rule distance as overlap)
 - ``rules``      one random coref_rules.tab per forest document (rules.py's
-                 constraint language, shipped rule shapes among them)
+                 constraint language, shipped rule shapes among them; half
+                 open with a ``*`` group failure before a linking rule)
 - ``depedit``    one random depedit.ini per forest document (depedit_lite's
-                 nodes, relations, actions and ``{var}`` lines)
+                 nodes, relations, half of them distance bands, actions
+                 and ``{var}`` lines)
 
 Both sides fingerprint each document with ``fingerprint`` — depedit, the
 (windowed) kernel, parse_verbs and read_document, APIs both trees have —
@@ -440,11 +442,31 @@ def rand_constraint(rng, ante_side):
     return spec
 
 
+#: ``*`` group failures of the ``parent`` key, whose failure on a
+#: candidate makes the anaphor refuse the candidate's group, and
+#: antecedent shapes that link to most candidates
+GROUP_FAILURES = ["!sameparent*", "sameparent*", "parent=$1*", "parent!=$1*"]
+LINKING = ["form!=pronoun", "anytext", "anyentity&anyagree", "none",
+           "entity=$1", "agree=$1"]
+
+
+def blacklist_pair(rng):
+    """Two rules for one anaphor shape: a ``*`` group failure that seldom
+    links itself (a random constraint follows it), then a rule that would
+    link into the groups the first refused."""
+    ana = rng.choice(PRODUCTIVE)[0]
+    distance = str(rng.randint(1, 8))
+    return [";".join([ana, rng.choice(GROUP_FAILURES) + "&" + rand_constraint(rng, True),
+                      distance, "propagate"]),
+            ";".join([ana, rng.choice(LINKING), distance, "propagate"])]
+
+
 def rand_rules(rng):
     """A coref_rules.tab of 2-6 rules of 4-6 fields, most of them
-    PRODUCTIVE shapes, some with a random constraint added."""
-    lines = []
-    for _ in range(rng.randint(2, 6)):
+    PRODUCTIVE shapes, some with a random constraint added; half of the
+    configs open with a blacklist_pair."""
+    lines = blacklist_pair(rng) if rng.random() < 0.5 else []
+    for _ in range(rng.randint(2, 6) - len(lines)):
         if rng.random() < 0.6:
             ana, ante = rng.choice(PRODUCTIVE)
             if rng.random() < 0.3:
@@ -498,14 +520,14 @@ def rand_nodedef(rng, variables):
 
 
 def rand_rel(rng, a, b):
-    """Parenthood, adjacency, a distance band or == on a (real or
-    aliased) field."""
+    """Parenthood, adjacency, a distance band (half of all relations)
+    or == on a (real or aliased) field."""
     r = rng.random()
-    if r < 0.3:
+    if r < 0.2:
         return "#%d>#%d" % (a, b)
-    if r < 0.5:
+    if r < 0.3:
         return "#%d.#%d" % (a, b)
-    if r < 0.7:
+    if r < 0.8:
         lo = rng.randint(1, 3)
         return "#%d.%d,%d#%d" % (a, lo, lo + rng.randint(0, 5), b)
     return "#%d:%s==#%d" % (a, rng.choice(DEPEDIT_FIELDS), b)

@@ -1,5 +1,5 @@
-"""End-to-end Spark pipeline tests: the SQL chain/triple stage must agree
-with the plain-Python extractor, the byte-identity invariant must hold on
+"""End-to-end Spark pipeline tests: the written triples must agree with
+the plain-Python extractor, the byte-identity invariant must hold on
 every row, and a killed/rerun job must resume from checkpoints."""
 
 import os
@@ -45,8 +45,8 @@ def test_kernel_stage_clean(spark, warehouse):
 
 
 def test_sql_triples_match_python_extractor(spark, warehouse):
-    """The distributed SQL stage (groupBy canonicalization + verb joins)
-    must produce exactly the triples the sequential extractor computes."""
+    """The written triples (the kernel loop's rows, filtered) are exactly
+    the triples the sequential extractor computes per document."""
     cat = Catalog(spark, warehouse)
     rows = cat.read("triples").collect()
     spark_keys = {(r.url, r.subj, r.pred, r.obj, r.sent_num) for r in rows}
@@ -309,31 +309,10 @@ def test_dedup_kernel_inputs_giant_doc(spark, tmp_path):
     assert rec[0].n_sentences > 500  # the windowed path actually ran
 
 
-def test_triples_plan_joins_written_chains(spark, warehouse, monkeypatch):
-    """Canonicalization runs once per pass: the triples plan run_pipeline
-    writes reads the chains table instead of aggregating again."""
-    written = {}
-    orig_write = Catalog.write
-
-    def recording_write(self, df, name, *args, **kwargs):
-        written[name] = df._jdf.queryExecution().optimizedPlan().toString()
-        return orig_write(self, df, name, *args, **kwargs)
-
-    monkeypatch.setattr(Catalog, "write", recording_write)
-    for table in ("triples", "chains"):
-        shutil.rmtree(os.path.join(warehouse, table))
-    run_pipeline(spark, generate_pages(spark, 5, partitions=2), warehouse,
-                 partitions=4)
-
-    assert list(written) == ["chains", "triples"]
-    assert "min_by" in written["chains"] and "max_by" in written["chains"]
-    assert "min_by" not in written["triples"]
-    assert "max_by" not in written["triples"]
-
-
-def test_triples_plan_has_one_exchange(spark, warehouse, monkeypatch):
-    """The role-tagged arguments are computed once and grouped per verb:
-    one shuffle, no sort-merge self-join of two argument copies."""
+def test_chains_and_triples_writes_are_filters(spark, warehouse, monkeypatch):
+    """Stage 3 has no shuffle: the chains and triples run_pipeline writes
+    are filters of the kernel checkpoint, with no Exchange and no join in
+    their executed plans."""
     written = {}
     orig_write = Catalog.write
 
@@ -342,13 +321,67 @@ def test_triples_plan_has_one_exchange(spark, warehouse, monkeypatch):
         return orig_write(self, df, name, *args, **kwargs)
 
     monkeypatch.setattr(Catalog, "write", recording_write)
-    shutil.rmtree(os.path.join(warehouse, "triples"))
+    for table in ("triples", "chains"):
+        shutil.rmtree(os.path.join(warehouse, table))
     run_pipeline(spark, generate_pages(spark, 5, partitions=2), warehouse,
                  partitions=4)
 
-    nodes = written["triples"]
-    assert nodes.count("Exchange") == 1
-    assert "SortMergeJoin" not in nodes
+    assert sorted(written) == ["chains", "triples"]
+    for nodes in written.values():
+        assert "Scan parquet " in nodes and "Filter" in nodes, nodes
+        assert not [n for n in nodes if "Exchange" in n or "Join" in n], nodes
+
+
+def test_pass_runs_nine_jobs(spark, tmp_path, monkeypatch):
+    """A plain run_pipeline pass runs 9 Spark jobs, one each for the
+    chains and triples writes, and none outside a Catalog.write: each
+    write runs under a job group of its table's name."""
+    sc = spark.sparkContext
+    prefix = "nine-jobs-%s/" % tmp_path.name
+    orig_write = Catalog.write
+
+    def grouped_write(self, df, name, *args, **kwargs):
+        sc.setJobGroup(prefix + name, name)
+        try:
+            return orig_write(self, df, name, *args, **kwargs)
+        finally:
+            sc.setJobGroup(prefix + "outside", "outside")
+
+    monkeypatch.setattr(Catalog, "write", grouped_write)
+    sc.setJobGroup(prefix + "outside", "outside")
+    try:
+        run_pipeline(spark, generate_pages(spark, 20, partitions=2),
+                     str(tmp_path / "wh"), partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = {name: len(tracker.getJobIdsForGroup(prefix + name))
+            for name in ("outside", "stage_extract", "_lineage_extract",
+                         "stage_kernel", "_lineage_kernel", "chains", "triples")}
+    assert jobs["outside"] == 0
+    assert jobs["chains"] == jobs["triples"] == 1
+    assert sum(jobs.values()) == 9, jobs
+
+
+def test_resume_refuses_an_old_shaped_kernel_checkpoint(spark, tmp_path):
+    """A stage_kernel written before the kernel loop emitted chain and
+    triple rows reads back without them: resuming it would write empty
+    chains and triples, so the pass refuses and says how to recompute."""
+    from xrenner_spark.pipeline import KERNEL_SCHEMA
+    pages = generate_pages(spark, 5, partitions=2)
+    wh = str(tmp_path / "wh")
+    cat = Catalog(spark, wh)
+    names = KERNEL_SCHEMA.fieldNames()
+    old = kernel_stage(extract_stage(pages), spark.sparkContext.broadcast(load_lex()))
+    cat.write(old.filter("row_type IN ('d', 'm', 'v')")
+              .select(*names[:names.index("verb_lemma") + 1]), "stage_kernel")
+
+    with pytest.raises(ValueError, match=r"resume=False \(run_kg --no-resume\)"):
+        run_pipeline(spark, pages, wh, partitions=2)
+    assert not cat.exists("chains") and not cat.exists("triples")
+    assert run_pipeline(spark, pages, wh, partitions=2, resume=False).count() > 0
 
 
 def test_resume_warns_when_model_changes(spark, warehouse, capsys):

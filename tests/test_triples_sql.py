@@ -3,7 +3,13 @@ formulation, frozen here as the reference: the same multiset of rows on
 kernel output (clean and corrupt pages) and on a hand-built table of
 edge cases, with and without a precomputed chains table.
 Without a written table the statement is given the unwritten
-chains_from_mentions plan, and the reference aggregates its own."""
+chains_from_mentions plan, and the reference aggregates its own.
+
+The statements are in turn the spec of the chain and triple rows the
+kernel loop emits (triples.canonical_mentions / extract_triples per
+document): the emitted rows, and those functions fed each document's
+rows of the hand-built tables, equal the statements' rows as a multiset
+with the same column types."""
 
 from collections import Counter
 
@@ -14,8 +20,10 @@ from pyspark.sql import types as T
 from xrenner_spark import load_lex
 from xrenner_spark.catalog import Catalog
 from xrenner_spark.pipeline import (KERNEL_SCHEMA, chains_from_mentions,
-                                    extract_stage, generate_pages, kernel_stage,
-                                    mentions_view, triples_from_views, verbs_view)
+                                    chains_stage, docs_view, extract_stage, generate_pages,
+                                    kernel_stage, mentions_view, triples_from_views,
+                                    triples_stage, verbs_view)
+from xrenner_spark.triples import canonical_mentions, extract_triples
 
 SUBJECT_FUNC = "^[nc]subj"
 OBJECT_FUNC = "^(obj|dobj|iobj|obl|nmod)$"
@@ -110,9 +118,10 @@ def kernel_out(spark, corrupt_pages, tmp_path_factory):
 
 
 def _mention(url, mark_id, group_id, head_func, head_parent, core_text,
-             form="common", start=1, sent_num=1, entity="person"):
+             form="common", start=1, sent_num=1, entity="person", end=None):
     return dict(url=url, warc_ts=None, mark_id=mark_id, start=start,
-                end=start + 1, text=core_text, core_text=core_text,
+                end=start + 1 if end is None else end, text=core_text,
+                core_text=core_text,
                 entity=entity, form=form, group_id=group_id,
                 head_func=head_func, head_parent=head_parent, sent_num=sent_num)
 
@@ -173,10 +182,48 @@ def edge_views(spark):
     ]
     v = [("a", 5, "see"), ("a", 10, "sleep"), ("b", 2, "write"),
          ("c", 2, "give"), ("d", 3, "open")]
+    return _views(spark, m, v)
+
+
+def _views(spark, m, v):
     mentions = spark.createDataFrame(
         [tuple(row[f.name] for f in _EDGE_MENTIONS) for row in m], _EDGE_MENTIONS)
     verbs = spark.createDataFrame(v, _EDGE_VERBS)
     return mentions, verbs
+
+
+@pytest.fixture(scope="module")
+def null_views(spark):
+    """SQL's NULL logic and the orderings' tie-breaks: a NULL form (neither
+    proper nor non-pronoun), a NULL core_text (its length orders first), a
+    NULL head_func, a NULL head_parent, a NULL group, a non-verb
+    head_parent, two proper spans sharing a start, two nominals sharing a
+    length, and a group of NULL-form mentions only."""
+    m = [
+        # group 1: the NULL-form subject is not proper, so the pronoun is
+        # the only other member and the first span wins
+        _mention("e", "1", 1, "nsubj", 2, "Zed", form=None, entity="thing"),
+        _mention("e", "2", 1, None, 2, "he", form="pronoun", start=2),
+        # group 2: a NULL core_text loses the longest-nominal order
+        _mention("e", "3", 2, "obj", 2, None, start=3),
+        _mention("e", "4", 2, "nsubj", 9, "a box", start=5),
+        # group 3: NULL forms only: neither proper nor nominal
+        _mention("e", "5", 3, "obl", 2, "thing", form=None, start=6),
+        _mention("e", "6", 3, "obj", 2, "stuff", form=None, start=7),
+        # group 4: proper spans with one start: the shorter end is first
+        _mention("e", "7", 4, "nsubj", 2, "Ann Lee", form="proper", start=8, end=10),
+        _mention("e", "8", 4, "nsubj", None, "Ann", form="proper", start=8, end=9),
+        # group 5: nominals of one length: the earlier start, then end
+        _mention("e", "9", 5, "iobj", 2, "cat", start=13, end=15),
+        _mention("e", "10", 5, "dobj", 2, "dog", start=11, end=14),
+        _mention("e", "11", 5, "nmod", 2, "cow", start=11, end=12),
+        # a NULL group: its own chain row, no chain fields on its triples
+        _mention("e", "12", None, "csubj", 2, "Nobody", start=16),
+        _mention("f", "1", 1, "nsubj", 4, "Sue", form="proper"),
+        _mention("f", "2", None, "obj", 4, "none", start=2),
+    ]
+    v = [("e", 2, "put"), ("f", 4, "take")]
+    return _views(spark, m, v)
 
 
 def test_chains_statement_matches_reference(kernel_out, edge_views):
@@ -228,3 +275,109 @@ def test_edge_case_triples(spark, edge_views, tmp_path):
         ("b", "Lee", "write", None),
         ("c", "Max", "give", "it"), ("c", "Max", "give", "nothing"),
     ])
+
+
+def _typed_rows(df):
+    """Column types and the multiset of rows; list cells sorted, since
+    ``collect_list`` order (chains.mention_ids) is not fixed.  A type is
+    compared as its SQL name: a parquet read makes array elements
+    nullable."""
+    return ([(f.name, f.dataType.simpleString()) for f in df.schema],
+            Counter(tuple(tuple(sorted(v)) if isinstance(v, list) else v for v in r)
+                    for r in df.collect()))
+
+
+def _python_chains_and_triples(spark, mentions, verbs, like):
+    """canonical_mentions/extract_triples over each document's rows of
+    ``mentions``/``verbs``, as DataFrames with ``like``'s columns (chains,
+    triples) typed as the kernel table's columns of those names."""
+    docs, lemmas = {}, {}
+    for r in mentions.collect():
+        docs.setdefault(r.url, []).append(r.asDict())
+    for r in verbs.collect():
+        lemmas.setdefault(r.url, {})[r.verb_id] = r.verb_lemma
+    chains, triples = [], []
+    for url, ms in docs.items():
+        by_group = canonical_mentions(ms)
+        chains += [dict(c, url=url) for c in by_group.values()]
+        triples += [dict(t, url=url, warc_ts=ms[0]["warc_ts"])
+                    for t in extract_triples(ms, lemmas.get(url, {}), by_group)]
+    return [spark.createDataFrame(
+        [tuple(row[c] for c in df.columns) for row in rows],
+        T.StructType([KERNEL_SCHEMA[c] for c in df.columns]))
+        for rows, df in zip((chains, triples), like)]
+
+
+def _statements(mentions, verbs):
+    chains = chains_from_mentions(mentions)
+    return chains, triples_from_views(mentions, verbs, chains=chains)
+
+
+def _one_document_per_url(kernel_out):
+    """The kernel rows of the urls with one analyzed document.  The
+    fixture holds pages 0-11 twice (corrupt_pages and generate_pages):
+    the statements group by url, so they merge two documents under one
+    url, while the kernel loop keeps each document's chains and triples
+    its own (test_repeated_url_keeps_each_documents_rows)."""
+    single = (docs_view(kernel_out).filter("error = ''").groupBy("url").count()
+              .filter("count = 1").select("url"))
+    return kernel_out.join(single, "url", "left_semi")
+
+
+def test_emitted_chains_and_triples_match_statements(kernel_out):
+    """The kernel loop's 'c' and 't' rows (clean and corrupt pages) are
+    the statements' chains and triples over its 'm' and 'v' rows."""
+    kernel = _one_document_per_url(kernel_out)
+    want = _statements(mentions_view(kernel), verbs_view(kernel))
+    for got, ref in zip((chains_stage(kernel), triples_stage(kernel)), want):
+        assert got.columns == ref.columns
+        got_rows, ref_rows = _typed_rows(got), _typed_rows(ref)
+        assert got_rows == ref_rows
+        assert got_rows[1]
+
+
+@pytest.mark.parametrize("views", ["kernel_out", "edge_views", "null_views"])
+def test_python_chains_and_triples_match_statements(spark, request, views):
+    """The Python functions the kernel loop calls, fed per document, give
+    the statements' rows: on kernel output and on the hand-built tables
+    of edge cases and NULLs."""
+    if views == "kernel_out":
+        kernel = _one_document_per_url(request.getfixturevalue(views))
+        mentions, verbs = mentions_view(kernel), verbs_view(kernel)
+    else:
+        mentions, verbs = request.getfixturevalue(views)
+    want = _statements(mentions, verbs)
+    for got, ref in zip(_python_chains_and_triples(spark, mentions, verbs, want), want):
+        assert _typed_rows(got) == _typed_rows(ref)
+
+
+def test_repeated_url_keeps_each_documents_rows(spark):
+    """Two documents under one url each get their own chain and triple
+    rows, those the document gets alone, where the url-keyed statements
+    would merge their chains and pair one's subjects with the other's
+    objects."""
+    bcast = spark.sparkContext.broadcast(load_lex())
+    page = generate_pages(spark, 1, partitions=1)
+    alone = kernel_stage(extract_stage(page), bcast)
+    twice = kernel_stage(extract_stage(page.unionByName(page)), bcast)
+    for stage in (chains_stage, triples_stage):
+        once = _typed_rows(stage(alone))
+        assert once[1]
+        assert _typed_rows(stage(twice)) == (once[0], once[1] + once[1])
+
+
+def test_null_case_chains_and_triples(null_views):
+    """What the NULL cases yield, spelled out: each chain's canonical
+    string, and every subject x object pair of doc e's verb (three
+    subjects; six objects in groups 2, 3, 3, 5, 5, 5) and doc f's."""
+    chains, triples = _statements(*null_views)
+    assert {(r.url, r.group_id): r.canonical_text for r in chains.collect()} == {
+        ("e", 1): "Zed", ("e", 2): "a box", ("e", 3): "thing", ("e", 4): "Ann",
+        ("e", 5): "cow", ("e", None): "Nobody", ("f", 1): "Sue", ("f", None): "none"}
+    want = Counter()
+    for subj, entity in (("Zed", "thing"), ("Ann", "person"), (None, None)):
+        for obj, n in (("a box", 1), ("thing", 2), ("cow", 3)):
+            want[("e", subj, obj, entity)] += n
+    want[("f", "Sue", None, "person")] += 1
+    assert Counter((r.url, r.subj, r.obj, r.subj_entity)
+                   for r in triples.collect()) == want

@@ -12,22 +12,22 @@ markers), so building a pass's plans costs a few py4j round trips each:
       │  checkpoint: table stage_extract + _lineage_extract (lineage_of)
       ▼
     stage 2  kernel: mapInArrow (_map_docs) per-document mention/entity/coref
-      │  kernel (analyze_page); long format: one row per doc, mention and
-      │  verb + kernel_ms.  dedup_kernel_inputs: one statement picks a
-      │  representative per payload, the kernel runs on it, one statement
-      │  joins its rows back to every copy
+      │  kernel (analyze_page); long format: one row per doc, mention,
+      │  verb, chain and triple + kernel_ms.  Chains and triples are per
+      │  document, so the task that holds a document's mentions and verbs
+      │  emits them (triples.canonical_mentions / extract_triples).
+      │  dedup_kernel_inputs: one statement picks a representative per
+      │  payload, the kernel runs on it, one statement joins its rows back
+      │  to every copy
       │  checkpoint: table stage_kernel + _lineage_kernel (lineage_of)
       ▼
-    stage 3  statements over mentions_view / verbs_view, the only
-      │  definition of the kernel table's 'm' / 'v' rows:
-      │  chains = chains_from_mentions(mentions_view): GROUP BY (url,
-      │  group_id) with canonicalization aggregates → chains table, written
-      │  FIRST
-      ▼
-             triples = triples_from_views(mentions_view, verbs_view,
-             chains=<written chains>): role-tagged arguments once, ONE
-             exchange GROUP BY (url, verb_id) collecting subjects and
-             objects, pairs via inline/transform → triples table
+    stage 3  two map-only filters of stage_kernel, no exchange, no join,
+             independent of each other:
+             chains  = chains_stage:  row_type = 'c' → chains table
+             triples = triples_stage: row_type = 't' → triples table
+             (chains_from_mentions / triples_from_views are the same
+             tables as GROUP BY statements over exported mentions and
+             verbs: the DuckDB oracles' entry points)
 
 kg_pass is this graph over a Catalog: run_pipeline runs one pass, and
 stream_pipeline one per micro-batch into a ``batch_id=<id>`` partition.
@@ -59,7 +59,8 @@ from pyspark.sql import types as T
 from .catalog import Catalog
 from .kernel import analyze_document_windowed
 from .lex import load_lex
-from .triples import OBJECT_FUNC, SUBJECT_FUNC_DEFAULT, parse_verbs
+from .triples import (OBJECT_FUNC, SUBJECT_FUNC_DEFAULT, canonical_mentions,
+                      extract_triples, parse_verbs)
 
 # ---------------------------------------------------------------------
 # schemas
@@ -109,19 +110,21 @@ MENTION_STRUCT = T.StructType([
 ])
 
 # The kernel stage emits LONG format: one flat row per document ('d',
-# carrying the metrics/lineage fields), per mention ('m') and per verb
-# ('v').  A nested array<struct> checkpoint was measured 4.3x slower to
-# consume (the triples stage re-decodes every 21-field mention struct on
-# each of its three scans, and nested cells defeat column pruning);
-# long-format parquet keeps each field a prunable column and the
-# checkpoint remains ONE table for resume.
+# carrying the metrics/lineage fields), per mention ('m'), per verb ('v'),
+# per chain ('c') and per triple ('t').  A nested array<struct> checkpoint
+# was measured 4.3x slower to consume (nested cells defeat column
+# pruning); long-format parquet keeps each field a prunable column and the
+# checkpoint remains ONE table for resume.  A chain row reuses group_id
+# and entity (the chain's), a triple row sent_num and verb_id; the other
+# chain and triple fields have columns of their own, named and typed as in
+# the chains and triples tables.
 KERNEL_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
         T.StructField("warc_ts", T.TimestampType()),
         T.StructField("lang", T.StringType()),
         T.StructField("part_id", T.IntegerType()),
-        T.StructField("row_type", T.StringType()),  # 'd' | 'm' | 'v'
+        T.StructField("row_type", T.StringType()),  # 'd' | 'm' | 'v' | 'c' | 't'
         T.StructField("text_sha256", T.StringType()),
         T.StructField("n_sentences", T.IntegerType()),
         T.StructField("n_tokens", T.IntegerType()),
@@ -132,9 +135,27 @@ KERNEL_SCHEMA = T.StructType(
     + [
         T.StructField("verb_id", T.IntegerType()),
         T.StructField("verb_lemma", T.StringType()),
+        # chain rows
+        T.StructField("n_mentions", T.LongType()),
+        T.StructField("mention_ids", T.ArrayType(T.StringType())),
+        T.StructField("canonical_text", T.StringType()),
+        # triple rows
+        T.StructField("subj", T.StringType()),
+        T.StructField("pred", T.StringType()),
+        T.StructField("obj", T.StringType()),
+        T.StructField("subj_group", T.LongType()),
+        T.StructField("obj_group", T.LongType()),
+        T.StructField("subj_entity", T.StringType()),
+        T.StructField("obj_entity", T.StringType()),
     ])
 
 _MENTION_FIELDS = [f.name for f in MENTION_STRUCT.fields]
+#: the chains and triples tables' columns after url (and warc_ts), in
+#: order: each is a column of the kernel's 'c' / 't' rows and a key of
+#: triples.canonical_mentions' / extract_triples' dicts
+_CHAIN_FIELDS = ("group_id", "n_mentions", "entity", "mention_ids", "canonical_text")
+_TRIPLE_FIELDS = ("subj", "pred", "obj", "subj_group", "obj_group", "subj_entity",
+                  "obj_entity", "sent_num", "verb_id")
 _KERNEL_COLS = [f.name for f in KERNEL_SCHEMA.fields]
 
 
@@ -440,34 +461,45 @@ def _append_rows(out: dict, rows) -> None:
 
 
 def _emit_kernel(out: dict, doc: dict, result, error: str) -> None:
-    """Long-format kernel rows for one document, one bulk extend per
-    column: constant-per-doc columns as repeated slices, mention columns
-    as comprehensions."""
+    """Long-format kernel rows for one document: its doc row, then its
+    mention, verb, chain and triple rows.  Every column is first extended
+    by the document's row count of NULLs, then each row type's columns
+    overwrite their slice.  The chain and triple rows are
+    triples.canonical_mentions and extract_triples over this document's
+    mentions and verbs, the task's own data, so the chains and triples
+    tables are filters of this table with no exchange."""
     if result is None:
-        mentions, verbs, n_sent, n_tok = [], [], 0, 0
+        mentions, verbs, chains, triples, n_sent, n_tok = [], [], [], [], 0, 0
     else:
         mentions = result.mentions
         verbs = sorted(parse_verbs(doc["conllu"]).items())
+        by_group = canonical_mentions(mentions)
+        triples = extract_triples(mentions, dict(verbs), by_group)
+        chains = list(by_group.values())
         n_sent, n_tok = result.n_sentences, result.n_tokens
-    n_m, n_v = len(mentions), len(verbs)
-    n = 1 + n_m + n_v
+    blocks = (
+        ("d", 1, {"text_sha256": [doc["text_sha256"]], "n_sentences": [n_sent],
+                  "n_tokens": [n_tok], "kernel_ms": [doc["kernel_ms"]],
+                  "error": [error]}),
+        ("m", len(mentions), {k: [m[k] for m in mentions] for k in _MENTION_FIELDS}),
+        ("v", len(verbs), {"verb_id": [tid for tid, _ in verbs],
+                           "verb_lemma": [lemma for _, lemma in verbs]}),
+        ("c", len(chains), {k: [c[k] for c in chains] for k in _CHAIN_FIELDS}),
+        ("t", len(triples), {k: [t[k] for t in triples] for k in _TRIPLE_FIELDS}),
+    )
+    base = len(out["url"])
+    n = sum(count for _, count, _ in blocks)
+    nulls = [None] * n
+    for column in out.values():
+        column.extend(nulls)
     for k in ("url", "warc_ts", "lang", "part_id"):
-        out[k].extend([doc[k]] * n)
-    out["row_type"].extend(["d"] + ["m"] * n_m + ["v"] * n_v)
-    # doc-row-only metrics columns
-    pad = [None] * (n_m + n_v)
-    for k, v in (("text_sha256", doc["text_sha256"]), ("n_sentences", n_sent),
-                 ("n_tokens", n_tok), ("kernel_ms", doc["kernel_ms"]),
-                 ("error", error)):
-        out[k].extend([v] + pad)
-    # mention columns: null for 'd', values, null for 'v'
-    v_pad = [None] * n_v
-    for k in _MENTION_FIELDS:
-        out[k].extend([None] + [m[k] for m in mentions] + v_pad)
-    # verb columns: null for 'd' and 'm', values
-    dm_pad = [None] * (1 + n_m)
-    out["verb_id"].extend(dm_pad + [tid for tid, _ in verbs])
-    out["verb_lemma"].extend(dm_pad + [lemma for _, lemma in verbs])
+        out[k][base:] = [doc[k]] * n
+    out["row_type"][base:] = [t for t, count, _ in blocks for _ in range(count)]
+    start = base
+    for _, count, columns in blocks:
+        for k, values in columns.items():
+            out[k][start:start + count] = values
+        start += count
 
 
 def kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
@@ -624,13 +656,15 @@ def lineage_of(stage_df: DataFrame, stage: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# stage 3: chains + triples as Spark SQL dataflow
+# stage 3: chains + triples, filters of the kernel table
 # ---------------------------------------------------------------------
 
-# The views are the only definition of the kernel table's mention, verb
-# and doc rows; chains and triples are statements over mentions/verbs
-# tables, live views or exported ones.  spark.sql registers and drops a
-# temp view per DataFrame keyword argument.
+# The views and chains_stage/triples_stage are the only definition of the
+# kernel table's mention, verb, doc, chain and triple rows.
+# chains_from_mentions/triples_from_views are the same chains and triples
+# as statements over mentions/verbs tables (exported ones: the DuckDB
+# oracles' entry points).  spark.sql registers and drops a temp view per
+# DataFrame keyword argument.
 
 _MENTIONS_SQL = "SELECT url, warc_ts, %s FROM {kernel_out} WHERE row_type = 'm'" \
     % ", ".join("`%s`" % name for name in _MENTION_FIELDS)
@@ -639,6 +673,10 @@ _DOCS_SQL = """
     SELECT url, warc_ts, lang, part_id, text_sha256, n_sentences, n_tokens,
            kernel_ms, error
     FROM {kernel_out} WHERE row_type = 'd'"""
+_CHAIN_ROWS_SQL = "SELECT url, %s FROM {kernel_out} WHERE row_type = 'c'" \
+    % ", ".join(_CHAIN_FIELDS)
+_TRIPLE_ROWS_SQL = "SELECT url, warc_ts, %s FROM {kernel_out} WHERE row_type = 't'" \
+    % ", ".join(_TRIPLE_FIELDS)
 
 
 def mentions_view(kernel_out: DataFrame) -> DataFrame:
@@ -657,10 +695,11 @@ def docs_view(kernel_out: DataFrame) -> DataFrame:
     return kernel_out.sparkSession.sql(_DOCS_SQL, kernel_out=kernel_out)
 
 
-#: chain aggregation with canonicalization over ``mentions`` (same rules
-#: as triples.canonical_mentions).  Orderings are total — the -end
-#: tiebreak makes max_by deterministic when two spans share length and
-#: start — so Spark and DuckDB pick identical canonical strings
+#: chain aggregation with canonicalization over ``mentions`` (the rules
+#: triples.canonical_mentions applies per document).  Orderings are
+#: total — the -end tiebreak makes max_by deterministic when two spans
+#: share length and start — so Spark and DuckDB pick identical canonical
+#: strings
 _CHAINS_SQL = """
     SELECT url, group_id, n_mentions, entity, mention_ids,
            coalesce(proper_first, longest_nominal, first_any) AS canonical_text
@@ -722,27 +761,24 @@ def chains_from_mentions(mentions: DataFrame) -> DataFrame:
 
 
 def chains_stage(kernel_out: DataFrame) -> DataFrame:
-    """chains_from_mentions over the kernel table's mention rows."""
-    return chains_from_mentions(mentions_view(kernel_out))
+    """The kernel table's chain rows: the chains table, equal to
+    chains_from_mentions(mentions_view(kernel_out)) as a multiset."""
+    return kernel_out.sparkSession.sql(_CHAIN_ROWS_SQL, kernel_out=kernel_out)
 
 
 def triples_from_views(mentions: DataFrame, verbs: DataFrame, *,
                        chains: DataFrame) -> DataFrame:
     """(subj, pred, obj) emission: role-tagged verb arguments joined back
     to chain-canonical strings.  ``chains``: the chains of the same
-    mentions — a written table (kg_pass), or chains_from_mentions over
-    them, which plans the aggregation into this query (the driver
-    queries)."""
+    mentions, e.g. chains_from_mentions over them."""
     return mentions.sparkSession.sql(_TRIPLES_SQL, mentions=mentions,
                                      verbs=verbs, chains=chains)
 
 
-def triples_stage(kernel_out: DataFrame, *, chains: DataFrame) -> DataFrame:
-    """triples_from_views over the kernel table's mention and verb rows;
-    ``chains``: the written chains table, or chains_stage of the same
-    kernel table."""
-    return triples_from_views(mentions_view(kernel_out), verbs_view(kernel_out),
-                              chains=chains)
+def triples_stage(kernel_out: DataFrame) -> DataFrame:
+    """The kernel table's triple rows: the triples table, equal to
+    triples_from_views over its mention and verb views as a multiset."""
+    return kernel_out.sparkSession.sql(_TRIPLE_ROWS_SQL, kernel_out=kernel_out)
 
 
 # ---------------------------------------------------------------------
@@ -759,10 +795,27 @@ def _checkpoint(cat: Catalog, stage: str, schema: T.StructType, resume: bool,
     fresh = not (resume and cat.exists(name))
     if fresh:
         cat.write(build(), name)
+    else:
+        _check_stored_fields(cat, name, schema)
     out = cat.read(name, schema)
     if fresh or not cat.exists("_lineage_" + stage):
         cat.write(lineage_of(out, stage), "_lineage_" + stage)
     return out
+
+
+def _check_stored_fields(cat: Catalog, name: str, schema: T.StructType) -> None:
+    """Refuse to resume from a checkpoint whose stored fields are not
+    ``schema``'s: read with ``schema``, a table written by an older
+    version of this stage would silently lack what the stage now emits
+    (a ``stage_kernel`` without chain and triple rows gives empty chains
+    and triples).  Reads the stored schema, one job."""
+    stored = [(f.name, f.dataType) for f in cat.read(name).schema.fields]
+    if stored != [(f.name, f.dataType) for f in schema.fields]:
+        raise ValueError(
+            "%s in %s was written with other fields than this version's "
+            "(%s); pass resume=False (run_kg --no-resume) to recompute it"
+            % (name, cat.warehouse, ", ".join(
+                "%s %s" % (n, t.simpleString()) for n, t in stored)))
 
 
 def kg_pass(cat: Catalog, pages: DataFrame, lex_broadcast,
@@ -785,17 +838,12 @@ def kg_pass(cat: Catalog, pages: DataFrame, lex_broadcast,
 
     kernel_out = _checkpoint(cat, "kernel", KERNEL_SCHEMA, resume, kernel)
 
-    if resume and cat.exists("triples"):
-        return cat.read("triples")
-    # chains first: triples join the written table instead of running
-    # the canonicalization aggregation again, and a crash between the
-    # two writes leaves chains to reuse rather than a triples table
-    # without chains
-    chains = chains_stage(kernel_out)
-    if not (resume and cat.exists("chains")):
-        cat.write(chains, "chains")
-    triples = triples_stage(kernel_out, chains=cat.read("chains", chains.schema))
-    cat.write(triples, "triples")
+    # two filters of the checkpoint, independent of each other: each is
+    # written unless resuming with it present
+    chains, triples = chains_stage(kernel_out), triples_stage(kernel_out)
+    for name, table in (("chains", chains), ("triples", triples)):
+        if not (resume and cat.exists(name)):
+            cat.write(table, name)
     return cat.read("triples", triples.schema)
 
 

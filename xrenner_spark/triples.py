@@ -15,13 +15,19 @@ emitted triples" well-defined:
                  ``SUBJECT_FUNC_DEFAULT`` (subj) or ``OBJECT_FUNC`` (obj) —
                  conj-propagated functions mean coordinated subjects each
                  yield a triple;
-3. canonical   = per chain: core_text of the first proper-form member,
-                 else the longest non-pronoun member, else the mention;
+3. canonical   = per chain: core_text of the first proper-form member
+                 (by start, end), else of the longest non-pronoun member
+                 (ties: the earlier start, then the earlier end), else of
+                 the first member;
 4. triple      = (canonical(subj.group), verb lemma, canonical(obj.group))
-                 with provenance (doc, sent_num, groups, entities).
+                 with provenance (doc, sent_num, groups, chain entities).
 
-These rules are shared by the Spark SQL stage (pipeline.py, whose
-statement embeds both role patterns) and the pytest parity harness.
+canonical_mentions and extract_triples are the one Python definition:
+the kernel loop (pipeline._emit_kernel) calls them per document to emit
+the chains and triples rows, and the parity harness applies them to
+golden output.  pipeline._CHAINS_SQL / _TRIPLES_SQL state the same rules
+over mention tables (the DuckDB oracles' entry points);
+tests/test_triples_sql.py diffs the two.
 """
 
 from __future__ import annotations
@@ -57,66 +63,118 @@ def parse_verbs(conllu_text: str, verb_pos=VERB_POS_DEFAULT) -> Dict[int, str]:
     return verbs
 
 
-def canonical_mentions(mentions: Iterable[dict]) -> Dict[str, str]:
-    """Per-group canonical string (rule 3 above). Group key is whatever the
-    mention rows carry ('group' or 'group_id'), stringified."""
-    groups: Dict[str, List[dict]] = {}
+def _group(m: dict):
+    """A mention's chain key: ``group_id`` (kernel rows) or ``group``
+    (reference-export rows)."""
+    return m.get("group_id", m.get("group"))
+
+
+def _first_by_span(members: List[dict]) -> dict:
+    """SQL ``min_by(_, struct(start, end))``: the first least span."""
+    return min(members, key=lambda m: (m["start"], m["end"]))
+
+
+def _nominal_key(m: dict):
+    """SQL ``struct(length(core_text), -start, -end)``; a NULL length
+    orders before every length, as a NULL struct field does in Spark."""
+    text = m["core_text"]
+    return (-1 if text is None else len(text), -m["start"], -m["end"])
+
+
+def canonical_mentions(mentions: Iterable[dict]) -> Dict[object, dict]:
+    """Per-group chain rows (rule 3 above), keyed by group: ``group_id``,
+    ``n_mentions``, ``entity`` (of the first member), ``mention_ids`` (the
+    non-NULL mark ids, in input order) and ``canonical_text``.  Exactly
+    pipeline._CHAINS_SQL per group, NULLs included: a NULL ``form`` is
+    neither proper nor non-pronoun, and a NULL candidate string falls
+    through to the next rule."""
+    groups: Dict[object, List[dict]] = {}
     for m in mentions:
-        gid = str(m.get("group_id", m.get("group")))
-        groups.setdefault(gid, []).append(m)
-    canonical: Dict[str, str] = {}
+        groups.setdefault(_group(m), []).append(m)
+    chains: Dict[object, dict] = {}
     for gid, members in groups.items():
-        members = sorted(members, key=lambda m: (m["start"], m["end"]))
-        propers = [m for m in members if m["form"] == "proper"]
-        if propers:
-            canonical[gid] = propers[0]["core_text"]
-            continue
-        non_pron = [m for m in members if m["form"] != "pronoun"]
-        if non_pron:
-            best = max(non_pron, key=lambda m: (len(m["core_text"]), -m["start"]))
-            canonical[gid] = best["core_text"]
+        if len(members) == 1:  # every rule picks the one member's text
+            first = members[0]
+            canonical = first["core_text"]
         else:
-            canonical[gid] = members[0]["core_text"]
-    return canonical
+            first = _first_by_span(members)
+            propers = [m for m in members if m["form"] == "proper"]
+            nominals = [m for m in members
+                        if m["form"] is not None and m["form"] != "pronoun"]
+            candidates = (
+                _first_by_span(propers)["core_text"] if propers else None,
+                max(nominals, key=_nominal_key)["core_text"] if nominals else None,
+                first["core_text"])
+            canonical = next((t for t in candidates if t is not None), None)
+        chains[gid] = {
+            "group_id": gid,
+            "n_mentions": len(members),
+            "entity": first["entity"],
+            "mention_ids": [m["mark_id"] for m in members if m["mark_id"] is not None],
+            "canonical_text": canonical,
+        }
+    return chains
+
+
+def _role(func, subject_func, object_func):
+    """SQL ``CASE WHEN regexp_like(...)``: regexp_like finds, it does not
+    anchor, and a NULL function gets no role."""
+    if func is None:
+        return None
+    if subject_func.search(func) is not None:
+        return "subj"
+    if object_func.search(func) is not None:
+        return "obj"
+    return None
 
 
 def extract_triples(mentions: Iterable[dict], verbs: Dict[int, str],
+                    chains: Dict[object, dict] = None,
                     subject_func=SUBJECT_FUNC_DEFAULT,
                     object_func=OBJECT_FUNC) -> List[dict]:
-    """Produce triples for every (subj-arg, obj-arg) pair sharing a verb."""
+    """Triples for every (subject, object) pair of two different mentions
+    sharing a verb: exactly pipeline._TRIPLES_SQL over one document.
+    ``chains``: canonical_mentions of the same mentions (computed when
+    omitted).  Subject and object strings and entities are their chains';
+    a NULL ``mark_id`` never pairs, a mention whose ``head_parent`` is not
+    in ``verbs`` gets no role, and one whose group is NULL or missing from
+    ``chains`` gets NULL chain fields."""
     mentions = list(mentions)
-    canonical = canonical_mentions(mentions)
+    if chains is None:
+        chains = canonical_mentions(mentions)
     args: Dict[int, Dict[str, List[dict]]] = {}
     for m in mentions:
-        verb_id = m.get("head_parent")
+        verb_id = m["head_parent"]
         if verb_id not in verbs:
             continue
-        func = m.get("head_func", "")
-        if subject_func.match(func) is not None:
-            role = "subj"
-        elif object_func.match(func) is not None:
-            role = "obj"
-        else:
-            continue
-        args.setdefault(verb_id, {"subj": [], "obj": []})[role].append(m)
+        role = _role(m["head_func"], subject_func, object_func)
+        if role is not None:
+            args.setdefault(verb_id, {"subj": [], "obj": []})[role].append(m)
 
+    no_chain = {"canonical_text": None, "entity": None}
+    # the SQL's LEFT JOIN on (url, group_id): NULL never matches
+    chain_of = lambda g: no_chain if g is None else chains.get(g, no_chain)
     triples: List[dict] = []
     for verb_id in sorted(args):
         lemma = verbs[verb_id]
         for subj in args[verb_id]["subj"]:
+            if subj["mark_id"] is None:
+                continue
+            sg = _group(subj)
+            sc = chain_of(sg)
             for obj in args[verb_id]["obj"]:
-                if subj is obj:
+                if obj["mark_id"] is None or obj["mark_id"] == subj["mark_id"]:
                     continue
-                sg = str(subj.get("group_id", subj.get("group")))
-                og = str(obj.get("group_id", obj.get("group")))
+                og = _group(obj)
+                oc = chain_of(og)
                 triples.append({
-                    "subj": canonical[sg],
+                    "subj": sc["canonical_text"],
                     "pred": lemma,
-                    "obj": canonical[og],
+                    "obj": oc["canonical_text"],
                     "subj_group": sg,
                     "obj_group": og,
-                    "subj_entity": subj["entity"],
-                    "obj_entity": obj["entity"],
+                    "subj_entity": sc["entity"],
+                    "obj_entity": oc["entity"],
                     "sent_num": subj["sent_num"],
                     "verb_id": verb_id,
                 })
