@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry``     — flagship KG-construction run: synthesize the sf0.001-scale
-                web-page corpus, run extract → kernel → SQL chains/triples,
-                return the triples DataFrame.
+                web-page corpus, run extract → kernel (which emits each
+                document's chains and triples), return the triples rows.
 ``queries``   — one entry per implemented operator from SURVEY.md §2:
                 the relational checklist (§2.7), the training-data
                 operators (dedup / similarity / text analysis /
@@ -34,10 +34,10 @@ _KERNEL_OUT_CACHE: dict = {}
 
 def _kg_kernel_out(spark: SparkSession, sf_dir: str):
     """Kernel output for the kg_* queries, persisted + eagerly materialized
-    (kg_triples reads it through the mention and verb views and again
-    through the chains aggregation planned into the same statement, and
-    the exports read it once per view, so an unpersisted plan would rerun
-    the kernel per scan) and memoized per sf_dir so consecutive kg queries in one
+    (kg_chains, kg_triples and kg_pagerank filter it with chains_stage /
+    triples_stage, the filters run_pipeline writes, and the exports read
+    it once per view, so an unpersisted plan would rerun the kernel per
+    scan) and memoized per sf_dir so consecutive kg queries in one
     session share a single cached copy."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key in _KERNEL_OUT_CACHE:
@@ -102,17 +102,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------
 # KG stage queries.  The per-document rule cascade itself is not
 # SQL-expressible (kg_mentions / kg_extract_invariant stay rows-only;
-# the pytest golden + parity suites carry that burden), but every SQL
-# stage downstream of the kernel is driver-verified against a DuckDB
-# twin over the exported kernel output (operators/kg_oracle.py).
+# the pytest golden + parity suites carry that burden), but every stage
+# downstream of it is driver-verified against a DuckDB twin over the
+# exported kernel output (operators/kg_oracle.py): kg_chains and
+# kg_triples are the chain and triple rows the kernel loop emits.
 # ---------------------------------------------------------------------
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xrenner_spark.pipeline import chains_from_mentions, triples_from_views
-    base = _ensure_kg_exports(spark, sf_dir)
-    mentions = spark.read.parquet(base + "/mentions.parquet")
-    return (triples_from_views(mentions, spark.read.parquet(base + "/verbs.parquet"),
-                               chains=chains_from_mentions(mentions))
+    from xrenner_spark.pipeline import triples_stage
+    _ensure_kg_exports(spark, sf_dir)
+    return (triples_stage(_kg_kernel_out(spark, sf_dir))
             .select("url", "subj", "pred", "obj", "sent_num",
                     "subj_entity", "obj_entity"))
 
@@ -125,9 +124,9 @@ def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kg_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xrenner_spark.pipeline import chains_from_mentions
-    base = _ensure_kg_exports(spark, sf_dir)
-    return (chains_from_mentions(spark.read.parquet(base + "/mentions.parquet"))
+    from xrenner_spark.pipeline import chains_stage
+    _ensure_kg_exports(spark, sf_dir)
+    return (chains_stage(_kg_kernel_out(spark, sf_dir))
             .select("url", "group_id", "canonical_text", "entity",
                     "n_mentions"))
 
@@ -154,14 +153,11 @@ def kg_child_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity PageRank over the extracted triple graph (operators/graph.py):
     exact fixed-point iterations, hash-compared against an unrolled
-    DuckDB CTE chain over the same triples SQL."""
+    DuckDB CTE chain over the DuckDB triples twin."""
     from xrenner_spark.operators.graph import entity_pagerank
-    from xrenner_spark.pipeline import chains_from_mentions, triples_from_views
-    base = _ensure_kg_exports(spark, sf_dir)
-    mentions = spark.read.parquet(base + "/mentions.parquet")
-    triples = triples_from_views(mentions, spark.read.parquet(base + "/verbs.parquet"),
-                                 chains=chains_from_mentions(mentions))
-    return entity_pagerank(triples)
+    from xrenner_spark.pipeline import triples_stage
+    _ensure_kg_exports(spark, sf_dir)
+    return entity_pagerank(triples_stage(_kg_kernel_out(spark, sf_dir)))
 
 
 def kg_model_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:

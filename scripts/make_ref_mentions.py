@@ -4,7 +4,7 @@ committed parquet fixture — the hard oracle for the driver's kg_mentions
 query (sandbox-only generator; the fixture itself is committed).
 
 The kg_mentions Spark query runs the full distributed path (html ->
-extract -> fused kernel -> mentions_view) over ``n_docs(sf_dir)`` pages;
+extract -> kernel_stage -> mentions_view) over ``n_docs(sf_dir)`` pages;
 this export runs the reference engine (fresh instance per document, so
 its cross-document hasa leakage cannot contaminate rows) over the same
 ``build_document`` conllu with the same model, emitting the exact

@@ -1,4 +1,4 @@
-"""The KG SQL stages against their DuckDB twins: the same row count,
+"""The KG stages against their DuckDB twins: the same row count,
 column names and order-insensitive value hash that
 ``scripts/check_oracles.py`` requires, on the default scale-factor
 directory of ``__spark_entry__`` (skipped when it is absent)."""
@@ -16,7 +16,8 @@ pytestmark = pytest.mark.skipif(not os.path.isdir(SF_DIR),
                                 reason="scale-factor test data absent")
 
 
-@pytest.mark.parametrize("name", ["kg_triples", "kg_chains", "kg_tokens"])
+@pytest.mark.parametrize("name", ["kg_triples", "kg_chains", "kg_tokens",
+                                  "kg_pagerank"])
 def test_kg_query_matches_duckdb_oracle(spark, name):
     import duckdb
     sdf = entry.queries()[name](spark, SF_DIR)

@@ -1,15 +1,12 @@
-"""The triples and chains statements against their earlier Column-API
-formulation, frozen here as the reference: the same multiset of rows on
-kernel output (clean and corrupt pages) and on a hand-built table of
-edge cases, with and without a precomputed chains table.
-Without a written table the statement is given the unwritten
-chains_from_mentions plan, and the reference aggregates its own.
-
-The statements are in turn the spec of the chain and triple rows the
-kernel loop emits (triples.canonical_mentions / extract_triples per
-document): the emitted rows, and those functions fed each document's
-rows of the hand-built tables, equal the statements' rows as a multiset
-with the same column types."""
+"""The chain and triple rows the kernel loop emits against a Column-API
+reference kept here: an independent statement of triples.py's rules
+(triples.canonical_mentions / extract_triples, the one shipped
+definition) as Spark aggregates and joins over mention and verb tables.
+The emitted rows of kernel output (clean and corrupt pages), and those
+functions fed each document's rows of the kernel output and of
+hand-built tables of edge cases and NULLs, equal the reference's rows as
+a multiset with the same column types.  Tests that spell out expected
+rows run the shipped functions."""
 
 from collections import Counter
 
@@ -19,10 +16,9 @@ from pyspark.sql import types as T
 
 from xrenner_spark import load_lex
 from xrenner_spark.catalog import Catalog
-from xrenner_spark.pipeline import (KERNEL_SCHEMA, chains_from_mentions,
-                                    chains_stage, docs_view, extract_stage, generate_pages,
-                                    kernel_stage, mentions_view, triples_from_views,
-                                    triples_stage, verbs_view)
+from xrenner_spark.pipeline import (KERNEL_SCHEMA, chains_stage, docs_view,
+                                    extract_stage, generate_pages, kernel_stage,
+                                    mentions_view, triples_stage, verbs_view)
 from xrenner_spark.triples import canonical_mentions, extract_triples
 
 SUBJECT_FUNC = "^[nc]subj"
@@ -30,6 +26,8 @@ OBJECT_FUNC = "^(obj|dobj|iobj|obl|nmod)$"
 
 
 def _reference_chains(mentions):
+    """Chains per (url, group_id) in SQL semantics: min_by/max_by over
+    total orderings, FILTERed aggregates, a coalesce of the candidates."""
     return (
         mentions.groupBy("url", "group_id").agg(
             F.expr("min_by(core_text, struct(start, end)) "
@@ -47,9 +45,10 @@ def _reference_chains(mentions):
     )
 
 
-def _reference_triples(mentions, verbs, chains=None):
-    if chains is None:
-        chains = _reference_chains(mentions)
+def _reference_triples(mentions, verbs, chains):
+    """Triples: role-tagged mentions joined to their verb and (left) to
+    ``chains``, one row per subject x object pair of two different
+    mentions on one (url, verb_id)."""
     canon = chains.select(
         "url", "group_id", "canonical_text", F.col("entity").alias("chain_entity"))
     args = (mentions
@@ -81,34 +80,16 @@ def _reference_triples(mentions, verbs, chains=None):
                     "sent_num", "verb_id"))
 
 
-def _unwritten_chains(mentions, chains):
-    """The statement's chains for a case: the written table, or for
-    ``None`` chains_from_mentions over the same mentions, planned into the
-    triples query (the reference computes its own chains for ``None``)."""
-    return chains_from_mentions(mentions) if chains is None else chains
-
-
-def _rows(df):
-    return Counter(tuple(r) for r in df.collect())
-
-
-def _assert_same(new, ref):
-    assert new.columns == ref.columns
-    assert [f.dataType for f in new.schema] == [f.dataType for f in ref.schema]
-    got, want = _rows(new), _rows(ref)
-    assert got == want
-
-
-def _chains_rows(df):
-    # collect_list order follows the input, not a key: compare as a multiset
-    return Counter((r.url, r.group_id, r.n_mentions, r.entity, r.canonical_text,
-                    tuple(sorted(r.mention_ids))) for r in df.collect())
+def _reference(mentions, verbs):
+    """The reference's (chains, triples) over ``mentions``/``verbs``."""
+    chains = _reference_chains(mentions)
+    return chains, _reference_triples(mentions, verbs, chains)
 
 
 @pytest.fixture(scope="module")
 def kernel_out(spark, corrupt_pages, tmp_path_factory):
     """Kernel output of generated corpus pages plus the corrupt pages,
-    written once so both formulations read the same table."""
+    written once so every test reads the same table."""
     pages, _ = corrupt_pages(n=12)
     pages = pages.unionByName(generate_pages(spark, 30, partitions=2))
     bcast = spark.sparkContext.broadcast(load_lex())
@@ -151,7 +132,7 @@ _EDGE_VERBS = T.StructType([
 @pytest.fixture(scope="module")
 def edge_views(spark):
     """Two subjects and two objects on one verb; a verb with subjects
-    only; a mention whose group the given chains table lacks; a NULL
+    only; a mention whose group is left out of the chains; a NULL
     mark_id; functions with a quote and a pipe in them that neither role
     pattern selects."""
     m = [
@@ -164,7 +145,8 @@ def edge_views(spark):
         # doc a, verb 10: subjects only
         _mention("a", "9", 4, "nsubj", 10, "a cat", start=9, sent_num=2),
         _mention("a", "11", 2, "nsubj:pass", 10, "the dog", start=11, sent_num=2),
-        # doc b: the object's group 99 is missing from the chains table
+        # doc b: test_edge_case_triples leaves the object's group 99 out
+        # of the chains
         _mention("b", "1", 7, "nsubj", 2, "Lee", form="proper"),
         _mention("b", "3", 99, "dobj", 2, "a letter", start=3),
         # doc c: a NULL mark_id on each side, and a well-formed object
@@ -226,57 +208,6 @@ def null_views(spark):
     return _views(spark, m, v)
 
 
-def test_chains_statement_matches_reference(kernel_out, edge_views):
-    for mentions in (mentions_view(kernel_out), edge_views[0]):
-        new, ref = chains_from_mentions(mentions), _reference_chains(mentions)
-        assert new.columns == ref.columns
-        assert _chains_rows(new) == _chains_rows(ref)
-
-
-def test_triples_statement_matches_reference_on_kernel_output(spark, kernel_out,
-                                                             tmp_path):
-    kernel = kernel_out
-    mentions, verbs = mentions_view(kernel), verbs_view(kernel)
-    cat = Catalog(spark, str(tmp_path))
-    cat.write(chains_from_mentions(mentions), "chains")
-    for chains in (None, cat.read("chains")):
-        new = triples_from_views(mentions, verbs,
-                                 chains=_unwritten_chains(mentions, chains))
-        ref = _reference_triples(mentions, verbs, chains=chains)
-        _assert_same(new, ref)
-    assert _rows(new)  # the corpus yields triples
-
-
-def test_triples_statement_matches_reference_on_edge_cases(spark, edge_views,
-                                                           tmp_path):
-    mentions, verbs = edge_views
-    cat = Catalog(spark, str(tmp_path))
-    # the written chains table lacks doc b's object group
-    cat.write(chains_from_mentions(mentions).filter("group_id != 99"), "chains")
-    for chains in (None, cat.read("chains")):
-        new = triples_from_views(mentions, verbs,
-                                 chains=_unwritten_chains(mentions, chains))
-        ref = _reference_triples(mentions, verbs, chains=chains)
-        _assert_same(new, ref)
-
-
-def test_edge_case_triples(spark, edge_views, tmp_path):
-    """What the edge cases yield, spelled out: 2 x 2 pairs on one verb,
-    nothing from a subject-only verb or with a NULL mark, a NULL
-    canonical string for a group missing from chains."""
-    mentions, verbs = edge_views
-    cat = Catalog(spark, str(tmp_path))
-    cat.write(chains_from_mentions(mentions).filter("group_id != 99"), "chains")
-    rows = triples_from_views(mentions, verbs, chains=cat.read("chains")).collect()
-    got = Counter((r.url, r.subj, r.pred, r.obj) for r in rows)
-    assert got == Counter([
-        ("a", "Kim", "see", "Kim"), ("a", "Kim", "see", "the park"),
-        ("a", "the dog", "see", "Kim"), ("a", "the dog", "see", "the park"),
-        ("b", "Lee", "write", None),
-        ("c", "Max", "give", "it"), ("c", "Max", "give", "nothing"),
-    ])
-
-
 def _typed_rows(df):
     """Column types and the multiset of rows; list cells sorted, since
     ``collect_list`` order (chains.mention_ids) is not fixed.  A type is
@@ -287,38 +218,47 @@ def _typed_rows(df):
                     for r in df.collect()))
 
 
-def _python_chains_and_triples(spark, mentions, verbs, like):
-    """canonical_mentions/extract_triples over each document's rows of
-    ``mentions``/``verbs``, as DataFrames with ``like``'s columns (chains,
-    triples) typed as the kernel table's columns of those names."""
+def _documents(mentions, verbs):
+    """(url, mention dicts, {verb_id: lemma}) per url of ``mentions``."""
     docs, lemmas = {}, {}
     for r in mentions.collect():
         docs.setdefault(r.url, []).append(r.asDict())
     for r in verbs.collect():
         lemmas.setdefault(r.url, {})[r.verb_id] = r.verb_lemma
+    return [(url, ms, lemmas.get(url, {})) for url, ms in docs.items()]
+
+
+def _python_rows(mentions, verbs):
+    """canonical_mentions/extract_triples over each document's rows of
+    ``mentions``/``verbs``: chain and triple dicts with their url (and
+    the triples' warc_ts)."""
     chains, triples = [], []
-    for url, ms in docs.items():
+    for url, ms, lemmas in _documents(mentions, verbs):
         by_group = canonical_mentions(ms)
         chains += [dict(c, url=url) for c in by_group.values()]
         triples += [dict(t, url=url, warc_ts=ms[0]["warc_ts"])
-                    for t in extract_triples(ms, lemmas.get(url, {}), by_group)]
+                    for t in extract_triples(ms, lemmas, by_group)]
+    return chains, triples
+
+
+def _python_chains_and_triples(spark, mentions, verbs, like):
+    """_python_rows as DataFrames with ``like``'s columns (chains,
+    triples) typed as the kernel table's columns of those names."""
     return [spark.createDataFrame(
         [tuple(row[c] for c in df.columns) for row in rows],
         T.StructType([KERNEL_SCHEMA[c] for c in df.columns]))
-        for rows, df in zip((chains, triples), like)]
-
-
-def _statements(mentions, verbs):
-    chains = chains_from_mentions(mentions)
-    return chains, triples_from_views(mentions, verbs, chains=chains)
+        for rows, df in zip(_python_rows(mentions, verbs), like)]
 
 
 def _one_document_per_url(kernel_out):
     """The kernel rows of the urls with one analyzed document.  The
-    fixture holds pages 0-11 twice (corrupt_pages and generate_pages):
-    the statements group by url, so they merge two documents under one
-    url, while the kernel loop keeps each document's chains and triples
-    its own (test_repeated_url_keeps_each_documents_rows)."""
+    Column-API reference groups by url, as do the DuckDB twins in
+    operators/kg_oracle.py, so both assume one document per url: given
+    two documents under one url they merge their chains and cross-pair
+    their triples, while the kernel loop keeps each document's rows its
+    own (test_repeated_url_keeps_each_documents_rows).  The fixture holds
+    pages 0-11 twice (corrupt_pages and generate_pages), so the diffs
+    keep the urls with one document."""
     single = (docs_view(kernel_out).filter("error = ''").groupBy("url").count()
               .filter("count = 1").select("url"))
     return kernel_out.join(single, "url", "left_semi")
@@ -326,9 +266,9 @@ def _one_document_per_url(kernel_out):
 
 def test_emitted_chains_and_triples_match_statements(kernel_out):
     """The kernel loop's 'c' and 't' rows (clean and corrupt pages) are
-    the statements' chains and triples over its 'm' and 'v' rows."""
+    the reference's chains and triples over its 'm' and 'v' rows."""
     kernel = _one_document_per_url(kernel_out)
-    want = _statements(mentions_view(kernel), verbs_view(kernel))
+    want = _reference(mentions_view(kernel), verbs_view(kernel))
     for got, ref in zip((chains_stage(kernel), triples_stage(kernel)), want):
         assert got.columns == ref.columns
         got_rows, ref_rows = _typed_rows(got), _typed_rows(ref)
@@ -339,23 +279,23 @@ def test_emitted_chains_and_triples_match_statements(kernel_out):
 @pytest.mark.parametrize("views", ["kernel_out", "edge_views", "null_views"])
 def test_python_chains_and_triples_match_statements(spark, request, views):
     """The Python functions the kernel loop calls, fed per document, give
-    the statements' rows: on kernel output and on the hand-built tables
+    the reference's rows: on kernel output and on the hand-built tables
     of edge cases and NULLs."""
     if views == "kernel_out":
         kernel = _one_document_per_url(request.getfixturevalue(views))
         mentions, verbs = mentions_view(kernel), verbs_view(kernel)
     else:
         mentions, verbs = request.getfixturevalue(views)
-    want = _statements(mentions, verbs)
+    want = _reference(mentions, verbs)
     for got, ref in zip(_python_chains_and_triples(spark, mentions, verbs, want), want):
         assert _typed_rows(got) == _typed_rows(ref)
 
 
 def test_repeated_url_keeps_each_documents_rows(spark):
     """Two documents under one url each get their own chain and triple
-    rows, those the document gets alone, where the url-keyed statements
-    would merge their chains and pair one's subjects with the other's
-    objects."""
+    rows, those the document gets alone, where a url-keyed grouping (the
+    reference here, the DuckDB twins) would merge their chains and pair
+    one's subjects with the other's objects."""
     bcast = spark.sparkContext.broadcast(load_lex())
     page = generate_pages(spark, 1, partitions=1)
     alone = kernel_stage(extract_stage(page), bcast)
@@ -367,11 +307,12 @@ def test_repeated_url_keeps_each_documents_rows(spark):
 
 
 def test_null_case_chains_and_triples(null_views):
-    """What the NULL cases yield, spelled out: each chain's canonical
-    string, and every subject x object pair of doc e's verb (three
-    subjects; six objects in groups 2, 3, 3, 5, 5, 5) and doc f's."""
-    chains, triples = _statements(*null_views)
-    assert {(r.url, r.group_id): r.canonical_text for r in chains.collect()} == {
+    """What canonical_mentions and extract_triples yield on the NULL
+    cases, spelled out: each chain's canonical string, and every subject
+    x object pair of doc e's verb (three subjects; six objects in groups
+    2, 3, 3, 5, 5, 5) and doc f's."""
+    chains, triples = _python_rows(*null_views)
+    assert {(c["url"], c["group_id"]): c["canonical_text"] for c in chains} == {
         ("e", 1): "Zed", ("e", 2): "a box", ("e", 3): "thing", ("e", 4): "Ann",
         ("e", 5): "cow", ("e", None): "Nobody", ("f", 1): "Sue", ("f", None): "none"}
     want = Counter()
@@ -379,5 +320,23 @@ def test_null_case_chains_and_triples(null_views):
         for obj, n in (("a box", 1), ("thing", 2), ("cow", 3)):
             want[("e", subj, obj, entity)] += n
     want[("f", "Sue", None, "person")] += 1
-    assert Counter((r.url, r.subj, r.obj, r.subj_entity)
-                   for r in triples.collect()) == want
+    assert Counter((t["url"], t["subj"], t["obj"], t["subj_entity"])
+                   for t in triples) == want
+
+
+def test_edge_case_triples(edge_views):
+    """What extract_triples yields on the edge cases, spelled out: 2 x 2
+    pairs on one verb, nothing from a subject-only verb or with a NULL
+    mark, a NULL canonical string for a group missing from chains."""
+    got = Counter()
+    for url, ms, lemmas in _documents(*edge_views):
+        chains = canonical_mentions(ms)
+        chains.pop(99, None)  # doc b's object group
+        got.update((url, t["subj"], t["pred"], t["obj"])
+                   for t in extract_triples(ms, lemmas, chains))
+    assert got == Counter([
+        ("a", "Kim", "see", "Kim"), ("a", "Kim", "see", "the park"),
+        ("a", "the dog", "see", "Kim"), ("a", "the dog", "see", "the park"),
+        ("b", "Lee", "write", None),
+        ("c", "Max", "give", "it"), ("c", "Max", "give", "nothing"),
+    ])

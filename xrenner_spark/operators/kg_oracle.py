@@ -8,15 +8,21 @@ mentions/verbs), the raw conllu, and the token table to parquet under
 recomputes each stage independently over those exports:
 
 - kg_chains      — canonicalization aggregation (arg_min/arg_max twins of
-                   chains_from_mentions' min_by/max_by, pipeline.py)
-- kg_triples     — role regexes + verb join + subj×obj join
-                   (triples_from_views, pipeline.py)
+                   triples.canonical_mentions' orderings), checking the
+                   chain rows the kernel loop emits (chains_stage)
+- kg_triples     — role regexes + verb join + subj×obj join, checking
+                   triples.extract_triples' rows (triples_stage)
 - kg_tokens      — a full independent conllu parse in SQL (line split,
                    sentence-run detection, token-offset accumulation),
                    cross-checking the python tokens_stage parser
 - kg_child_info  — the child-info self-join + sorted collect
 - kg_descendants — dependency-tree transitive closure via WITH RECURSIVE
                    (the fixpoint twin of descendants_closure_sql)
+
+The chains and triples twins group by url, so they assume one document
+per url, as the exported kernel output has (generate_pages gives every
+page its own url); two documents under one url would be merged into one
+chain table and cross-paired, unlike the per-document rows they check.
 
 Composite orderings are encoded as banded BIGINT keys (DuckDB's
 arg_min/arg_max take no struct ordering): positions and span lengths are

@@ -25,9 +25,9 @@ markers), so building a pass's plans costs a few py4j round trips each:
              independent of each other:
              chains  = chains_stage:  row_type = 'c' → chains table
              triples = triples_stage: row_type = 't' → triples table
-             (chains_from_mentions / triples_from_views are the same
-             tables as GROUP BY statements over exported mentions and
-             verbs: the DuckDB oracles' entry points)
+             (triples.py is the one definition of the chain and triple
+             rules; the DuckDB twins in operators/kg_oracle.py check the
+             driver's kg_chains/kg_triples on these filters)
 
 kg_pass is this graph over a Catalog: run_pipeline runs one pass, and
 stream_pipeline one per micro-batch into a ``batch_id=<id>`` partition.
@@ -59,8 +59,7 @@ from pyspark.sql import types as T
 from .catalog import Catalog
 from .kernel import analyze_document_windowed
 from .lex import load_lex
-from .triples import (OBJECT_FUNC, SUBJECT_FUNC_DEFAULT, canonical_mentions,
-                      extract_triples, parse_verbs)
+from .triples import canonical_mentions, extract_triples, parse_verbs
 
 # ---------------------------------------------------------------------
 # schemas
@@ -660,11 +659,9 @@ def lineage_of(stage_df: DataFrame, stage: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 # The views and chains_stage/triples_stage are the only definition of the
-# kernel table's mention, verb, doc, chain and triple rows.
-# chains_from_mentions/triples_from_views are the same chains and triples
-# as statements over mentions/verbs tables (exported ones: the DuckDB
-# oracles' entry points).  spark.sql registers and drops a temp view per
-# DataFrame keyword argument.
+# kernel table's mention, verb, doc, chain and triple rows; the chain and
+# triple rows themselves come from _emit_kernel (triples.py's rules).
+# spark.sql registers and drops a temp view per DataFrame keyword argument.
 
 _MENTIONS_SQL = "SELECT url, warc_ts, %s FROM {kernel_out} WHERE row_type = 'm'" \
     % ", ".join("`%s`" % name for name in _MENTION_FIELDS)
@@ -695,89 +692,15 @@ def docs_view(kernel_out: DataFrame) -> DataFrame:
     return kernel_out.sparkSession.sql(_DOCS_SQL, kernel_out=kernel_out)
 
 
-#: chain aggregation with canonicalization over ``mentions`` (the rules
-#: triples.canonical_mentions applies per document).  Orderings are
-#: total — the -end tiebreak makes max_by deterministic when two spans
-#: share length and start — so Spark and DuckDB pick identical canonical
-#: strings
-_CHAINS_SQL = """
-    SELECT url, group_id, n_mentions, entity, mention_ids,
-           coalesce(proper_first, longest_nominal, first_any) AS canonical_text
-    FROM (
-        SELECT url, group_id,
-               min_by(core_text, struct(start, `end`))
-                   FILTER (WHERE form = 'proper') AS proper_first,
-               max_by(core_text, struct(length(core_text), -start, -`end`))
-                   FILTER (WHERE form != 'pronoun') AS longest_nominal,
-               min_by(core_text, struct(start, `end`)) AS first_any,
-               count(*) AS n_mentions,
-               min_by(entity, struct(start, `end`)) AS entity,
-               collect_list(mark_id) AS mention_ids
-        FROM {mentions}
-        GROUP BY url, group_id)"""
-
-#: (subj, pred, obj) rows from ``mentions``, ``verbs`` and ``chains``:
-#: the role-tagged arguments (mentions ⋈ verbs ⋈ chains) once, grouped
-#: per (url, verb_id) into subject and object lists — the one exchange —
-#: and one triple per (subject, object) pair of two different mentions.
-#: The role regexes are triples.py's, the ones extract_triples applies
-_TRIPLES_SQL = """
-    WITH args AS (
-        SELECT m.url, m.warc_ts, m.sent_num, m.mark_id, m.group_id,
-               v.verb_id, v.verb_lemma, c.canonical_text, c.entity AS chain_entity,
-               CASE WHEN regexp_like(m.head_func, '%s') THEN 'subj'
-                    WHEN regexp_like(m.head_func, '%s') THEN 'obj'
-               END AS role
-        FROM {mentions} m
-        JOIN {verbs} v ON m.url = v.url AND m.head_parent = v.verb_id
-        LEFT JOIN {chains} c ON m.url = c.url AND m.group_id = c.group_id
-    ), by_verb AS (
-        SELECT url, verb_id,
-               collect_list(struct(warc_ts, verb_lemma, canonical_text,
-                                   group_id, chain_entity, sent_num, mark_id))
-                   FILTER (WHERE role = 'subj') AS s,
-               collect_list(struct(canonical_text, group_id, chain_entity, mark_id))
-                   FILTER (WHERE role = 'obj') AS o
-        FROM args
-        WHERE role IS NOT NULL
-        GROUP BY url, verb_id
-    )
-    SELECT inline(flatten(transform(s, x -> transform(
-        filter(o, y -> y.mark_id != x.mark_id),
-        y -> named_struct(
-            'url', url, 'warc_ts', x.warc_ts, 'subj', x.canonical_text,
-            'pred', x.verb_lemma, 'obj', y.canonical_text,
-            'subj_group', x.group_id, 'obj_group', y.group_id,
-            'subj_entity', x.chain_entity, 'obj_entity', y.chain_entity,
-            'sent_num', x.sent_num, 'verb_id', verb_id)))))
-    FROM by_verb""" % (SUBJECT_FUNC_DEFAULT.pattern, OBJECT_FUNC.pattern)
-
-
-def chains_from_mentions(mentions: DataFrame) -> DataFrame:
-    """Chain aggregation with canonicalization over a mentions table
-    (also the driver-oracle entry point: the DuckDB twin recomputes this
-    aggregation over the exported mentions parquet)."""
-    return mentions.sparkSession.sql(_CHAINS_SQL, mentions=mentions)
-
-
 def chains_stage(kernel_out: DataFrame) -> DataFrame:
-    """The kernel table's chain rows: the chains table, equal to
-    chains_from_mentions(mentions_view(kernel_out)) as a multiset."""
+    """The kernel table's chain rows (triples.canonical_mentions per
+    document, emitted by the kernel loop): the chains table."""
     return kernel_out.sparkSession.sql(_CHAIN_ROWS_SQL, kernel_out=kernel_out)
 
 
-def triples_from_views(mentions: DataFrame, verbs: DataFrame, *,
-                       chains: DataFrame) -> DataFrame:
-    """(subj, pred, obj) emission: role-tagged verb arguments joined back
-    to chain-canonical strings.  ``chains``: the chains of the same
-    mentions, e.g. chains_from_mentions over them."""
-    return mentions.sparkSession.sql(_TRIPLES_SQL, mentions=mentions,
-                                     verbs=verbs, chains=chains)
-
-
 def triples_stage(kernel_out: DataFrame) -> DataFrame:
-    """The kernel table's triple rows: the triples table, equal to
-    triples_from_views over its mention and verb views as a multiset."""
+    """The kernel table's triple rows (triples.extract_triples per
+    document, emitted by the kernel loop): the triples table."""
     return kernel_out.sparkSession.sql(_TRIPLE_ROWS_SQL, kernel_out=kernel_out)
 
 

@@ -6,13 +6,13 @@ and applies the *same* function to both our kernel output and
 reference-faithful golden output, making "matching the reference's
 emitted triples" well-defined:
 
-1. predicates  = tokens whose POS matches ``verb_head_pos``
-                 (reference models/…/config.ini verb_head_pos; the class
-                 the reference itself uses for verbal antecedents,
+1. predicates  = tokens whose POS matches ``VERB_POS`` (equal to
+                 models/web's config.ini verb_head_pos, the class the
+                 reference itself uses for verbal antecedents,
                  xrenner_xrenner.py:240-241);
 2. arguments   = final (post-postprocessing) markables whose head token
                  depends on that verb with func matching
-                 ``SUBJECT_FUNC_DEFAULT`` (subj) or ``OBJECT_FUNC`` (obj) —
+                 ``SUBJECT_FUNC`` (subj) or ``OBJECT_FUNC`` (obj) —
                  conj-propagated functions mean coordinated subjects each
                  yield a triple;
 3. canonical   = per chain: core_text of the first proper-form member
@@ -22,12 +22,13 @@ emitted triples" well-defined:
 4. triple      = (canonical(subj.group), verb lemma, canonical(obj.group))
                  with provenance (doc, sent_num, groups, chain entities).
 
-canonical_mentions and extract_triples are the one Python definition:
-the kernel loop (pipeline._emit_kernel) calls them per document to emit
-the chains and triples rows, and the parity harness applies them to
-golden output.  pipeline._CHAINS_SQL / _TRIPLES_SQL state the same rules
-over mention tables (the DuckDB oracles' entry points);
-tests/test_triples_sql.py diffs the two.
+canonical_mentions and extract_triples are the one definition of these
+rules: the kernel loop (pipeline._emit_kernel) calls them per document to
+emit the chains and triples rows, and the parity harness applies them to
+golden output.  Their checks are independent restatements of the rules,
+in SQL semantics: the Column-API reference in tests/test_triples_sql.py
+and the DuckDB twins in operators/kg_oracle.py (the driver's kg_chains /
+kg_triples).
 """
 
 from __future__ import annotations
@@ -35,14 +36,15 @@ from __future__ import annotations
 import re
 from typing import Dict, Iterable, List, Tuple
 
-#: role dependency functions of a verb's arguments, fixed: the subject
-#: pattern equals models/web's ``subject_func`` but is not read from it
+#: role dependency functions of a verb's arguments and the predicate POS,
+#: fixed: the subject and verb patterns equal models/web's ``subject_func``
+#: and ``verb_head_pos`` but are not read from them
 OBJECT_FUNC = re.compile(r"^(obj|dobj|iobj|obl|nmod)$")
-SUBJECT_FUNC_DEFAULT = re.compile(r"^[nc]subj")
-VERB_POS_DEFAULT = re.compile(r"^VERB$")
+SUBJECT_FUNC = re.compile(r"^[nc]subj")
+VERB_POS = re.compile(r"^VERB$")
 
 
-def parse_verbs(conllu_text: str, verb_pos=VERB_POS_DEFAULT) -> Dict[int, str]:
+def parse_verbs(conllu_text: str) -> Dict[int, str]:
     """Map document-global token id -> lemma for predicate tokens."""
     verbs: Dict[int, str] = {}
     offset = 0
@@ -58,7 +60,7 @@ def parse_verbs(conllu_text: str, verb_pos=VERB_POS_DEFAULT) -> Dict[int, str]:
         if "." in cols[0] or "-" in cols[0]:
             continue
         seen_in_sentence += 1
-        if verb_pos.match(cols[3]) is not None:
+        if VERB_POS.match(cols[3]) is not None:
             verbs[int(cols[0]) + offset] = cols[2]
     return verbs
 
@@ -84,10 +86,10 @@ def _nominal_key(m: dict):
 def canonical_mentions(mentions: Iterable[dict]) -> Dict[object, dict]:
     """Per-group chain rows (rule 3 above), keyed by group: ``group_id``,
     ``n_mentions``, ``entity`` (of the first member), ``mention_ids`` (the
-    non-NULL mark ids, in input order) and ``canonical_text``.  Exactly
-    pipeline._CHAINS_SQL per group, NULLs included: a NULL ``form`` is
-    neither proper nor non-pronoun, and a NULL candidate string falls
-    through to the next rule."""
+    non-NULL mark ids, in input order) and ``canonical_text``.  SQL
+    semantics per group, NULLs included: a NULL ``form`` is neither
+    proper nor non-pronoun, and a NULL candidate string falls through to
+    the next rule."""
     groups: Dict[object, List[dict]] = {}
     for m in mentions:
         groups.setdefault(_group(m), []).append(m)
@@ -116,24 +118,22 @@ def canonical_mentions(mentions: Iterable[dict]) -> Dict[object, dict]:
     return chains
 
 
-def _role(func, subject_func, object_func):
+def _role(func):
     """SQL ``CASE WHEN regexp_like(...)``: regexp_like finds, it does not
     anchor, and a NULL function gets no role."""
     if func is None:
         return None
-    if subject_func.search(func) is not None:
+    if SUBJECT_FUNC.search(func) is not None:
         return "subj"
-    if object_func.search(func) is not None:
+    if OBJECT_FUNC.search(func) is not None:
         return "obj"
     return None
 
 
 def extract_triples(mentions: Iterable[dict], verbs: Dict[int, str],
-                    chains: Dict[object, dict] = None,
-                    subject_func=SUBJECT_FUNC_DEFAULT,
-                    object_func=OBJECT_FUNC) -> List[dict]:
+                    chains: Dict[object, dict] = None) -> List[dict]:
     """Triples for every (subject, object) pair of two different mentions
-    sharing a verb: exactly pipeline._TRIPLES_SQL over one document.
+    sharing a verb, in SQL semantics over one document.
     ``chains``: canonical_mentions of the same mentions (computed when
     omitted).  Subject and object strings and entities are their chains';
     a NULL ``mark_id`` never pairs, a mention whose ``head_parent`` is not
@@ -147,12 +147,12 @@ def extract_triples(mentions: Iterable[dict], verbs: Dict[int, str],
         verb_id = m["head_parent"]
         if verb_id not in verbs:
             continue
-        role = _role(m["head_func"], subject_func, object_func)
+        role = _role(m["head_func"])
         if role is not None:
             args.setdefault(verb_id, {"subj": [], "obj": []})[role].append(m)
 
     no_chain = {"canonical_text": None, "entity": None}
-    # the SQL's LEFT JOIN on (url, group_id): NULL never matches
+    # a LEFT JOIN on group_id: NULL never matches
     chain_of = lambda g: no_chain if g is None else chains.get(g, no_chain)
     triples: List[dict] = []
     for verb_id in sorted(args):
