@@ -43,8 +43,9 @@ def main():
     ap.add_argument("--override", default=None,
                     help="override.ini section (reference -x)")
     ap.add_argument("--dedup-kernel-inputs", action="store_true",
-                    help="run the kernel once per distinct page payload "
-                         "and join results back to every copy")
+                    help="analyze each distinct page payload once: its "
+                         "copies share one kernel task, and each copy "
+                         "after the first costs one emit")
     args = ap.parse_args()
 
     spark = SparkSession.builder.appName("xrenner-spark-kg").getOrCreate()

@@ -52,7 +52,7 @@ def _rows(df):
 @pytest.mark.parametrize("dedup", [False, True], ids=["plain", "dedup"])
 def test_lineage_matches_reference(spark, corrupt_pages, tmp_path, dedup):
     pages, _ = corrupt_pages(n=12)
-    # a second copy of every page, so dedup has representatives to share
+    # a second copy of every page, so dedup has analyses to reuse
     pages = pages.unionByName(
         pages.withColumn("url", F.concat(F.lit("copy-"), F.col("url"))))
     wh = str(tmp_path / "wh")

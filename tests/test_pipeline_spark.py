@@ -184,10 +184,10 @@ def test_sinks_have_one_python_position(spark, corrupt_pages, tmp_path, monkeypa
 
 
 def test_dedup_kernel_inputs(spark, tmp_path):
-    """dedup_kernel_inputs=True: kernel rows are value-identical to the
-    plain path for every copy (modulo the documented lineage metrics),
-    triples identical, and the kernel demonstrably ran once per distinct
-    payload (copies share the representative's exact kernel_ms)."""
+    """dedup_kernel_inputs=True: kernel rows equal the plain path's for
+    every copy in every column but part_id and kernel_ms, triples
+    identical, and the kernel demonstrably ran once per distinct payload
+    (copies share its exact kernel_ms)."""
     from pyspark.sql import functions as F
     from xrenner_spark.pipeline import docs_view
 
@@ -219,8 +219,8 @@ def test_dedup_kernel_inputs(spark, tmp_path):
 
     docs = docs_view(kd)
     assert docs.count() == 30
-    # one kernel execution per distinct payload: the 3 copies carry the
-    # representative's exact timing value
+    # one kernel execution per distinct payload: the 3 copies carry its
+    # exact timing value
     assert docs.select("text_sha256", "kernel_ms").distinct().count() == 10
     assert docs_view(kp).select("text_sha256", "kernel_ms").distinct().count() == 30
 
@@ -228,8 +228,8 @@ def test_dedup_kernel_inputs(spark, tmp_path):
 def test_dedup_kernel_inputs_byte_identity_per_copy(spark, tmp_path):
     """A copy whose text column disagrees with its html shares the
     intact page's extracted payload but fails byte-identity: with
-    dedup_kernel_inputs it must not become the intact copies'
-    representative (its url sorts first), nor inherit their result."""
+    dedup_kernel_inputs it must not share the intact copies' analysis
+    (it sorts before them), nor inherit their result."""
     import pandas as pd
     from xrenner_spark.corpus import build_page
     from xrenner_spark.pipeline import PAGES_SCHEMA
@@ -251,8 +251,8 @@ def test_dedup_kernel_inputs_byte_identity_per_copy(spark, tmp_path):
 def test_dedup_kernel_stage_plans_over_extract_stage(spark, corrupt_pages):
     """dedup_kernel_stage composed directly on extract_stage (no
     checkpoint read in between) plans and runs, and gives the plain
-    kernel's rows except part_id, kernel_ms and the docname in error
-    strings (the payload key instead of the url)."""
+    kernel's rows except part_id and kernel_ms: each failing page's
+    error names its own url."""
     from pyspark.sql import functions as F
     from xrenner_spark.pipeline import dedup_kernel_stage
     pages, bad_urls = corrupt_pages(n=60, partitions=4)
@@ -261,10 +261,8 @@ def test_dedup_kernel_stage_plans_over_extract_stage(spark, corrupt_pages):
     pages = pages.union(copies).persist()
     bcast = spark.sparkContext.broadcast(load_lex())
     extracted = extract_stage(pages)
-    plain = (kernel_stage(extracted, bcast)
-             .withColumn("error", F.expr("replace(error, url, '<doc>')")))
-    dedup = (dedup_kernel_stage(extracted, bcast)
-             .withColumn("error", F.regexp_replace("error", "[0-9a-f]{64}", "<doc>")))
+    plain = kernel_stage(extracted, bcast)
+    dedup = dedup_kernel_stage(extracted, bcast)
     a = plain.drop("part_id", "kernel_ms")
     b = dedup.drop("part_id", "kernel_ms")
     assert a.count() == b.count() > 0
@@ -278,8 +276,8 @@ def test_dedup_kernel_inputs_giant_doc(spark, tmp_path):
     """Interaction pin: kernel-input dedup x giant-doc windowing.  A
     >500-sentence page (the pipeline windows it) tiled under two urls
     must produce identical triples in plain and dedup modes — the
-    representative's windowed analysis is a pure function of the
-    payload, so every copy inherits it exactly."""
+    windowed analysis is a pure function of the payload, so the second
+    copy reuses the first's exactly."""
     import pandas as pd
     from pyspark.sql import functions as F
     from xrenner_spark.corpus import (_HTML_HEAD, _HTML_MID, _HTML_TAIL,
@@ -309,10 +307,9 @@ def test_dedup_kernel_inputs_giant_doc(spark, tmp_path):
     assert rec[0].n_sentences > 500  # the windowed path actually ran
 
 
-def test_chains_and_triples_writes_are_filters(spark, warehouse, monkeypatch):
-    """Stage 3 has no shuffle: the chains and triples run_pipeline writes
-    are filters of the kernel checkpoint, with no Exchange and no join in
-    their executed plans."""
+def _record_plans(monkeypatch):
+    """A dict that each Catalog.write fills with its table's executed
+    plan node names."""
     written = {}
     orig_write = Catalog.write
 
@@ -321,6 +318,14 @@ def test_chains_and_triples_writes_are_filters(spark, warehouse, monkeypatch):
         return orig_write(self, df, name, *args, **kwargs)
 
     monkeypatch.setattr(Catalog, "write", recording_write)
+    return written
+
+
+def test_chains_and_triples_writes_are_filters(spark, warehouse, monkeypatch):
+    """Stage 3 has no shuffle: the chains and triples run_pipeline writes
+    are filters of the kernel checkpoint, with no Exchange and no join in
+    their executed plans."""
+    written = _record_plans(monkeypatch)
     for table in ("triples", "chains"):
         shutil.rmtree(os.path.join(warehouse, table))
     run_pipeline(spark, generate_pages(spark, 5, partitions=2), warehouse,
@@ -332,18 +337,18 @@ def test_chains_and_triples_writes_are_filters(spark, warehouse, monkeypatch):
         assert not [n for n in nodes if "Exchange" in n or "Join" in n], nodes
 
 
-def test_pass_runs_nine_jobs(spark, tmp_path, monkeypatch):
-    """A plain run_pipeline pass runs 9 Spark jobs, one each for the
-    chains and triples writes, and none outside a Catalog.write: each
-    write runs under a job group of its table's name."""
+def _jobs_per_write(spark, tmp_path, monkeypatch, **kwargs):
+    """Spark jobs per table of one run_pipeline pass over 20 pages, plus
+    those run ``outside`` a Catalog.write: each write runs under a job
+    group of its table's name."""
     sc = spark.sparkContext
-    prefix = "nine-jobs-%s/" % tmp_path.name
+    prefix = "jobs-%s/" % tmp_path.name
     orig_write = Catalog.write
 
-    def grouped_write(self, df, name, *args, **kwargs):
+    def grouped_write(self, df, name, *args, **kw):
         sc.setJobGroup(prefix + name, name)
         try:
-            return orig_write(self, df, name, *args, **kwargs)
+            return orig_write(self, df, name, *args, **kw)
         finally:
             sc.setJobGroup(prefix + "outside", "outside")
 
@@ -351,18 +356,62 @@ def test_pass_runs_nine_jobs(spark, tmp_path, monkeypatch):
     sc.setJobGroup(prefix + "outside", "outside")
     try:
         run_pipeline(spark, generate_pages(spark, 20, partitions=2),
-                     str(tmp_path / "wh"), partitions=4)
+                     str(tmp_path / "wh"), partitions=4, **kwargs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    jobs = {name: len(tracker.getJobIdsForGroup(prefix + name))
+    return {name: len(tracker.getJobIdsForGroup(prefix + name))
             for name in ("outside", "stage_extract", "_lineage_extract",
                          "stage_kernel", "_lineage_kernel", "chains", "triples")}
+
+
+def test_pass_runs_nine_jobs(spark, tmp_path, monkeypatch):
+    """A plain run_pipeline pass runs 9 Spark jobs, one each for the
+    chains and triples writes, and none outside a Catalog.write."""
+    jobs = _jobs_per_write(spark, tmp_path, monkeypatch)
     assert jobs["outside"] == 0
     assert jobs["chains"] == jobs["triples"] == 1
     assert sum(jobs.values()) == 9, jobs
+
+
+def test_dedup_pass_runs_ten_jobs(spark, tmp_path, monkeypatch):
+    """A dedup_kernel_inputs pass adds one job, the input-order shuffle's,
+    to the stage_kernel write: 2 jobs there and 10 in all."""
+    jobs = _jobs_per_write(spark, tmp_path, monkeypatch, dedup_kernel_inputs=True)
+    assert jobs["outside"] == 0
+    assert jobs["stage_kernel"] == 2, jobs
+    assert sum(jobs.values()) == 10, jobs
+
+
+def test_dedup_kernel_write_has_one_exchange(spark, tmp_path, monkeypatch):
+    """The dedup stage_kernel write is one shuffle of the extract rows
+    into the kernel: exactly one Exchange and no join in its plan."""
+    written = _record_plans(monkeypatch)
+    run_pipeline(spark, generate_pages(spark, 5, partitions=2),
+                 str(tmp_path / "wh"), partitions=4, dedup_kernel_inputs=True)
+    nodes = written["stage_kernel"]
+    assert "MapInArrow" in nodes, nodes
+    assert len([n for n in nodes if "Exchange" in n]) == 1, nodes
+    assert not [n for n in nodes if "Join" in n], nodes
+
+
+def test_dedup_kernel_runs_one_task_per_core(spark, tmp_path):
+    """The dedup kernel's input is spread over one task per core, not
+    coalesced into one: 120 pages and 20 copies give one _lineage_kernel
+    row per core, each with documents, and every page's doc row."""
+    from pyspark.sql import functions as F
+    pages = generate_pages(spark, 120, partitions=4)
+    copies = generate_pages(spark, 20, partitions=1).withColumn(
+        "url", F.concat(F.lit("copy-"), "url"))
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, pages.unionByName(copies), wh, partitions=4,
+                 dedup_kernel_inputs=True)
+    lineage = Catalog(spark, wh).lineage("kernel").collect()
+    assert len(lineage) == spark.sparkContext.defaultParallelism == 4
+    assert min(r.rows_out for r in lineage) > 0
+    assert sum(r.rows_out for r in lineage) == 140
 
 
 def test_resume_refuses_an_old_shaped_kernel_checkpoint(spark, tmp_path):

@@ -7,9 +7,9 @@
 2. CORPUS_DECONTAMINATE_SQL is generated from DECONTAM_NGRAM; at the
    pinned n=3 the rendered text must stay byte-identical to the
    committed oracle fingerprint (the driver hashes oracle SQL text).
-3. dedup_kernel_stage join-back is keyed on payload_key: a url that
-   re-appears with DIFFERENT content (re-crawled page) must not
-   cross-match kernel rows between the two payload groups.
+3. dedup_kernel_stage's reuse key is the payload, not the url: a url
+   that re-appears with DIFFERENT content (re-crawled page) stays apart,
+   each payload analyzed on its own.
 """
 
 import hashlib
@@ -44,7 +44,7 @@ def test_decontaminate_sql_pinned():
 def test_dedup_kernel_recrawled_url(spark, tmp_path):
     """One url, two different payloads (content changed between crawls),
     plus a third page: dedup mode must equal the plain path row-for-row
-    (modulo the documented lineage metrics)."""
+    (but part_id and kernel_ms)."""
     import pandas as pd
     from pyspark.sql import functions as F  # noqa: F401  (parity import)
     from xrenner_spark.catalog import Catalog
@@ -73,8 +73,8 @@ def test_dedup_kernel_recrawled_url(spark, tmp_path):
     cols = [c for c in kp.columns if c not in ("part_id", "kernel_ms")]
     rows_p = sorted(map(tuple, kp.select(cols).collect()))
     rows_d = sorted(map(tuple, kd.select(cols).collect()))
-    # the url-keyed join-back duplicated every kernel row of the shared
-    # url across BOTH payload groups; payload_key keying must not
+    # a url-keyed dedup would give both crawls of the shared url one
+    # payload's rows
     assert len(rows_p) == len(rows_d)
     assert rows_p == rows_d
 

@@ -180,7 +180,8 @@ def null_views(spark):
     proper nor non-pronoun), a NULL core_text (its length orders first), a
     NULL head_func, a NULL head_parent, a NULL group, a non-verb
     head_parent, two proper spans sharing a start, two nominals sharing a
-    length, and a group of NULL-form mentions only."""
+    length, a group of NULL-form mentions only, and a NULL-form first
+    span before a nominal."""
     m = [
         # group 1: the NULL-form subject is not proper, so the pronoun is
         # the only other member and the first span wins
@@ -199,6 +200,10 @@ def null_views(spark):
         _mention("e", "9", 5, "iobj", 2, "cat", start=13, end=15),
         _mention("e", "10", 5, "dobj", 2, "dog", start=11, end=14),
         _mention("e", "11", 5, "nmod", 2, "cow", start=11, end=12),
+        # group 6: the NULL-form first span is not proper, so the nominal
+        # after it is canonical (neither function has a role)
+        _mention("e", "13", 6, "appos", 2, "Rex", form=None, start=17),
+        _mention("e", "14", 6, "amod", 2, "the dog", start=18),
         # a NULL group: its own chain row, no chain fields on its triples
         _mention("e", "12", None, "csubj", 2, "Nobody", start=16),
         _mention("f", "1", 1, "nsubj", 4, "Sue", form="proper"),
@@ -314,7 +319,8 @@ def test_null_case_chains_and_triples(null_views):
     chains, triples = _python_rows(*null_views)
     assert {(c["url"], c["group_id"]): c["canonical_text"] for c in chains} == {
         ("e", 1): "Zed", ("e", 2): "a box", ("e", 3): "thing", ("e", 4): "Ann",
-        ("e", 5): "cow", ("e", None): "Nobody", ("f", 1): "Sue", ("f", None): "none"}
+        ("e", 5): "cow", ("e", 6): "the dog", ("e", None): "Nobody",
+        ("f", 1): "Sue", ("f", None): "none"}
     want = Counter()
     for subj, entity in (("Zed", "thing"), ("Ann", "person"), (None, None)):
         for obj, n in (("a box", 1), ("thing", 2), ("cow", 3)):

@@ -16,9 +16,10 @@ markers), so building a pass's plans costs a few py4j round trips each:
       │  verb, chain and triple + kernel_ms.  Chains and triples are per
       │  document, so the task that holds a document's mentions and verbs
       │  emits them (triples.canonical_mentions / extract_triples).
-      │  dedup_kernel_inputs: one statement picks a representative per
-      │  payload, the kernel runs on it, one statement joins its rows back
-      │  to every copy
+      │  dedup_kernel_inputs: one statement hash-partitions the extract
+      │  rows on text_sha256 (one task per core) and sorts each task on
+      │  the kernel input, so a payload's copies are adjacent rows of one
+      │  task and the loop analyzes each run of them once
       │  checkpoint: table stage_kernel + _lineage_kernel (lineage_of)
       ▼
     stage 3  two map-only filters of stage_kernel, no exchange, no join,
@@ -155,7 +156,6 @@ _MENTION_FIELDS = [f.name for f in MENTION_STRUCT.fields]
 _CHAIN_FIELDS = ("group_id", "n_mentions", "entity", "mention_ids", "canonical_text")
 _TRIPLE_FIELDS = ("subj", "pred", "obj", "subj_group", "obj_group", "subj_entity",
                   "obj_entity", "sent_num", "verb_id")
-_KERNEL_COLS = [f.name for f in KERNEL_SCHEMA.fields]
 
 
 # ---------------------------------------------------------------------
@@ -412,7 +412,7 @@ def _reuse_zip_directories() -> None:
 
 
 def _map_docs(extracted: DataFrame, lex_broadcast, schema: T.StructType,
-              emit) -> DataFrame:
+              emit, reuse_repeats: bool = False) -> DataFrame:
     """The one Python position behind every sink: a ``mapInArrow`` over
     the extract columns that runs analyze_page once per document, timed
     and isolated (one bad page must not kill the job: its exception
@@ -424,7 +424,13 @@ def _map_docs(extracted: DataFrame, lex_broadcast, schema: T.StructType,
     partition) and ``kernel_ms``, its ``conllu`` rewritten when the page
     was analyzed.  Each input batch becomes one output RecordBatch built
     from those column lists: output rows are never built as dicts or as
-    a pandas frame."""
+    a pandas frame.
+
+    ``reuse_repeats`` (dedup_kernel_stage's sorted input only): a document
+    whose kernel input (text_sha256, conllu, byte_identical) equals the
+    previous document's reuses that analysis, its result, rewritten
+    conllu and kernel_ms, if it succeeded.  A failed page is analyzed
+    again, so its error names its own url."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -435,10 +441,17 @@ def _map_docs(extracted: DataFrame, lex_broadcast, schema: T.StructType,
         lex = lex_broadcast.value
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else -1
+        # the kernel input and (result, conllu, kernel_ms) of the last success
+        last_key = last = None
         for batch in batches:
             out = {name: [] for name in out_schema.names}
             for values in zip(*(c.to_pylist() for c in batch.columns)):
                 doc = dict(zip(batch.schema.names, values), part_id=part_id)
+                key = (doc["text_sha256"], doc["conllu"], doc["byte_identical"])
+                if reuse_repeats and key == last_key:
+                    result, doc["conllu"], doc["kernel_ms"] = last
+                    emit(out, doc, result, "")
+                    continue
                 t0 = time.perf_counter()
                 try:
                     result, doc["conllu"] = analyze_page(
@@ -447,6 +460,8 @@ def _map_docs(extracted: DataFrame, lex_broadcast, schema: T.StructType,
                 except Exception as exc:  # per-doc isolation
                     result, error = None, repr(exc)[:500]
                 doc["kernel_ms"] = (time.perf_counter() - t0) * 1000.0
+                last_key = key if result is not None else None
+                last = result, doc["conllu"], doc["kernel_ms"]
                 emit(out, doc, result, error)
             yield pa.RecordBatch.from_pydict(out, schema=out_schema)
 
@@ -501,68 +516,48 @@ def _emit_kernel(out: dict, doc: dict, result, error: str) -> None:
         start += count
 
 
-def kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
+def kernel_stage(extracted: DataFrame, lex_broadcast,
+                 reuse_repeats: bool = False) -> DataFrame:
     """Stage 2 over extract output: KERNEL_SCHEMA long rows per document.
     A page that fails (byte-identity, depedit or the kernel) yields only
-    its doc row, with the error and the extract's ``text_sha256``."""
-    return _map_docs(extracted, lex_broadcast, KERNEL_SCHEMA, _emit_kernel)
+    its doc row, with the error and the extract's ``text_sha256``.
+    ``reuse_repeats`` is dedup_kernel_stage's (see _map_docs)."""
+    return _map_docs(extracted, lex_broadcast, KERNEL_SCHEMA, _emit_kernel,
+                     reuse_repeats)
 
 
-# dedup_kernel_stage's two statements share the extract rows keyed on the
-# exact kernel input: extracted text, conllu payload AND the byte-identity
-# flag (analyze_page rejects a violating copy, so it must not share a
-# representative with an intact one).  A subquery, not a WITH: Spark
-# cannot plan this CTE over an extract_stage plan's own CTEs
-# (NoSuchElementException in PushdownPredicatesAndPruneColumnsForCTEDef)
-_PAYLOAD_KEYED = """(
-    SELECT *, sha2(concat(text_sha256, sha2(conllu, 256),
-                          CAST(byte_identical AS STRING)), 256) AS payload_key
-    FROM {extracted})"""
-
-#: one representative per payload (the least url), named by payload_key
-_DEDUP_REPS_SQL = """
-    SELECT payload_key AS url, warc_ts, lang, conllu, text_sha256, byte_identical
-    FROM (SELECT *, row_number() OVER (PARTITION BY payload_key ORDER BY url) AS rn
-          FROM %s keyed)
-    WHERE rn = 1""" % _PAYLOAD_KEYED
-
-#: the representatives' kernel rows under every copy's url/warc_ts/lang
-_DEDUP_JOIN_BACK_SQL = """
-    SELECT %s
-    FROM {rep_rows} r JOIN %s c ON r.url = c.payload_key""" % (", ".join(
-    ("c.`%s`" if name in ("url", "warc_ts", "lang") else "r.`%s`") % name
-    for name in _KERNEL_COLS), _PAYLOAD_KEYED)
+#: dedup_kernel_stage's input order: the extract rows hash-partitioned on
+#: text_sha256 into ``tasks`` partitions, each sorted on the kernel input.
+#: A partition count, not DISTRIBUTE BY: AQE would coalesce that shuffle
+#: of a small input into one task
+_DEDUP_ORDER_SQL = """
+    SELECT /*+ REPARTITION({tasks}, text_sha256) */ *
+    FROM {extracted}
+    SORT BY text_sha256, conllu, byte_identical"""
 
 
 def dedup_kernel_stage(extracted: DataFrame, lex_broadcast) -> DataFrame:
-    """Run the kernel ONCE per distinct page payload and join the rows
-    back to every copy — the classic web-corpus lever (real crawls are
+    """The kernel stage, analyzing each distinct page payload once for
+    all its copies: the classic web-corpus lever (real crawls are
     commonly 30-60% exact-duplicate pages; the reference recomputes per
     file, no equivalent).
 
-    Shape at scale: one full-payload shuffle (the row_number window on
-    payload_key) REPLACES kernel compute on every duplicate; the
-    join-back moves only long-format kernel rows (~tens per doc), keyed
-    by payload_key, so a viral page with millions of copies is an AQE
-    skew-join case, not a compute cliff.  Output rows carry the COPY's
-    url/warc_ts/lang and the representative's kernel results; they are
-    value-identical to the non-dedup path for every mention/verb/doc
-    field except the lineage metrics (part_id, kernel_ms — computed
-    once, on the representative) and the docname embedded in per-doc
-    ``error`` strings (the payload key itself — deterministic, and
-    unique even when one url appears with two different payloads, the
-    re-crawled-page case that a url-keyed join-back would cross-match;
-    r5 advice).  Covered by test_pipeline_spark.
+    One statement hash-partitions the extract rows on ``text_sha256``
+    into one task per core and sorts each task on the kernel input
+    (text_sha256, conllu, byte_identical); kernel_stage's loop then
+    reuses the previous document's successful analysis for each copy.
+    So all copies of one payload share one task, and each copy after the
+    first costs one emit, not one analysis.  The rows equal kernel_stage's
+    in every column except ``part_id`` and ``kernel_ms`` (a copy carries
+    the analysis' kernel_ms): every copy has its own url, warc_ts and
+    lang, a failing copy's error names its own url, and a url re-crawled
+    with new content is a different payload.  The plan has one exchange
+    and no join.
     """
     spark = extracted.sparkSession
-    reps = spark.sql(_DEDUP_REPS_SQL, extracted=extracted)
-    # the kernel runs with payload_key AS the docname: the join-back is
-    # then keyed on payload_key directly (unique per representative by
-    # construction) instead of the representative's url, which is NOT
-    # unique across payload groups when a url re-appears with changed
-    # content
-    return spark.sql(_DEDUP_JOIN_BACK_SQL, extracted=extracted,
-                     rep_rows=kernel_stage(reps, lex_broadcast))
+    ordered = spark.sql(_DEDUP_ORDER_SQL, extracted=extracted,
+                        tasks=spark.sparkContext.defaultParallelism)
+    return kernel_stage(ordered, lex_broadcast, reuse_repeats=True)
 
 
 SERIALIZE_SCHEMA = T.StructType([
@@ -782,10 +777,10 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, warehouse: str,
     warehouse are skipped and read back — kill/rerun produces identical
     output without recomputing finished stages.
 
-    ``dedup_kernel_inputs=True`` computes the kernel once per distinct
-    page payload and joins results back to every copy (see
-    dedup_kernel_stage for the scale rationale and the two documented
-    lineage-metric differences).
+    ``dedup_kernel_inputs=True`` runs dedup_kernel_stage: the copies of
+    a page payload share one kernel task and one analysis, and each copy
+    after the first costs one emit; the rows differ from the plain pass
+    only in ``part_id`` and ``kernel_ms``.
     """
     cat = Catalog(spark, warehouse)
     if resume and cat.exists("stage_kernel") and (
